@@ -29,6 +29,9 @@ FACTORS = (1, 4, 16)
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from taxi_data_pipeline_pset2_spark.operators.driver_path import (
+        distributed_only,
+    )
     from taxi_data_pipeline_pset2_spark.session import get_spark
     from taxi_data_pipeline_pset2_spark.sources.readers import load_table
 
@@ -161,10 +164,11 @@ def main() -> None:
     def pr(df):
         from taxi_data_pipeline_pset2_spark.operators.graph import pagerank
 
-        # driver_edge_cap=0: the probe measures the DISTRIBUTED loop's
-        # scaling -- the r14 driver fast path would otherwise absorb
-        # every factor of this sweep (its cap is 4M edges)
-        return pagerank(df, n_iter=8, driver_edge_cap=0)
+        # distributed_only: the probe measures the DISTRIBUTED loop's
+        # scaling -- the driver fast path would otherwise absorb every
+        # factor of this sweep (its cap is 4M edges)
+        with distributed_only():
+            return pagerank(df, n_iter=8)
 
     # kcore's 16x ratio crept 3.84 -> 4.39 across r9/r10 with a
     # plausible-but-unmeasured "more rounds to converge" explanation
@@ -176,9 +180,10 @@ def main() -> None:
         from taxi_data_pipeline_pset2_spark.operators.graph import kcore
 
         st: dict = {}
-        # driver_edge_cap=0: probe the DISTRIBUTED loop's scaling (the
-        # r14 driver fast path would absorb every factor of this sweep)
-        out = kcore(df, stats_out=st, driver_edge_cap=0)
+        # the DISTRIBUTED loop's scaling (the driver fast path would
+        # absorb every factor of this sweep)
+        with distributed_only():
+            out = kcore(df, stats_out=st)
         kcore_stats.append(st)
         return out
 
@@ -187,7 +192,8 @@ def main() -> None:
             label_propagation,
         )
 
-        return label_propagation(df, n_iter=4, driver_edge_cap=0)
+        with distributed_only():
+            return label_propagation(df, n_iter=4)
 
     graph_ops = {
         "triangle_counts": (scaled_edges, triangles),
@@ -261,7 +267,7 @@ def main() -> None:
 
     # ANN-family probe (r14, VERDICT r13 #8): the r13 driver fast path
     # absorbed the bench entries, so this row proves the DISTRIBUTED
-    # Lloyd loop (driver_cell_cap=0) still scales in corpus rows --
+    # Lloyd loop (distributed_only) still scales in corpus rows --
     # per-replica jitter keeps vectors distinct on the 1e-6 grid.
     abase = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -284,7 +290,8 @@ def main() -> None:
             kmeans_fit_assign,
         )
 
-        return kmeans_fit_assign(df, k=8, n_iter=4, driver_cell_cap=0)
+        with distributed_only():
+            return kmeans_fit_assign(df, k=8, n_iter=4)
 
     runs = [(name, scaled, fn) for name, fn in ops.items()] + [
         (name, gen, fn) for name, (gen, fn) in graph_ops.items()

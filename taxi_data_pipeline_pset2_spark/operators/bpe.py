@@ -42,9 +42,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.operators.dedup import tokenize
+from taxi_data_pipeline_pset2_spark.operators.driver_path import bounded_arrow
 
 EOW = "</w>"  # end-of-word marker, standard BPE
 CHECKPOINT_EVERY = 8  # merge iterations between lineage truncations
+# Vocabularies up to this many distinct words run bpe_learn's merge loop
+# and tokenize_bpe's encode on the driver (operators/driver_path.py).
+# Heaps' law keeps a web corpus's vocab ~1e7, so the cap is a memory
+# statement, not a scale limit.
+DRIVER_VOCAB_CAP = 200_000
 
 
 def word_symbol_table(
@@ -113,25 +119,20 @@ def bpe_learn(
     n_merges: int,
     text_col: str = "text",
     min_count: int = 2,
-    driver_cap: int = 200_000,
 ) -> list[tuple[str, str]]:
     """Learn up to ``n_merges`` BPE merge rules. Stops early when no
     pair reaches ``min_count`` weighted occurrences. Returns the merges
     in rank order.
 
-    Vocabularies up to ``driver_cap`` distinct words run the merge loop
-    driver-side over the collected word table (the same bounded fast
-    path as operators/components.py: the table is vocab-sized by
-    construction, and n_merges cluster round-trips on a 30-row table
-    are pure job overhead -- 10 merges dropped ~10 s -> ~1 s at bench
-    scale). The loop stays distributed above the cap; both paths are
-    the identical greedy algorithm and tests pin their equality."""
+    Vocabularies up to DRIVER_VOCAB_CAP words run the identical greedy
+    loop on the driver; see operators/driver_path.py for the
+    contract."""
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
     table = word_symbol_table(docs, text_col).localCheckpoint(eager=True)
-    probe = table.limit(driver_cap + 1).collect()
-    if len(probe) <= driver_cap:
-        return _bpe_learn_driver(probe, n_merges, min_count)
+    tbl = bounded_arrow(table, DRIVER_VOCAB_CAP)
+    if tbl is not None:
+        return _bpe_learn_driver(tbl, n_merges, min_count)
     merges: list[tuple[str, str]] = []
     for i in range(n_merges):
         top = (
@@ -153,14 +154,16 @@ def bpe_learn(
 
 
 def _bpe_learn_driver(
-    rows, n_merges: int, min_count: int
+    tbl, n_merges: int, min_count: int
 ) -> list[tuple[str, str]]:
-    """Driver-side merge loop over the collected (word, freq, symbols)
-    table; greedy tie-break (count desc, lexicographic pair) identical
-    to the distributed path's orderBy."""
+    """Driver-side merge loop over the collected Arrow (word, freq,
+    symbols) table; greedy tie-break (count desc, lexicographic pair)
+    identical to the distributed path's orderBy."""
     from collections import Counter
 
-    table = [(r["freq"], list(r["symbols"])) for r in rows]
+    table = list(
+        zip(tbl.column("freq").to_pylist(), tbl.column("symbols").to_pylist())
+    )
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         pairs: Counter = Counter()
@@ -261,26 +264,20 @@ def tokenize_bpe(
     text_col: str = "text",
     id_col: str = "doc_id",
     out_col: str = "bpe_tokens",
-    driver_vocab_cap: int = 200_000,
 ) -> DataFrame:
     """Document-level BPE tokenization: (id, bpe_tokens, n_tokens).
     Word-split first (the same whitespace tokenization the rest of the
     engine uses), then per-word greedy encode.
 
     The greedy encode is a pure function of the WORD, so it runs once
-    per DISTINCT word, never once per occurrence (r13; the occurrence
-    form paid the O(len^2) Python kernel corpus-many times -- measured
-    3.9 s -> 0.5 s at sf0.1, where 5k docs share a 31-word vocab).
-    Vocabularies up to ``driver_vocab_cap`` distinct words encode on
-    the driver and broadcast as a dict consumed by ONE Arrow pass over
-    the docs -- no shuffle at all (the bounded-fast-path discipline of
-    bpe_learn / connected_components; Heaps' law keeps a web corpus's
-    vocab ~1e7, so the cap is a memory statement, not a scale limit).
-    Above the cap the encode runs distributed over the distinct-word
-    frame and hash-joins back onto the exploded occurrences -- still
-    vocab-sized Python, plus one occurrence-shaped join and the
-    per-doc reassembly aggregate. Both paths share _encode_symbols,
-    and tests pin their equality."""
+    per DISTINCT word, never once per occurrence. Vocabularies up to
+    DRIVER_VOCAB_CAP words encode on the driver (see
+    operators/driver_path.py) and broadcast as a dict consumed by ONE
+    Arrow pass over the docs -- no shuffle at all. Above the cap the
+    encode runs distributed over the distinct-word frame and hash-joins
+    back onto the exploded occurrences -- still vocab-sized Python,
+    plus one occurrence-shaped join and the per-doc reassembly
+    aggregate. Both paths share _encode_symbols."""
     from taxi_data_pipeline_pset2_spark.operators.skew import (
         spread_small_input,
     )
@@ -289,19 +286,23 @@ def tokenize_bpe(
     base = docs.select(F.col(id_col), toks.alias("_toks")).filter(
         F.size("_toks") > 0
     )
-    vocab = base.select(F.explode("_toks").alias("word")).distinct()
-    probe = vocab.limit(driver_vocab_cap + 1).collect()
+    # checkpointed once: the probe, the collect and the distributed
+    # fallback all read it
+    vocab = (
+        base.select(F.explode("_toks").alias("word"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    tbl = bounded_arrow(vocab, DRIVER_VOCAB_CAP)
     id_type = docs.schema[id_col].dataType.simpleString()
     out_schema = (
         f"{id_col} {id_type}, {out_col} array<string>, n_tokens bigint"
     )
-    if len(probe) <= driver_vocab_cap:
+    if tbl is not None:
         ranks = {pair: r for r, pair in enumerate(merges)}
         enc_map = {
-            r["word"]: _encode_symbols(
-                list(r["word"]) + [EOW], merges, ranks
-            )
-            for r in probe
+            w: _encode_symbols(list(w) + [EOW], merges, ranks)
+            for w in tbl.column("word").to_pylist()
         }
         b_map = docs.sparkSession.sparkContext.broadcast(enc_map)
 

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taxi_data_pipeline_pset2_spark.operators.driver_path import bounded_arrow
+
 # int64 headroom guard: the grid-wide cap (see operators/similarity.py
 # MAX_ABS_IV) bounds each squared-difference term by (2*2^25)^2 = 2^52,
 # so ||x-c||^2 <= D * 2^52 stays under 2^63 only up to D = 2048 -- the
@@ -51,6 +53,9 @@ from pyspark.sql import functions as F
 # magnitude cap alone is NOT safe at 4096 dims).
 from taxi_data_pipeline_pset2_spark.operators.similarity import (
     MAX_ABS_IV as _MAX_ABS_IV,
+    SCALE,
+    _round_half_up_6,
+    int_embedding,
 )
 
 
@@ -76,11 +81,9 @@ def _exact_d2(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
     )
 
 
-# Driver fast-path bound for kmeans_fit_assign, in CELLS (rows * dims):
-# ~4M int64 cells is a few tens of MB collected -- the same bounded
-# fast-path budget as components.py's DRIVER_CC_EDGE_CAP. Above it the
-# distributed Lloyd loop runs unchanged, so the operator never depends
-# on the corpus fitting anywhere.
+# Corpora whose quantized matrix fits this many int64 cells (rows *
+# dims) run the Lloyd loop on the driver (operators/driver_path.py): a
+# few tens of MB collected.
 DRIVER_KMEANS_CELL_CAP = 4_000_000
 
 
@@ -91,7 +94,6 @@ def kmeans_fit_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     return_centroids: bool = False,
-    driver_cell_cap: int = DRIVER_KMEANS_CELL_CAP,
 ) -> DataFrame:
     """Returns (id, cluster, dist) after ``n_iter`` exact-integer Lloyd
     rounds -- dist is the euclidean distance to the winning centroid in
@@ -102,24 +104,12 @@ def kmeans_fit_assign(
     would be one Lloyd step ahead of the centroids that produced the
     assignment).
 
-    Corpora whose quantized matrix fits ``driver_cell_cap`` int64 cells
-    run the whole Lloyd loop driver-side on one collected numpy matrix
-    (r13): the distributed loop costs one cluster round-trip per round
-    (Arrow pass + aggregate + collect) that at small scale is pure job
-    overhead -- the same bounded-fast-path discipline as
-    connected_components / bpe_learn, with the identical exact-integer
-    update (shared _exact_d2, same floor((2S+n)/(2n)) centroid rule,
-    same first-min argmin), so the result is bit-identical and tests
-    pin the two paths equal. ``driver_cell_cap=0`` forces the
-    distributed loop."""
+    Corpora up to DRIVER_KMEANS_CELL_CAP cells run the whole loop on
+    the driver with the identical exact-integer update (shared
+    _exact_d2, same floor((2S+n)/(2n)) centroid rule, same first-min
+    argmin); see operators/driver_path.py for the contract."""
     import numpy as np
     import pandas as pd
-
-    from taxi_data_pipeline_pset2_spark.operators.similarity import (
-        SCALE,
-        _round_half_up_6,
-        int_embedding,
-    )
 
     spark = emb.sparkSession
     # NULL vectors are excluded, not crashed on: the Arrow kernels build
@@ -131,72 +121,67 @@ def kmeans_fit_assign(
     )
     out_schema = f"{id_col} long, cluster int, dist double"
 
-    if driver_cell_cap > 0:
-        # Bounded probe in ONE aggregate job (r14, VERDICT r13 #5 /
-        # ADVICE r13): row count (the limit stops the scan at the
-        # 1-cell-per-row bound) plus max dim, ZERO vector bytes to the
-        # driver -- an over-cap corpus pays one cheap job and goes
-        # distributed, never a multi-MB discarded collect. Dim from
-        # max(size) instead of the first row only moves the row_cap,
-        # i.e. the PATH choice -- the two paths are pinned bit-equal,
-        # so any probe heuristic is semantics-free.
-        stats = (
-            base.select(F.size("iv").alias("_d"))
-            .limit(driver_cell_cap + 1)
-            .agg(F.count("*").alias("_n"), F.max("_d").alias("_dim"))
-            .collect()[0]
+    # weight >= 1 per row keeps the cell bound exact for empty vectors
+    tbl = bounded_arrow(
+        base, DRIVER_KMEANS_CELL_CAP, weight=F.greatest(F.size("iv"), F.lit(1))
+    )
+    if tbl is not None:
+        ids, idx, dist, centroids = _kmeans_driver(tbl, k, n_iter, id_col)
+        assigned = spark.createDataFrame(
+            pd.DataFrame({id_col: ids, "cluster": idx, "dist": dist}),
+            schema=out_schema,
         )
-        n_bounded, dim = stats["_n"], stats["_dim"] or 1
-        row_cap = max(driver_cell_cap // max(dim, 1), 1)
-        if n_bounded == 0:
-            # empty corpus: the distributed loop degrades to the same
-            # empty assignment (guarded there since r14); mirror it
-            # without tripping numpy shape errors
-            assigned = spark.createDataFrame([], out_schema)
-            if return_centroids:
-                return assigned, np.zeros((0, dim), dtype=np.float64)
-            return assigned
-        if n_bounded <= row_cap:
-            # under the cap: these rows ARE the whole corpus
-            probe = base.limit(n_bounded).collect()
-            # NULL-aware sort key (ADVICE r13): NULL ids first, the
-            # same order the distributed init's asc_nulls_first
-            # orderBy produces -- a None id must not TypeError here
-            probe.sort(key=lambda r: (r[id_col] is not None, r[id_col]))
-            ids = [r[id_col] for r in probe]
-            X = np.array([r["iv"] for r in probe], dtype=np.int64)
-            centroids = X[:k].copy()
-            for _ in range(n_iter):
-                idx = _exact_d2(X, centroids).argmin(axis=1)
-                kk = centroids.shape[0]
-                sums = np.zeros_like(centroids)
-                np.add.at(sums, idx, X)
-                counts = np.bincount(idx, minlength=kk).astype(np.int64)
-                live = counts > 0
-                centroids[live] = np.floor_divide(
-                    2 * sums[live] + counts[live][:, None],
-                    2 * counts[live][:, None],
-                )
-            d2 = _exact_d2(X, centroids)
-            idx = d2.argmin(axis=1)
-            dist = _round_half_up_6(
-                np.sqrt(d2[np.arange(len(idx)), idx].astype(np.float64))
-                / SCALE
-            )
-            assigned = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "cluster": idx.astype(np.int32),
-                        "dist": dist,
-                    }
-                ),
-                schema=out_schema,
-            )
-            if return_centroids:
-                return assigned, centroids.astype(np.float64) / SCALE
-            return assigned
+    else:
+        assigned, centroids = _kmeans_distributed(
+            base, k, n_iter, id_col, out_schema
+        )
+    if return_centroids:
+        return assigned, centroids.astype(np.float64) / SCALE
+    return assigned
 
+
+def _kmeans_driver(tbl, k: int, n_iter: int, id_col: str):
+    """The Lloyd loop on the collected Arrow corpus: (ids, cluster,
+    dist, int64 centroids). Rows take the distributed init's order, id
+    ascending with NULL ids first (its orderBy's asc_nulls_first); a
+    zero-row corpus returns that path's (0, 1) empty centroids."""
+    import numpy as np
+
+    rows = sorted(
+        zip(tbl.column(id_col).to_pylist(), tbl.column("iv").to_pylist()),
+        key=lambda r: (r[0] is not None, r[0]),
+    )
+    ids = [r[0] for r in rows]
+    if not rows:
+        empty = np.zeros((0, 1), dtype=np.int64)
+        return ids, np.zeros(0, np.int32), np.zeros(0), empty
+    X = np.array([r[1] for r in rows], dtype=np.int64)
+    centroids = X[:k].copy()
+    for _ in range(n_iter):
+        idx = _exact_d2(X, centroids).argmin(axis=1)
+        kk = centroids.shape[0]
+        sums = np.zeros_like(centroids)
+        np.add.at(sums, idx, X)
+        counts = np.bincount(idx, minlength=kk).astype(np.int64)
+        live = counts > 0
+        centroids[live] = np.floor_divide(
+            2 * sums[live] + counts[live][:, None],
+            2 * counts[live][:, None],
+        )
+    d2 = _exact_d2(X, centroids)
+    idx = d2.argmin(axis=1)
+    dist = _round_half_up_6(
+        np.sqrt(d2[np.arange(len(idx)), idx].astype(np.float64)) / SCALE
+    )
+    return ids, idx.astype(np.int32), dist, centroids
+
+
+def _kmeans_distributed(base, k, n_iter, id_col, out_schema):
+    """The distributed Lloyd loop: (assigned frame, int64 centroids)."""
+    import numpy as np
+    import pandas as pd
+
+    spark = base.sparkSession
     # One cached materialization feeds every Lloyd round AND the final
     # assignment; without it each round re-reads and re-projects the
     # source (n_iter extra corpus scans -- the r4 'wasteful' finding).
@@ -204,13 +189,12 @@ def kmeans_fit_assign(
     try:
         init_rows = base.orderBy(id_col).limit(k).collect()
         if not init_rows:
-            # empty corpus (ADVICE r13): the round loop's k*D contract
-            # check would IndexError on a zero-row init; return the
-            # same empty assignment the driver fast path produces
-            assigned = spark.createDataFrame([], out_schema)
-            if return_centroids:
-                return assigned, np.zeros((0, 1), dtype=np.float64)
-            return assigned
+            # empty corpus: the round loop's k*D contract check would
+            # IndexError on a zero-row init
+            return (
+                spark.createDataFrame([], out_schema),
+                np.zeros((0, 1), dtype=np.int64),
+            )
         centroids = np.array([r["iv"] for r in init_rows], dtype=np.int64)  # (k, D)
 
         def make_assign(cent: "np.ndarray"):
@@ -309,9 +293,7 @@ def kmeans_fit_assign(
         assigned = base.mapInPandas(
             make_assign(centroids), schema=out_schema
         ).localCheckpoint(eager=True)
-        if return_centroids:
-            return assigned, centroids.astype(np.float64) / SCALE
-        return assigned
+        return assigned, centroids
     finally:
         base.unpersist(blocking=False)
 

@@ -25,12 +25,11 @@ Convergence is detected by an (edge-count, xxhash64-checksum) pair --
 one tiny aggregate per round, not a full self-comparison join.
 
 Small-edge-set fast path: candidate-pair frames are DUP-sized, not
-corpus-sized, and usually fit the driver with room to spare; below
-``DRIVER_CC_EDGE_CAP`` edges the components come from one collect + an
-exact union-find (identical output, no per-round Spark jobs) -- the
-same bounded-fast-path discipline as the in-bucket verifier in
-operators/dedup.py. Above the cap the distributed alternation runs
-unchanged, so the operator never depends on the graph fitting anywhere.
+corpus-sized, and usually fit the driver with room to spare; up to
+``DRIVER_CC_EDGE_CAP`` edges the components come from one Arrow collect
+and an exact union-find (identical output, no per-round Spark jobs; see
+operators/driver_path.py). Above the cap the distributed alternation
+runs, so the operator never depends on the graph fitting anywhere.
 """
 
 from __future__ import annotations
@@ -38,13 +37,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taxi_data_pipeline_pset2_spark.operators.driver_path import bounded_arrow
+
 # O(log^2 n) expected; 50 rounds covers any conceivable corpus. Hitting
 # the cap raises rather than silently returning a partial clustering.
 MAX_CC_ROUNDS = 50
 
-# Edge sets at or below this size resolve on the driver (one collect of
-# (u, v) rows; ~16 bytes/edge -> a few MB). Dup-pair sets above it fall
-# through to the distributed star alternation automatically.
+# Edge sets at or below this size resolve on the driver (~16 bytes/edge
+# -> a few MB).
 DRIVER_CC_EDGE_CAP = 200_000
 
 
@@ -97,9 +97,9 @@ def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
     return (row.n, int(row.h))
 
 
-def _driver_components(edges: DataFrame, rows: list) -> DataFrame:
-    """Exact union-find over a collected (bounded, see caller) edge set;
-    emits the same (node, component-min) rows as the distributed path."""
+def _driver_components(edges: DataFrame, tbl) -> DataFrame:
+    """Exact union-find over the collected Arrow edge table; emits the
+    same (node, component-min) rows as the distributed path."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -110,10 +110,11 @@ def _driver_components(edges: DataFrame, rows: list) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in rows:
-        for n in (r.u, r.v):
-            parent.setdefault(n, n)
-        ra, rb = find(r.u), find(r.v)
+    us, vs = tbl.column("u").to_pylist(), tbl.column("v").to_pylist()
+    for u, v in zip(us, vs):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ra, rb = find(u), find(v)
         if ra != rb:
             parent[ra] = rb
     comp_min: dict = {}
@@ -136,7 +137,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_rounds: int = MAX_CC_ROUNDS,
-    driver_cap: int = DRIVER_CC_EDGE_CAP,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``, where
     ``component`` is the minimum node id in its connected component.
@@ -144,10 +144,9 @@ def connected_components(
     Only nodes present in at least one pair are returned -- an isolated
     doc is its own survivor and needs no row (callers left-join).
 
-    Edge sets at or below ``driver_cap`` resolve via one collect + exact
-    union-find (identical output, no iterative Spark jobs); larger sets
-    run the distributed star alternation. ``driver_cap=0`` forces the
-    distributed path (tests pin both paths equal).
+    Edge sets up to DRIVER_CC_EDGE_CAP resolve on the driver by exact
+    union-find (see operators/driver_path.py); larger sets run the
+    distributed star alternation.
     """
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -155,15 +154,9 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # Fast-path probe in ONE bounded job: collect at most cap+1 edges.
-    # At or under the cap those rows ARE the whole edge set (union-find
-    # directly, no separate count or checksum aggregate); over it, only
-    # cap+1 rows ever reached the driver and the distributed alternation
-    # takes over.
-    if driver_cap > 0:
-        probe = edges.limit(driver_cap + 1).collect()
-        if len(probe) <= driver_cap:
-            return _driver_components(edges, probe)
+    tbl = bounded_arrow(edges, DRIVER_CC_EDGE_CAP)
+    if tbl is not None:
+        return _driver_components(edges, tbl)
     prev = _edge_checksum(edges)
     for _ in range(max_rounds):
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)

@@ -36,6 +36,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taxi_data_pipeline_pset2_spark.operators.driver_path import bounded_arrow
+
 # _shuffle_override bookkeeping: (depth, original value) per session,
 # guarded by a lock -- two OVERLAPPING overrides on the same session
 # (the threaded catalog replay runs several graph entries concurrently)
@@ -109,13 +111,9 @@ def _graph_shuffle_target(spark, n_rows: int) -> int:
     return max(2, min(default, -(-int(n_rows) // _EDGE_ROWS_PER_SHUFFLE_PARTITION)))
 
 
-# Bounded driver fast path (r14): graphs whose cleaned edge list fits
-# this many rows run the whole power iteration in numpy on the driver --
-# the same discipline as connected_components / bpe_learn /
-# kmeans_fit_assign (guide 1.2/5: don't pay a cluster round-trip per
-# round for driver-sized state). 4M edges x ~24 B of id/weight state is
-# tens of MB on the driver; a 100 TB graph blows past the cap on the
-# first bounded count and takes the distributed loop unchanged.
+# Cleaned edges up to this many rows run the power iteration in numpy
+# on the driver (operators/driver_path.py): 4M edges x ~24 B of
+# id/weight state is tens of MB.
 DRIVER_PAGERANK_EDGE_CAP = 4_000_000
 
 
@@ -128,7 +126,6 @@ def pagerank(
     weight_col: str | None = None,
     checkpoint_every: int = 2,
     shuffle_partitions: int | None = None,
-    driver_edge_cap: int = DRIVER_PAGERANK_EDGE_CAP,
 ) -> DataFrame:
     """Node ranks after ``n_iter`` power-iteration rounds:
     (node, rank) with sum(rank) == 1, ordered rank desc, node asc.
@@ -155,20 +152,12 @@ def pagerank(
     counts but never its results (every operator here is
     partitioning-independent by construction).
 
-    ``driver_edge_cap`` (r14): graphs whose cleaned edge list fits the
-    cap (bounded probe: ``limit(cap+1).count()`` over the already-
-    persisted edges, no edge bytes to the driver until the graph is
-    confirmed bounded) run the power iteration in numpy on the driver
-    -- identical update expression, identical scaled-bigint 8-dp
-    rounding, identical (rank desc, node asc) order; the distributed
-    loop above the cap is unchanged and ``driver_edge_cap=0`` forces it
-    (tests pin the two paths equal, and the DuckDB oracle pins both)."""
+    Graphs up to DRIVER_PAGERANK_EDGE_CAP cleaned edges run on the
+    driver; see operators/driver_path.py for the contract."""
     if shuffle_partitions == "auto":
-        # data-derived sizing (r14): under the driver cap the loop runs
-        # on the driver and shuffles nothing; above it the graph is big
-        # enough that the cluster-tuned session default (plus AQE
-        # coalescing) is the right per-round width -- so "auto" means
-        # "let the operator decide", i.e. no static override at all
+        # under the driver cap the loop shuffles nothing; above it the
+        # cluster-tuned session default (plus AQE coalescing) is the
+        # right per-round width, so "auto" means no override at all
         shuffle_partitions = None
     if not 0 < damping < 1:
         raise ValueError(f"damping must be in (0,1), got {damping}")
@@ -183,7 +172,7 @@ def pagerank(
     with _shuffle_override(edges.sparkSession, shuffle_partitions):
         return _pagerank_impl(
             edges, src_col, dst_col, damping, n_iter, weight_col,
-            checkpoint_every, driver_edge_cap,
+            checkpoint_every,
         )
 
 
@@ -213,6 +202,8 @@ def _pagerank_driver(spark, edges_tbl, damping, n_iter):
     w = edges_tbl.column("_w").to_numpy(zero_copy_only=False)
     node_arr = pd.unique(pd.concat([src, dst], ignore_index=True))
     n = len(node_arr)
+    if n == 0:
+        return spark.createDataFrame([], "node string, rank double")
     idx = pd.Series(np.arange(n, dtype=np.int64), index=node_arr)
     src_i = idx[src].to_numpy()
     dst_i = idx[dst].to_numpy()
@@ -260,7 +251,6 @@ def _pagerank_impl(
     n_iter: int,
     weight_col: str | None,
     checkpoint_every: int,
-    driver_edge_cap: int = DRIVER_PAGERANK_EDGE_CAP,
 ) -> DataFrame:
     w_expr = (
         F.col(weight_col).cast("double")
@@ -276,23 +266,11 @@ def _pagerank_impl(
         & F.col("dst").isNotNull()
         & (F.col("_w") > 0)
     )
-    if driver_edge_cap > 0:
-        # Bounded probe straight off the cleaned scan (r14): a
-        # limit-count moves zero edge bytes to the driver, stops at
-        # cap+1 rows, and runs BEFORE the distributed setup -- so the
-        # under-cap path never pays the src repartition shuffle or the
-        # distributed degree aggregate at all (one probe job + one
-        # Arrow collect, then pure numpy). An at-scale graph pays the
-        # one cheap probe job and proceeds below unchanged.
-        m = e_raw.limit(driver_edge_cap + 1).count()
-        if m <= driver_edge_cap:
-            if m == 0:
-                return edges.sparkSession.createDataFrame(
-                    [], "node string, rank double"
-                )
-            return _pagerank_driver(
-                edges.sparkSession, e_raw.toArrow(), damping, n_iter
-            )
+    # probed straight off the cleaned scan, BEFORE the distributed
+    # setup: the under-cap path never pays the src repartition shuffle
+    tbl = bounded_arrow(e_raw, DRIVER_PAGERANK_EDGE_CAP)
+    if tbl is not None:
+        return _pagerank_driver(edges.sparkSession, tbl, damping, n_iter)
     e = e_raw.repartition("src").persist()
     # out-degree folded INTO the rank frame once: each round would
     # otherwise re-join ranks-to-deg twice (dangling scan + contrib
@@ -466,7 +444,8 @@ def triangle_counts(
     the MEASURED canonical-edge count (one cheap count over the
     already-persisted edge frame, `_graph_shuffle_target`), clamped to
     the session default -- data-derived sizing instead of a caller
-    literal, a no-op above ~default*64k edges."""
+    literal, a no-op above default*8192 edges
+    (_EDGE_ROWS_PER_SHUFFLE_PARTITION)."""
     if shuffle_partitions == "auto":
         return _triangle_counts_impl(edges, src_col, dst_col, auto=True)
     with _shuffle_override(edges.sparkSession, shuffle_partitions):
@@ -578,11 +557,10 @@ def _triangle_counts_body(e0: DataFrame) -> DataFrame:
     return out
 
 
-# Shared bounded-driver cap for the integer graph loops (kcore, LPA):
-# counted over the SYMMETRIZED edge frame (2x the undirected edges).
-# Both algorithms are all-integer with deterministic tie-breaks, so the
-# driver loop is exactly the distributed fixpoint -- not merely
-# equal-after-rounding like pagerank's float ranks.
+# Driver cap for the integer graph loops (kcore, LPA), counted over the
+# SYMMETRIZED edge frame (2x the undirected edges). Both are all-integer
+# with deterministic tie-breaks, so the driver loop is exactly the
+# distributed fixpoint, not merely equal after rounding.
 DRIVER_GRAPH_EDGE_CAP = 4_000_000
 
 
@@ -622,9 +600,7 @@ def _lpa_driver(spark, sym_tbl, n_iter):
         # returns keys sorted, so within each ua block ul is ascending
         # and a stable argmax-by-count picks the smallest-label tie
         order = np.lexsort((ul, -counts, ua))
-        first = np.flatnonzero(
-            np.r_[True, ua[order][1:] != ua[order][:-1]]
-        )
+        first = np.flatnonzero(np.diff(ua[order], prepend=-1))
         lab = ul[order][first]  # ua blocks ascend => index == node
     arr = np.asarray(nodes, dtype=object)
     out = pd.DataFrame({"node": arr, "label": arr[lab]})
@@ -638,7 +614,6 @@ def label_propagation(
     dst_col: str = "dst",
     n_iter: int = 5,
     shuffle_partitions: int | None = None,
-    driver_edge_cap: int = DRIVER_GRAPH_EDGE_CAP,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan,
     Albert & Kumara 2007), made DETERMINISTIC: each round every node
@@ -660,66 +635,58 @@ def label_propagation(
     semantics knob). ``"auto"`` (r14) derives the target from the
     measured symmetrized-edge count (one cheap count over the persisted
     frame), clamped to the session default -- see
-    _graph_shuffle_target. ``driver_edge_cap`` (r14): graphs whose
-    symmetrized edge frame fits the cap run the loop in numpy on the
-    driver, bit-exactly (all-integer votes, same smallest-label
-    tie-break on the same string order); ``driver_edge_cap=0`` forces
-    the distributed loop."""
-    if shuffle_partitions == "auto":
-        return _lpa_impl(
-            edges, src_col, dst_col, n_iter, auto=True,
-            driver_edge_cap=driver_edge_cap,
-        )
-    with _shuffle_override(edges.sparkSession, shuffle_partitions):
-        return _lpa_impl(
-            edges, src_col, dst_col, n_iter,
-            driver_edge_cap=driver_edge_cap,
-        )
+    _graph_shuffle_target. Graphs up to DRIVER_GRAPH_EDGE_CAP
+    symmetrized edges run on the driver; see operators/driver_path.py
+    for the contract."""
+    return _undirected_loop(
+        edges, src_col, dst_col, shuffle_partitions,
+        lambda spark, tbl: _lpa_driver(spark, tbl, n_iter),
+        lambda sym: _lpa_body(sym, n_iter),
+    )
 
 
-def _lpa_impl(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    n_iter: int,
-    auto: bool = False,
-    driver_edge_cap: int = DRIVER_GRAPH_EDGE_CAP,
+def _undirected_loop(
+    edges: DataFrame, src_col: str, dst_col: str, shuffle_partitions,
+    driver, body,
 ) -> DataFrame:
-    e = (
-        edges.select(
+    """The shared front of LPA and kcore: build the persisted
+    symmetrized simple-graph edge frame (a, b), then return
+    ``driver(spark, tbl)`` when it fits DRIVER_GRAPH_EDGE_CAP, else
+    ``body(sym)`` (which unpersists it), with the ``"auto"`` width
+    derived from the measured symmetrized-edge count.
+
+    Hygiene (the triangles rule): NULL endpoints and self-loops drop,
+    duplicate/bidirectional listings collapse -- a self-loop would
+    vote a node's own label with weight 2 every LPA round (frozen
+    singleton) and a duplicate listing would double a neighbor's vote,
+    making the result depend on how the same undirected graph is
+    SPELLED."""
+    auto = shuffle_partitions == "auto"
+    spark = edges.sparkSession
+    with _shuffle_override(spark, None if auto else shuffle_partitions):
+        e = edges.select(
             F.col(src_col).cast("string").alias("a"),
             F.col(dst_col).cast("string").alias("b"),
-        )
-        .filter(
+        ).filter(
             F.col("a").isNotNull()
             & F.col("b").isNotNull()
-            # the kcore/triangles hygiene: a self-loop would vote a
-            # node's own label with weight 2 every round (frozen
-            # singleton), and a duplicate/bidirectional listing would
-            # double that neighbor's vote -- making the result depend
-            # on how the same undirected graph is SPELLED
             & (F.col("a") != F.col("b"))
         )
-    )
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    spark = edges.sparkSession
-    if driver_edge_cap > 0:
-        m = sym.limit(driver_edge_cap + 1).count()
-        if m <= driver_edge_cap:
-            try:
-                return _lpa_driver(spark, sym.toArrow(), n_iter)
-            finally:
-                sym.unpersist()
-    if auto:
+        sym = (
+            e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
+            .persist()
+        )
+        tbl = bounded_arrow(sym, DRIVER_GRAPH_EDGE_CAP)
+        if tbl is not None:
+            sym.unpersist()
+            return driver(spark, tbl)
+        if not auto:
+            return body(sym)
         with _shuffle_override(
             spark, _graph_shuffle_target(spark, sym.count())
         ):
-            return _lpa_body(sym, n_iter)
-    return _lpa_body(sym, n_iter)
+            return body(sym)
 
 
 def _lpa_body(sym: DataFrame, n_iter: int) -> DataFrame:
@@ -772,7 +739,7 @@ def _kcore_driver(spark, sym_tbl, max_iter, stats_out):
         v = cur[b_idx]
         order = np.lexsort((-v, a_idx))  # by node, value desc
         va, aa = v[order], a_idx[order]
-        starts = np.flatnonzero(np.r_[True, aa[1:] != aa[:-1]])
+        starts = np.flatnonzero(np.diff(aa, prepend=-1))
         rank = np.arange(len(aa), dtype=np.int64) - np.repeat(
             starts, np.diff(np.r_[starts, len(aa)])
         )
@@ -805,7 +772,6 @@ def kcore(
     max_iter: int = 100,
     shuffle_partitions: int | None = None,
     stats_out: dict | None = None,
-    driver_edge_cap: int = DRIVER_GRAPH_EDGE_CAP,
 ) -> DataFrame:
     """Core number per node -- the largest k such that the node sits in
     a subgraph where everyone keeps >= k neighbors: (node, core)
@@ -848,62 +814,14 @@ def kcore(
     ratio into algorithmic rounds x per-round cost (VERDICT r10 #2).
     ``"auto"`` (r14) derives the target from the measured
     symmetrized-edge count, clamped to the session default -- see
-    _graph_shuffle_target. ``driver_edge_cap`` (r14): graphs whose
-    symmetrized edge frame fits the cap run the H-index loop in numpy
-    on the driver, bit-exactly (all-integer update, unique fixpoint);
-    ``driver_edge_cap=0`` forces the distributed loop. ``stats_out``
-    reports whichever loop ran."""
-    if shuffle_partitions == "auto":
-        return _kcore_impl(
-            edges, src_col, dst_col, max_iter, stats_out, auto=True,
-            driver_edge_cap=driver_edge_cap,
-        )
-    with _shuffle_override(edges.sparkSession, shuffle_partitions):
-        return _kcore_impl(
-            edges, src_col, dst_col, max_iter, stats_out,
-            driver_edge_cap=driver_edge_cap,
-        )
-
-
-def _kcore_impl(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-    stats_out: dict | None = None,
-    auto: bool = False,
-    driver_edge_cap: int = DRIVER_GRAPH_EDGE_CAP,
-) -> DataFrame:
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("a"),
-            F.col(dst_col).cast("string").alias("b"),
-        )
-        .filter(
-            F.col("a").isNotNull()
-            & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
+    _graph_shuffle_target. Graphs up to DRIVER_GRAPH_EDGE_CAP
+    symmetrized edges run on the driver (see operators/driver_path.py);
+    ``stats_out`` reports whichever loop ran."""
+    return _undirected_loop(
+        edges, src_col, dst_col, shuffle_partitions,
+        lambda spark, tbl: _kcore_driver(spark, tbl, max_iter, stats_out),
+        lambda sym: _kcore_body(sym, max_iter, stats_out),
     )
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    spark = edges.sparkSession
-    if driver_edge_cap > 0:
-        m = sym.limit(driver_edge_cap + 1).count()
-        if m <= driver_edge_cap:
-            try:
-                return _kcore_driver(spark, sym.toArrow(), max_iter, stats_out)
-            finally:
-                sym.unpersist()
-    if auto:
-        with _shuffle_override(
-            spark, _graph_shuffle_target(spark, sym.count())
-        ):
-            return _kcore_body(sym, max_iter, stats_out)
-    return _kcore_body(sym, max_iter, stats_out)
 
 
 def _kcore_body(

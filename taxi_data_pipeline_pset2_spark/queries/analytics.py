@@ -20,7 +20,7 @@ from taxi_data_pipeline_pset2_spark.queries.catalog import query
 # r9-r13 rounds passed a literal 8 here; since r14 every graph entry
 # passes shuffle_partitions="auto" and the OPERATOR derives the width
 # from its own measured edge count (operators/graph.py
-# _graph_shuffle_target: clamp(ceil(edges/64k), 2, session default)) --
+# _graph_shuffle_target: clamp(ceil(edges/8192), 2, session default)) --
 # data-derived, never a semantics knob, and a no-op at real scale where
 # the clamp lands on the cluster-tuned default (VERDICT r13 #4).
 

@@ -14,6 +14,7 @@ from taxi_data_pipeline_pset2_spark.operators.bpe import (
     tokenize_bpe,
     word_symbol_table,
 )
+from taxi_data_pipeline_pset2_spark.operators.driver_path import distributed_only
 
 TEXTS = [
     "low lower lowest low low",
@@ -103,15 +104,16 @@ def test_early_stop_and_validation(spark):
 
 
 def test_distributed_path_matches_driver_fast_path(spark):
-    """driver_cap=0 forces the distributed merge loop; both paths are
-    the same greedy algorithm and must emit identical merges."""
+    """distributed_only forces the distributed merge loop; both paths
+    are the same greedy algorithm and must emit identical merges."""
     fast = bpe_learn(_docs(spark), n_merges=6)
-    dist = bpe_learn(_docs(spark), n_merges=6, driver_cap=0)
+    with distributed_only():
+        dist = bpe_learn(_docs(spark), n_merges=6)
     assert fast == dist == _ref_learn(TEXTS, 6)[0]
 
 
 def test_tokenize_vocab_dict_path_matches_distributed(spark):
-    """tokenize_bpe's vocab-dict fast path (r13) and the distributed
+    """tokenize_bpe's vocab-dict fast path and the distributed
     encode-distinct+join fallback must emit identical rows -- same
     greedy kernel (_encode_symbols), two execution shapes."""
     merges = bpe_learn(_docs(spark), n_merges=10)
@@ -119,11 +121,8 @@ def test_tokenize_vocab_dict_path_matches_distributed(spark):
         r.doc_id: (list(r.bpe_tokens), r.n_tokens)
         for r in tokenize_bpe(_docs(spark), merges).collect()
     }
-    dist = {
-        r.doc_id: (list(r.bpe_tokens), r.n_tokens)
-        for r in tokenize_bpe(
-            _docs(spark), merges, driver_vocab_cap=0
-        ).collect()
-    }
+    with distributed_only():
+        rows = tokenize_bpe(_docs(spark), merges).collect()
+    dist = {r.doc_id: (list(r.bpe_tokens), r.n_tokens) for r in rows}
     assert fast == dist
     assert len(fast) == len(TEXTS)

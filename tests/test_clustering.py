@@ -8,6 +8,7 @@ from taxi_data_pipeline_pset2_spark.operators.clustering import (
     kmeans_fit_assign,
     kmeans_inertia,
 )
+from taxi_data_pipeline_pset2_spark.operators.driver_path import distributed_only
 from taxi_data_pipeline_pset2_spark.sources.readers import load_table
 
 
@@ -56,10 +57,11 @@ def test_kmeans_iteration_uses_cached_corpus(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(cls, "collect", spy_collect)
     monkeypatch.setattr(cls, "unpersist", spy_unpersist)
-    # driver_cell_cap=0 forces the distributed Lloyd loop -- the path
-    # whose cache discipline this test pins (the r13 driver fast path
-    # does no per-round cluster work at all)
-    out = kmeans_fit_assign(emb, k=4, n_iter=2, driver_cell_cap=0)
+    # distributed_only forces the distributed Lloyd loop -- the path
+    # whose cache discipline this test pins (the driver fast path does
+    # no per-round cluster work at all)
+    with distributed_only():
+        out = kmeans_fit_assign(emb, k=4, n_iter=2)
     monkeypatch.undo()
 
     round_plans = [p for p in plans if "MapInPandas" in p]
@@ -69,42 +71,26 @@ def test_kmeans_iteration_uses_cached_corpus(spark, sf_dir, monkeypatch):
     assert unpersisted == [True]
     # and the rewrite stays deterministic across reruns
     a = {r.vec_id: r.cluster for r in out.collect()}
-    b = {
-        r.vec_id: r.cluster
-        for r in kmeans_fit_assign(
-            emb, k=4, n_iter=2, driver_cell_cap=0
-        ).collect()
-    }
+    with distributed_only():
+        again = kmeans_fit_assign(emb, k=4, n_iter=2)
+    b = {r.vec_id: r.cluster for r in again.collect()}
     assert a == b
 
 
 def test_kmeans_driver_fast_path_matches_distributed(spark, sf_dir):
-    """The r13 driver fast path (whole Lloyd loop on one collected
-    matrix) and the distributed loop share the exact-integer update, so
+    """The driver fast path (whole Lloyd loop on one collected matrix)
+    and the distributed loop share the exact-integer update, so
     (cluster, dist) and the returned centroids must be bit-identical."""
     emb = load_table(spark, sf_dir, "embeddings")
     fast, cf = kmeans_fit_assign(emb, k=4, n_iter=3, return_centroids=True)
-    dist_, cd = kmeans_fit_assign(
-        emb, k=4, n_iter=3, return_centroids=True, driver_cell_cap=0
-    )
+    with distributed_only():
+        dist_, cd = kmeans_fit_assign(
+            emb, k=4, n_iter=3, return_centroids=True
+        )
     a = {r.vec_id: (r.cluster, r.dist) for r in fast.collect()}
     b = {r.vec_id: (r.cluster, r.dist) for r in dist_.collect()}
     assert a == b
     assert (cf == cd).all()
-
-
-def test_kmeans_empty_corpus_both_paths(spark):
-    """r14 (ADVICE r13): an empty corpus returns an empty assignment
-    (and (0, 1) centroids) from BOTH paths -- the distributed loop used
-    to IndexError on its zero-row init."""
-    emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    for cap in (None, 0):
-        kw = {} if cap is None else {"driver_cell_cap": 0}
-        out, cents = kmeans_fit_assign(
-            emb, k=3, n_iter=2, return_centroids=True, **kw
-        )
-        assert out.count() == 0
-        assert cents.shape == (0, 1)
 
 
 def test_kmeans_null_id_sorts_like_distributed_init(spark):
@@ -118,7 +104,8 @@ def test_kmeans_null_id_sorts_like_distributed_init(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     fast = kmeans_fit_assign(emb, k=2, n_iter=2)
-    dist_ = kmeans_fit_assign(emb, k=2, n_iter=2, driver_cell_cap=0)
+    with distributed_only():
+        dist_ = kmeans_fit_assign(emb, k=2, n_iter=2)
     key = lambda r: (r.vec_id is not None, r.vec_id, r.cluster, r.dist)  # noqa: E731
     assert sorted(fast.collect(), key=key) == sorted(dist_.collect(), key=key)
 

@@ -13,6 +13,7 @@ from taxi_data_pipeline_pset2_spark.operators.components import (
     resolve_duplicate_clusters,
 )
 from taxi_data_pipeline_pset2_spark.operators.dedup import jaccard_pairs
+from taxi_data_pipeline_pset2_spark.operators.driver_path import distributed_only
 from taxi_data_pipeline_pset2_spark.sources.readers import load_table
 
 
@@ -33,11 +34,9 @@ def _union_find(edges):
     return {n: find(n) for n in parent}
 
 
-def _spark_components(spark, edges, **kw):
+def _spark_components(spark, edges):
     df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    return {
-        r.node: r.component for r in connected_components(df, **kw).collect()
-    }
+    return {r.node: r.component for r in connected_components(df).collect()}
 
 
 def test_components_on_adversarial_topologies(spark):
@@ -63,15 +62,16 @@ def test_components_match_union_find_on_random_graphs(spark):
 
 
 def test_distributed_path_matches_driver_fast_path(spark):
-    """driver_cap=0 forces the star alternation; both paths must emit
-    identical (node, component) sets on every topology class."""
+    """distributed_only forces the star alternation; both paths must
+    emit identical (node, component) sets on every topology class."""
     chain = [(i, i + 1) for i in range(100, 160)]
     star = [(400, v) for v in range(401, 430)]
     rng = random.Random(7)
     rand = [(rng.randrange(80), rng.randrange(80)) for _ in range(60)]
     edges = chain + star + [(a, b) for a, b in rand if a != b]
     fast = _spark_components(spark, edges)  # small -> driver union-find
-    dist = _spark_components(spark, edges, driver_cap=0)  # forced distributed
+    with distributed_only():
+        dist = _spark_components(spark, edges)
     assert fast == dist == _union_find(edges)
 
 

@@ -1,0 +1,218 @@
+"""Two-path equality for every operator with a bounded driver fast path
+(operators/driver_path.py): the driver kernel and the distributed body
+return the same result on degenerate inputs, which reach each kernel
+as a zero-row or tiny Arrow table.
+
+Cases, one shape per operator family:
+
+- ``empty``: no rows at all;
+- ``all_null``: every key or value NULL, so nothing survives cleaning;
+- ``self_loop``: graphs and pairs of only self-edges (dropped, except
+  by pagerank, where a self-loop is a real edge); for kmeans identical
+  points (zero distances, an empty cluster); for BPE words made of one
+  repeated character (overlapping self-pairs);
+- ``single_key_ties``: one key whose candidates tie (a hub with equal
+  leaves; an exactly equidistant point; one word whose pairs tie);
+- ``mixed``: a small realistic input (duplicate and bidirectional edges,
+  self-loops; random vectors; a chained pair graph; a text corpus);
+- ``over_cap``: ``mixed`` with the operator's cap constant set to 1, so
+  the helper must return None and the distributed body runs; its
+  result is compared with the driver kernel's at the real cap.
+"""
+
+from __future__ import annotations
+
+import random
+
+import pytest
+from pyspark.sql import functions as F
+
+from taxi_data_pipeline_pset2_spark.operators import (
+    bpe,
+    clustering,
+    components,
+    graph,
+)
+from taxi_data_pipeline_pset2_spark.operators.driver_path import (
+    bounded_arrow,
+    distributed_only,
+)
+
+_rng = random.Random(1414)
+_nodes = [f"v{i:02d}" for i in range(30)]
+GRAPH = (
+    "src string, dst string",
+    {
+        "empty": [],
+        "all_null": [(None, None), ("a", None), (None, "b")],
+        "self_loop": [("a", "a"), ("b", "b"), ("b", "b")],
+        "single_key_ties": [("hub", "x"), ("hub", "y"), ("hub", "z")],
+        "mixed": [
+            (_rng.choice(_nodes), _rng.choice(_nodes)) for _ in range(120)
+        ]
+        + [("v00", "v00"), ("v01", "v02"), ("v02", "v01")],
+    },
+)
+
+_rng = random.Random(7)
+VECTORS = (
+    "vec_id long, embedding array<double>",
+    {
+        "empty": [],
+        "all_null": [(1, None), (2, None)],
+        "self_loop": [(1, [1.0, 1.0]), (2, [1.0, 1.0]), (3, [1.0, 1.0])],
+        "single_key_ties": [(1, [0.0, 0.0]), (2, [2.0, 0.0]), (3, [1.0, 0.0])],
+        "mixed": [
+            (i, [round(_rng.uniform(-1, 1), 3) for _ in range(3)])
+            for i in range(40)
+        ],
+    },
+)
+
+_rng = random.Random(8)
+PAIRS = (
+    "doc_a long, doc_b long",
+    {
+        "empty": [],
+        "all_null": [(None, None), (1, None), (None, 2)],
+        "self_loop": [(1, 1), (2, 2)],
+        "single_key_ties": [(5, 9), (5, 7), (5, 8), (9, 5)],
+        "mixed": [(i, i + 1) for i in range(100, 130)]
+        + [(_rng.randrange(40), _rng.randrange(40)) for _ in range(40)],
+    },
+)
+
+DOCS = (
+    "doc_id long, text string",
+    {
+        "empty": [],
+        "all_null": [(0, None), (1, None)],
+        "self_loop": [(0, "aaaa aa"), (1, "aaa aaaa")],
+        "single_key_ties": [(0, "ab ab ab")],
+        "mixed": list(
+            enumerate(
+                [
+                    "low lower lowest low low",
+                    "new newer newest new new new",
+                    "wide wider widest low new",
+                    "low low low newer",
+                ]
+            )
+        ),
+    },
+)
+MERGES = [("a", "a"), ("l", "o"), ("lo", "w"), ("a", "b"), ("ab", bpe.EOW)]
+
+
+def _sorted(rows):
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+def _kmeans(df):
+    out, cents = clustering.kmeans_fit_assign(
+        df, k=2, n_iter=2, return_centroids=True
+    )
+    return _sorted(out.collect()), cents.shape, cents.tolist()
+
+
+def _tokenize(df):
+    out = bpe.tokenize_bpe(df, MERGES).collect()
+    return sorted((r.doc_id, list(r.bpe_tokens), r.n_tokens) for r in out)
+
+
+# name -> (module, cap constant, (schema, cases), run, result on no rows)
+OPS = {
+    "pagerank": (
+        graph, "DRIVER_PAGERANK_EDGE_CAP", GRAPH,
+        lambda df: [tuple(r) for r in graph.pagerank(df, n_iter=2).collect()],
+        [],
+    ),
+    "label_propagation": (
+        graph, "DRIVER_GRAPH_EDGE_CAP", GRAPH,
+        lambda df: _sorted(graph.label_propagation(df, n_iter=5).collect()),
+        [],
+    ),
+    "kcore": (
+        graph, "DRIVER_GRAPH_EDGE_CAP", GRAPH,
+        lambda df: _sorted(graph.kcore(df).collect()),
+        [],
+    ),
+    "kmeans_fit_assign": (
+        clustering, "DRIVER_KMEANS_CELL_CAP", VECTORS, _kmeans,
+        ([], (0, 1), []),
+    ),
+    "connected_components": (
+        components, "DRIVER_CC_EDGE_CAP", PAIRS,
+        lambda df: _sorted(components.connected_components(df).collect()),
+        [],
+    ),
+    "bpe_learn": (
+        bpe, "DRIVER_VOCAB_CAP", DOCS,
+        lambda df: bpe.bpe_learn(df, n_merges=6),
+        [],
+    ),
+    "tokenize_bpe": (bpe, "DRIVER_VOCAB_CAP", DOCS, _tokenize, []),
+}
+CASES = [
+    "empty", "all_null", "self_loop", "single_key_ties", "mixed", "over_cap",
+]
+
+
+@pytest.mark.parametrize("case", CASES)
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_fast_path_matches_distributed(spark, monkeypatch, op, case):
+    module, cap_name, (schema, cases), run, empty_result = OPS[op]
+    df = spark.createDataFrame(cases.get(case, cases["mixed"]), schema)
+    taken = []
+
+    def spy(frame, cap, weight=None):
+        tbl = bounded_arrow(frame, cap, weight)
+        taken.append(tbl)
+        return tbl
+
+    with monkeypatch.context() as m:
+        m.setattr(module, "bounded_arrow", spy)
+        if case == "over_cap":
+            m.setattr(module, cap_name, 1)
+        got = run(df)
+    assert taken, f"{op} never consulted the driver-path helper"
+    if case == "over_cap":
+        assert all(t is None for t in taken)
+        assert got == run(df)  # the driver kernel at the real cap
+        return
+    assert all(t is not None for t in taken)
+    with distributed_only():
+        assert got == run(df)
+    if case == "empty":
+        assert got == empty_result
+
+
+@pytest.mark.parametrize("op", ["kcore", "label_propagation"])
+def test_self_loop_and_null_edge_gives_no_rows_on_both_paths(spark, op):
+    """One self-loop plus one NULL endpoint cleans to zero edges: the
+    driver kernel gets a zero-row table and must return no rows, like
+    the distributed loop (it used to raise IndexError)."""
+    df = spark.createDataFrame(
+        [("a", "a"), ("b", None)], "src string, dst string"
+    )
+    fn = getattr(graph, op)
+    assert fn(df).collect() == []
+    with distributed_only():
+        assert fn(df).collect() == []
+
+
+def test_bounded_arrow_contract(spark):
+    df = spark.createDataFrame(
+        [(i, [1, 2, 3]) for i in range(4)], "id long, v array<int>"
+    )
+    assert bounded_arrow(df, 4).num_rows == 4
+    assert bounded_arrow(df, 3) is None
+    # weighted: 4 rows x 3 cells
+    weight = F.size("v")
+    assert bounded_arrow(df, 12, weight=weight).num_rows == 4
+    assert bounded_arrow(df, 11, weight=weight) is None
+    empty = bounded_arrow(df.limit(0), 0)
+    assert empty is not None and empty.num_rows == 0
+    with distributed_only():
+        assert bounded_arrow(df, 100) is None
+    assert bounded_arrow(df, 100) is not None

@@ -3,6 +3,7 @@ graphs, dangling mass, mass conservation."""
 
 import pytest
 
+from taxi_data_pipeline_pset2_spark.operators.driver_path import distributed_only
 from taxi_data_pipeline_pset2_spark.operators.graph import pagerank
 
 
@@ -406,23 +407,21 @@ def test_pagerank_checkpoint_cadence_equivalence(spark):
 
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    # driver_edge_cap=0: the cadence knob only exists on the distributed
-    # loop, so the test must force it (r14 driver fast path would
-    # otherwise bypass the knob entirely)
-    base = sorted(
-        (r.node, r.rank)
-        for r in pagerank(
-            df, n_iter=7, checkpoint_every=1, driver_edge_cap=0
-        ).collect()
-    )
-    for ce in (2, 3, 4):
-        got = sorted(
+    # the cadence knob only exists on the distributed loop, so the test
+    # must force it (the driver fast path would bypass the knob)
+    with distributed_only():
+        base = sorted(
             (r.node, r.rank)
-            for r in pagerank(
-                df, n_iter=7, checkpoint_every=ce, driver_edge_cap=0
-            ).collect()
+            for r in pagerank(df, n_iter=7, checkpoint_every=1).collect()
         )
-        assert got == base, f"cadence {ce} diverged"
+        for ce in (2, 3, 4):
+            got = sorted(
+                (r.node, r.rank)
+                for r in pagerank(
+                    df, n_iter=7, checkpoint_every=ce
+                ).collect()
+            )
+            assert got == base, f"cadence {ce} diverged"
     import pytest
 
     with pytest.raises(ValueError):
@@ -521,10 +520,10 @@ def test_kcore_oracle_unroll_dominates_convergence():
 
 
 def test_pagerank_driver_fast_path_matches_distributed(spark):
-    """r14 bounded driver fast path: a weighted graph with dangling
-    nodes, parallel edges, self-loops and rank ties returns the
-    IDENTICAL table (values and order) from the numpy driver loop and
-    the distributed loop -- the kmeans/components two-path discipline."""
+    """Bounded driver fast path on a WEIGHTED graph with dangling
+    nodes, parallel edges, self-loops and rank ties: the numpy driver
+    loop and the distributed loop return the IDENTICAL table (values
+    and order). Unweighted degenerate inputs: tests/test_driver_path.py."""
     import random
 
     from taxi_data_pipeline_pset2_spark.operators.graph import pagerank
@@ -541,41 +540,12 @@ def test_pagerank_driver_fast_path_matches_distributed(spark):
         (r.node, r.rank)
         for r in pagerank(df, n_iter=9, weight_col="w").collect()
     ]
-    dist = [
-        (r.node, r.rank)
-        for r in pagerank(
-            df, n_iter=9, weight_col="w", driver_edge_cap=0
-        ).collect()
-    ]
+    with distributed_only():
+        dist = [
+            (r.node, r.rank)
+            for r in pagerank(df, n_iter=9, weight_col="w").collect()
+        ]
     assert fast == dist  # ordered comparison: values AND (desc, asc) order
-
-
-def test_kcore_lpa_driver_fast_path_matches_distributed(spark):
-    """r14 bounded driver fast paths for the integer loops: on a random
-    graph with duplicate/bidirectional edges and self-loops the numpy
-    H-index / LPA loops return the IDENTICAL table as the distributed
-    ones (all-integer updates, same smallest-label tie-break)."""
-    import random
-
-    from taxi_data_pipeline_pset2_spark.operators.graph import (
-        kcore,
-        label_propagation,
-    )
-
-    rng = random.Random(1414)
-    nodes = [f"v{i:02d}" for i in range(30)]
-    edges = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(120)
-    ] + [("v00", "v00"), ("v01", "v02"), ("v02", "v01")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    kc_fast = sorted(map(tuple, kcore(df).collect()))
-    kc_dist = sorted(map(tuple, kcore(df, driver_edge_cap=0).collect()))
-    assert kc_fast == kc_dist
-    lp_fast = sorted(map(tuple, label_propagation(df, n_iter=5).collect()))
-    lp_dist = sorted(
-        map(tuple, label_propagation(df, n_iter=5, driver_edge_cap=0).collect())
-    )
-    assert lp_fast == lp_dist
 
 
 def test_pagerank_shuffle_partitions_equivalence(spark):
@@ -585,18 +555,19 @@ def test_pagerank_shuffle_partitions_equivalence(spark):
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
     df = spark.createDataFrame(edges, "src string, dst string")
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    # base takes the r14 driver fast path; each probe forces the
-    # DISTRIBUTED loop (driver_edge_cap=0) at a different partitioning,
-    # so this pins both the partitioning-invariance claim and the
-    # driver-vs-distributed two-path equality in one sweep
+    # base takes the driver fast path; each probe forces the
+    # DISTRIBUTED loop at a different partitioning, so this pins both
+    # the partitioning-invariance claim and the driver-vs-distributed
+    # two-path equality in one sweep
     base = sorted((r.node, r.rank) for r in pagerank(df, n_iter=6).collect())
     for sp in (1, 3, 8):
-        got = sorted(
-            (r.node, r.rank)
-            for r in pagerank(
-                df, n_iter=6, shuffle_partitions=sp, driver_edge_cap=0
-            ).collect()
-        )
+        with distributed_only():
+            got = sorted(
+                (r.node, r.rank)
+                for r in pagerank(
+                    df, n_iter=6, shuffle_partitions=sp
+                ).collect()
+            )
         assert got == base, f"shuffle_partitions={sp} diverged"
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
     with pytest.raises(ValueError):
@@ -616,34 +587,19 @@ def test_kcore_lpa_shuffle_partitions_equivalence(spark):
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
     df = spark.createDataFrame(edges, "src string, dst string")
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    # base takes the r14 driver fast path; each probe forces the
+    # base takes the driver fast path; each probe forces the
     # DISTRIBUTED loop, so this sweep pins partitioning-invariance AND
     # driver-vs-distributed two-path equality for both operators
     kc_base = sorted(map(tuple, kcore(df).collect()))
     lpa_base = sorted(map(tuple, label_propagation(df, n_iter=4).collect()))
     for sp in (1, 8):
-        assert (
-            sorted(
-                map(
-                    tuple,
-                    kcore(
-                        df, shuffle_partitions=sp, driver_edge_cap=0
-                    ).collect(),
-                )
-            )
-            == kc_base
-        )
-        assert (
-            sorted(
-                map(
-                    tuple,
-                    label_propagation(
-                        df, n_iter=4, shuffle_partitions=sp, driver_edge_cap=0
-                    ).collect(),
-                )
-            )
-            == lpa_base
-        )
+        with distributed_only():
+            kc = kcore(df, shuffle_partitions=sp).collect()
+            lpa = label_propagation(
+                df, n_iter=4, shuffle_partitions=sp
+            ).collect()
+        assert sorted(map(tuple, kc)) == kc_base
+        assert sorted(map(tuple, lpa)) == lpa_base
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
     with pytest.raises(ValueError):
         kcore(df, shuffle_partitions=0)

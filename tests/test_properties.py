@@ -301,6 +301,8 @@ def _bpe_reference_string(words: list[tuple[str, int]], n_merges: int, min_count
     min_count=st.integers(min_value=1, max_value=3),
 )
 def test_bpe_driver_loop_matches_string_reference(words, n_merges, min_count):
+    import pyarrow as pa
+
     from taxi_data_pipeline_pset2_spark.operators.bpe import EOW, _bpe_learn_driver
 
     # collapse duplicate words the way word_symbol_table's groupBy does
@@ -308,10 +310,14 @@ def test_bpe_driver_loop_matches_string_reference(words, n_merges, min_count):
     for w, f in words:
         agg[w] = agg.get(w, 0) + f
     items = sorted(agg.items())
-    rows = [
-        {"freq": f, "symbols": list(w) + [EOW]} for w, f in items
-    ]
-    got = _bpe_learn_driver(rows, n_merges, min_count)
+    # the kernel reads the word table as the Arrow collect delivers it
+    tbl = pa.table(
+        {
+            "freq": [f for _, f in items],
+            "symbols": [list(w) + [EOW] for w, _ in items],
+        }
+    )
+    got = _bpe_learn_driver(tbl, n_merges, min_count)
     want = _bpe_reference_string(items, n_merges, min_count)
     assert got == want
 
