@@ -38,39 +38,35 @@ from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.operators.driver_path import bounded_arrow
 
-# _shuffle_override bookkeeping: (depth, original value) per session,
-# guarded by a lock -- two OVERLAPPING overrides on the same session
-# (the threaded catalog replay runs several graph entries concurrently)
-# would otherwise restore in the wrong order and leave the temporary
-# value behind permanently (A saves 32 and sets 8; B saves 8; A
-# restores 32; B "restores" 8). Depth counting restores the TRUE
-# original exactly when the last override exits; while overrides
-# overlap, whichever value was set last wins -- an execution knob, so
-# results are unaffected either way.
+# Rows per reduce slot when triangle_counts sizes its shuffles: the
+# wedge join wants a little width, but partitions beyond what the edge
+# volume needs are pure per-task overhead (OPTIMIZATION_r13.md:
+# part_triangle_stats 2.66 -> 1.57 s; OPTIMIZATION_r14.md calibrates
+# 8192 rows per slot).
+_EDGE_ROWS_PER_SHUFFLE_PARTITION = 8192
+
+# _edge_sized_shuffles bookkeeping: (depth, original value) per session,
+# guarded by a lock -- two OVERLAPPING calls on the same session (the
+# threaded catalog replay runs several entries concurrently) would
+# otherwise restore in the wrong order and leave a temporary value
+# behind permanently (A saves 32 and sets 8; B saves 8; A restores 32;
+# B "restores" 8). Depth counting restores the TRUE original exactly
+# when the last call exits; while calls overlap, whichever value was
+# set last wins -- an execution knob, so results are unaffected.
 _OVERRIDE_LOCK = threading.Lock()
 _OVERRIDE_STATE: dict[int, list] = {}  # id(session) -> [depth, original]
 
 
 @contextmanager
-def _shuffle_override(spark, shuffle_partitions: int | None):
-    """Plan the enclosed (eagerly-materialized) work with a
-    graph-sized shuffle partition count. Iterative graph ops pay one
-    fixed scheduling cost per task per round, so on a small graph
-    32-way stages are pure overhead (pagerank measured 5.5 s -> 3.7 s
-    at 8-way for the identical result -- VERDICT r8 item #4 profile);
-    None leaves the cluster-tuned default in charge, the right call at
-    real scale. The conf is session-wide for the duration and restored
-    when the outermost override exits (see _OVERRIDE_STATE): a
-    concurrently-planned query may pick up the temporary value, which
-    can change its task counts but never its results (every operator
-    here is partitioning-independent by construction)."""
-    if shuffle_partitions is None:
-        yield
-        return
-    if shuffle_partitions < 1:
-        raise ValueError(
-            f"shuffle_partitions must be >= 1, got {shuffle_partitions}"
-        )
+def _edge_sized_shuffles(spark, n_rows: int):
+    """Plan the enclosed (eagerly materialized) work at
+    clamp(ceil(n_rows / _EDGE_ROWS_PER_SHUFFLE_PARTITION), 2, session
+    default) shuffle partitions: narrower for provably small inputs,
+    the session default (plus AQE coalescing) at real scale. The conf
+    is session-wide for the duration and restored when the outermost
+    call exits (see _OVERRIDE_STATE): a concurrently planned query may
+    pick up the temporary value, which can change its task counts but
+    never its results."""
     conf = spark.conf
     key = id(spark)
     with _OVERRIDE_LOCK:
@@ -81,7 +77,14 @@ def _shuffle_override(spark, shuffle_partitions: int | None):
                 conf.get("spark.sql.shuffle.partitions"),
             ]
         state[0] += 1
-        conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        target = max(
+            2,
+            min(
+                int(state[1]),
+                -(-int(n_rows) // _EDGE_ROWS_PER_SHUFFLE_PARTITION),
+            ),
+        )
+        conf.set("spark.sql.shuffle.partitions", str(target))
     try:
         yield
     finally:
@@ -92,88 +95,10 @@ def _shuffle_override(spark, shuffle_partitions: int | None):
                 del _OVERRIDE_STATE[key]
 
 
-# Rows per reduce slot when a graph operator sizes its own shuffles
-# (r14, VERDICT r13 #4): the iterative loops pay a fixed scheduling
-# cost per task per round, so partitions beyond what the edge volume
-# needs are pure overhead. 8k edge rows per slot is the measured sweet
-# spot at bench scale (triangle on a 25k-canonical-edge graph,
-# interleaved best-of-4: 2-way 1.71 s, 4-way 1.37 s, 8-way 1.39 s --
-# the wedge join wants a little width; the formula lands this graph at
-# 4). The derived target is CLAMPED to the session default, so on a
-# real cluster the cluster-tuned default (plus AQE coalescing) stays in
-# charge; the formula only shrinks partitioning for provably small
-# graphs (anything past default*8k rows is untouched).
-_EDGE_ROWS_PER_SHUFFLE_PARTITION = 8192
-
-
-def _graph_shuffle_target(spark, n_rows: int) -> int:
-    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(2, min(default, -(-int(n_rows) // _EDGE_ROWS_PER_SHUFFLE_PARTITION)))
-
-
 # Cleaned edges up to this many rows run the power iteration in numpy
 # on the driver (operators/driver_path.py): 4M edges x ~24 B of
 # id/weight state is tens of MB.
 DRIVER_PAGERANK_EDGE_CAP = 4_000_000
-
-
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    damping: float = 0.85,
-    n_iter: int = 10,
-    weight_col: str | None = None,
-    checkpoint_every: int = 2,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Node ranks after ``n_iter`` power-iteration rounds:
-    (node, rank) with sum(rank) == 1, ordered rank desc, node asc.
-    Parallel edges count multiply (weight by repetition); with
-    ``weight_col`` each edge carries that non-negative weight instead
-    (a node's rank splits across out-edges proportionally to weight --
-    parallel weighted edges are equivalent to one summed edge).
-    Self-loops are legitimate edges. NULL endpoints, NULL weights and
-    weight <= 0 edges are dropped (a zero-weight edge carries nothing
-    and must not make its source non-dangling).
-
-    ``shuffle_partitions``: plan THIS call's internal shuffles (edge
-    repartition, per-round contribution aggregate, rank joins) with the
-    given partition count instead of the session default. Iteration
-    wall-clock is dominated by per-task scheduling once partitions
-    outnumber what the graph needs -- at bench scale (600k edges / 16k
-    nodes) 32-way stages cost 5.5 s where 8-way cost 3.7 s for the
-    identical result (VERDICT r8 item #4 profile) -- so callers that
-    know the graph is small pass a small count; None leaves the
-    cluster-tuned default in charge (the right call at real scale).
-    The conf is set session-wide for the duration of the call and
-    restored in a finally: a concurrently-planned query on the same
-    session may pick up the temporary value, which can change its task
-    counts but never its results (every operator here is
-    partitioning-independent by construction).
-
-    Graphs up to DRIVER_PAGERANK_EDGE_CAP cleaned edges run on the
-    driver; see operators/driver_path.py for the contract."""
-    if shuffle_partitions == "auto":
-        # under the driver cap the loop shuffles nothing; above it the
-        # cluster-tuned session default (plus AQE coalescing) is the
-        # right per-round width, so "auto" means no override at all
-        shuffle_partitions = None
-    if not 0 < damping < 1:
-        raise ValueError(f"damping must be in (0,1), got {damping}")
-    # Validated BEFORE any persist()/count() so a bad argument cannot
-    # leave e/nodes/nodes_deg cache-marked or waste a count job
-    # (ADVICE r8 item #1). Range rationale: see the cadence comment
-    # below.
-    if not 1 <= checkpoint_every <= 4:
-        raise ValueError(
-            f"checkpoint_every must be in [1, 4], got {checkpoint_every}"
-        )
-    with _shuffle_override(edges.sparkSession, shuffle_partitions):
-        return _pagerank_impl(
-            edges, src_col, dst_col, damping, n_iter, weight_col,
-            checkpoint_every,
-        )
 
 
 def _pagerank_driver(spark, edges_tbl, damping, n_iter):
@@ -243,15 +168,40 @@ def _pagerank_driver(spark, edges_tbl, damping, n_iter):
     return res.orderBy(F.desc("rank"), "node")
 
 
-def _pagerank_impl(
+def pagerank(
     edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    damping: float,
-    n_iter: int,
-    weight_col: str | None,
-    checkpoint_every: int,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    damping: float = 0.85,
+    n_iter: int = 10,
+    weight_col: str | None = None,
+    checkpoint_every: int = 2,
 ) -> DataFrame:
+    """Node ranks after ``n_iter`` power-iteration rounds:
+    (node, rank) with sum(rank) == 1, ordered rank desc, node asc.
+    Parallel edges count multiply (weight by repetition); with
+    ``weight_col`` each edge carries that non-negative weight instead
+    (a node's rank splits across out-edges proportionally to weight --
+    parallel weighted edges are equivalent to one summed edge).
+    Self-loops are legitimate edges. NULL endpoints, NULL weights and
+    weight <= 0 edges are dropped (a zero-weight edge carries nothing
+    and must not make its source non-dangling).
+
+    Runs at the session's shuffle width; only triangle_counts sizes
+    its shuffles from its edge count.
+
+    Graphs up to DRIVER_PAGERANK_EDGE_CAP cleaned edges run on the
+    driver; see operators/driver_path.py for the contract."""
+    if not 0 < damping < 1:
+        raise ValueError(f"damping must be in (0,1), got {damping}")
+    # Validated BEFORE any persist()/count() so a bad argument cannot
+    # leave e/nodes/nodes_deg cache-marked or waste a count job
+    # (ADVICE r8 item #1). Range rationale: see the cadence comment
+    # below.
+    if not 1 <= checkpoint_every <= 4:
+        raise ValueError(
+            f"checkpoint_every must be in [1, 4], got {checkpoint_every}"
+        )
     w_expr = (
         F.col(weight_col).cast("double")
         if weight_col
@@ -418,7 +368,6 @@ def triangle_counts(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Per-node triangle counts and local clustering coefficient over an
     UNDIRECTED simple graph: (node, degree, triangles, clustering) with
@@ -437,24 +386,8 @@ def triangle_counts(
     (3 rows per triangle), one hash aggregate; the degree frame is
     node-sized. Deterministic under any partitioning, so it carries a
     full DuckDB oracle twin (unlike the iterative pagerank/LPA
-    siblings). ``shuffle_partitions``: see _shuffle_override (the
-    small-graph execution knob shared with pagerank/LPA/kcore; never a
-    semantics knob -- a real deployment passes None to inherit the
-    cluster-tuned default). ``"auto"`` (r14) derives the target from
-    the MEASURED canonical-edge count (one cheap count over the
-    already-persisted edge frame, `_graph_shuffle_target`), clamped to
-    the session default -- data-derived sizing instead of a caller
-    literal, a no-op above default*8192 edges
-    (_EDGE_ROWS_PER_SHUFFLE_PARTITION)."""
-    if shuffle_partitions == "auto":
-        return _triangle_counts_impl(edges, src_col, dst_col, auto=True)
-    with _shuffle_override(edges.sparkSession, shuffle_partitions):
-        return _triangle_counts_impl(edges, src_col, dst_col)
-
-
-def _triangle_counts_impl(
-    edges: DataFrame, src_col: str, dst_col: str, auto: bool = False
-) -> DataFrame:
+    siblings). The only graph operator that sizes its own shuffles:
+    from its canonical edge count (_edge_sized_shuffles)."""
     e0 = (
         edges.select(
             F.col(src_col).cast("string").alias("_s"),
@@ -471,87 +404,85 @@ def _triangle_counts_impl(
         .distinct()
         .persist()
     )
-    if auto:
-        spark = edges.sparkSession
-        with _shuffle_override(
-            spark, _graph_shuffle_target(spark, e0.count())
-        ):
-            return _triangle_counts_body(e0)
-    return _triangle_counts_body(e0)
-
-
-def _triangle_counts_body(e0: DataFrame) -> DataFrame:
-    deg = (
-        e0.select(F.col("a").alias("node"))
-        .union(e0.select(F.col("b")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("degree"))
-        .persist()
-    )
-    oriented = None
+    deg = oriented = None
     try:
-        da = deg.select(
-            F.col("node").alias("a"), F.col("degree").alias("_da")
-        )
-        db = deg.select(
-            F.col("node").alias("b"), F.col("degree").alias("_db")
-        )
-        lo_first = (F.col("_da") < F.col("_db")) | (
-            (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
-        )
-        oriented = (
-            e0.join(da, "a")
-            .join(db, "b")
-            .select(
-                F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-                F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-                F.when(lo_first, F.col("_db"))
-                .otherwise(F.col("_da"))
-                .alias("_dhi"),
+        with _edge_sized_shuffles(edges.sparkSession, e0.count()):
+            deg = (
+                e0.select(F.col("a").alias("node"))
+                .union(e0.select(F.col("b")))
+                .groupBy("node")
+                .agg(F.count("*").cast("bigint").alias("degree"))
+                .persist()
             )
-        ).persist()
-        o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
-        hi_order = (F.col("o1._dhi") < F.col("o2._dhi")) | (
-            (F.col("o1._dhi") == F.col("o2._dhi"))
-            & (F.col("o1.hi") < F.col("o2.hi"))
-        )
-        tri = (
-            o1.join(o2, (F.col("o1.lo") == F.col("o2.lo")) & hi_order)
-            .join(
-                o3,
-                (F.col("o3.lo") == F.col("o1.hi"))
-                & (F.col("o3.hi") == F.col("o2.hi")),
+            da = deg.select(
+                F.col("node").alias("a"), F.col("degree").alias("_da")
             )
-            .select(
-                F.explode(
-                    F.array(F.col("o1.lo"), F.col("o1.hi"), F.col("o2.hi"))
-                ).alias("node")
+            db = deg.select(
+                F.col("node").alias("b"), F.col("degree").alias("_db")
             )
-            .groupBy("node")
-            .agg(F.count("*").cast("bigint").alias("_t"))
-        )
-        out = (
-            deg.join(tri, "node", "left")
-            .select(
-                "node",
-                "degree",
-                F.coalesce(F.col("_t"), F.lit(0)).cast("bigint").alias("triangles"),
-                F.round(
-                    F.when(
-                        F.col("degree") >= 2,
-                        2.0
-                        * F.coalesce(F.col("_t"), F.lit(0))
-                        / (F.col("degree") * (F.col("degree") - 1.0)),
-                    ),
-                    6,
-                ).alias("clustering"),
+            lo_first = (F.col("_da") < F.col("_db")) | (
+                (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
             )
-            .orderBy("node")
-        )
-        out = out.localCheckpoint()
+            oriented = (
+                e0.join(da, "a")
+                .join(db, "b")
+                .select(
+                    F.when(lo_first, F.col("a"))
+                    .otherwise(F.col("b"))
+                    .alias("lo"),
+                    F.when(lo_first, F.col("b"))
+                    .otherwise(F.col("a"))
+                    .alias("hi"),
+                    F.when(lo_first, F.col("_db"))
+                    .otherwise(F.col("_da"))
+                    .alias("_dhi"),
+                )
+            ).persist()
+            o1, o2, o3 = (oriented.alias(f"o{i}") for i in (1, 2, 3))
+            hi_order = (F.col("o1._dhi") < F.col("o2._dhi")) | (
+                (F.col("o1._dhi") == F.col("o2._dhi"))
+                & (F.col("o1.hi") < F.col("o2.hi"))
+            )
+            tri = (
+                o1.join(o2, (F.col("o1.lo") == F.col("o2.lo")) & hi_order)
+                .join(
+                    o3,
+                    (F.col("o3.lo") == F.col("o1.hi"))
+                    & (F.col("o3.hi") == F.col("o2.hi")),
+                )
+                .select(
+                    F.explode(
+                        F.array(F.col("o1.lo"), F.col("o1.hi"), F.col("o2.hi"))
+                    ).alias("node")
+                )
+                .groupBy("node")
+                .agg(F.count("*").cast("bigint").alias("_t"))
+            )
+            out = (
+                deg.join(tri, "node", "left")
+                .select(
+                    "node",
+                    "degree",
+                    F.coalesce(F.col("_t"), F.lit(0))
+                    .cast("bigint")
+                    .alias("triangles"),
+                    F.round(
+                        F.when(
+                            F.col("degree") >= 2,
+                            2.0
+                            * F.coalesce(F.col("_t"), F.lit(0))
+                            / (F.col("degree") * (F.col("degree") - 1.0)),
+                        ),
+                        6,
+                    ).alias("clustering"),
+                )
+                .orderBy("node")
+            )
+            out = out.localCheckpoint()
     finally:
         e0.unpersist()
-        deg.unpersist()
+        if deg is not None:
+            deg.unpersist()
         if oriented is not None:
             oriented.unpersist()
     return out
@@ -613,7 +544,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     n_iter: int = 5,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan,
     Albert & Kumara 2007), made DETERMINISTIC: each round every node
@@ -630,30 +560,24 @@ def label_propagation(
     symmetrized edges + one (node, label) count aggregate + one
     per-node argmax window -- node/edge-shaped work only, ranks frame
     localCheckpoint'ed per round (same lineage discipline as
-    pagerank). ``shuffle_partitions``: see _shuffle_override (the
-    small-graph execution knob shared with pagerank/kcore; never a
-    semantics knob). ``"auto"`` (r14) derives the target from the
-    measured symmetrized-edge count (one cheap count over the persisted
-    frame), clamped to the session default -- see
-    _graph_shuffle_target. Graphs up to DRIVER_GRAPH_EDGE_CAP
-    symmetrized edges run on the driver; see operators/driver_path.py
-    for the contract."""
+    pagerank). Runs at the session's shuffle width; only
+    triangle_counts sizes its shuffles from its edge count. Graphs up
+    to DRIVER_GRAPH_EDGE_CAP symmetrized edges run on the driver; see
+    operators/driver_path.py for the contract."""
     return _undirected_loop(
-        edges, src_col, dst_col, shuffle_partitions,
+        edges, src_col, dst_col,
         lambda spark, tbl: _lpa_driver(spark, tbl, n_iter),
         lambda sym: _lpa_body(sym, n_iter),
     )
 
 
 def _undirected_loop(
-    edges: DataFrame, src_col: str, dst_col: str, shuffle_partitions,
-    driver, body,
+    edges: DataFrame, src_col: str, dst_col: str, driver, body
 ) -> DataFrame:
     """The shared front of LPA and kcore: build the persisted
     symmetrized simple-graph edge frame (a, b), then return
     ``driver(spark, tbl)`` when it fits DRIVER_GRAPH_EDGE_CAP, else
-    ``body(sym)`` (which unpersists it), with the ``"auto"`` width
-    derived from the measured symmetrized-edge count.
+    ``body(sym)`` (which unpersists it).
 
     Hygiene (the triangles rule): NULL endpoints and self-loops drop,
     duplicate/bidirectional listings collapse -- a self-loop would
@@ -661,32 +585,24 @@ def _undirected_loop(
     singleton) and a duplicate listing would double a neighbor's vote,
     making the result depend on how the same undirected graph is
     SPELLED."""
-    auto = shuffle_partitions == "auto"
-    spark = edges.sparkSession
-    with _shuffle_override(spark, None if auto else shuffle_partitions):
-        e = edges.select(
-            F.col(src_col).cast("string").alias("a"),
-            F.col(dst_col).cast("string").alias("b"),
-        ).filter(
-            F.col("a").isNotNull()
-            & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        sym = (
-            e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .persist()
-        )
-        tbl = bounded_arrow(sym, DRIVER_GRAPH_EDGE_CAP)
-        if tbl is not None:
-            sym.unpersist()
-            return driver(spark, tbl)
-        if not auto:
-            return body(sym)
-        with _shuffle_override(
-            spark, _graph_shuffle_target(spark, sym.count())
-        ):
-            return body(sym)
+    e = edges.select(
+        F.col(src_col).cast("string").alias("a"),
+        F.col(dst_col).cast("string").alias("b"),
+    ).filter(
+        F.col("a").isNotNull()
+        & F.col("b").isNotNull()
+        & (F.col("a") != F.col("b"))
+    )
+    sym = (
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .persist()
+    )
+    tbl = bounded_arrow(sym, DRIVER_GRAPH_EDGE_CAP)
+    if tbl is None:
+        return body(sym)
+    sym.unpersist()
+    return driver(edges.sparkSession, tbl)
 
 
 def _lpa_body(sym: DataFrame, n_iter: int) -> DataFrame:
@@ -770,7 +686,6 @@ def kcore(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 100,
-    shuffle_partitions: int | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Core number per node -- the largest k such that the node sits in
@@ -804,21 +719,18 @@ def kcore(
     carries a full unrolled-CTE DuckDB twin (queries/analytics.py
     _kcore_oracle, unrolled to KCORE_ORACLE_ROUNDS -- see the constant
     there for the convergence-headroom argument); peeling-reference
-    equality
-    in tests/test_graph.py. ``shuffle_partitions``: see
-    _shuffle_override (the small-graph execution knob shared with
-    pagerank/LPA; never a semantics knob). ``stats_out``: optional dict
-    the call fills with {rounds, sec_iterating, sec_per_round} -- the
-    iteration executes eagerly (localCheckpoint per round), so these are
-    real measurements, exposed so the scale probe can decompose a wall
-    ratio into algorithmic rounds x per-round cost (VERDICT r10 #2).
-    ``"auto"`` (r14) derives the target from the measured
-    symmetrized-edge count, clamped to the session default -- see
-    _graph_shuffle_target. Graphs up to DRIVER_GRAPH_EDGE_CAP
-    symmetrized edges run on the driver (see operators/driver_path.py);
-    ``stats_out`` reports whichever loop ran."""
+    equality in tests/test_graph.py. Runs at the session's shuffle
+    width; only triangle_counts sizes its shuffles from its edge count.
+    ``stats_out``: optional dict the call fills with {rounds,
+    sec_iterating, sec_per_round} -- the iteration executes eagerly
+    (localCheckpoint per round), so these are real measurements,
+    exposed so the scale probe can decompose a wall ratio into
+    algorithmic rounds x per-round cost (VERDICT r10 #2). Graphs up to
+    DRIVER_GRAPH_EDGE_CAP symmetrized edges run on the driver (see
+    operators/driver_path.py); ``stats_out`` reports whichever loop
+    ran."""
     return _undirected_loop(
-        edges, src_col, dst_col, shuffle_partitions,
+        edges, src_col, dst_col,
         lambda spark, tbl: _kcore_driver(spark, tbl, max_iter, stats_out),
         lambda sym: _kcore_body(sym, max_iter, stats_out),
     )

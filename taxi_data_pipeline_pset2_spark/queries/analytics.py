@@ -14,16 +14,6 @@ from pyspark.sql import functions as F
 from taxi_data_pipeline_pset2_spark.queries._helpers import t
 from taxi_data_pipeline_pset2_spark.queries.catalog import query
 
-# Bench-scale execution knob shared by the three iterative-graph catalog
-# entries (pagerank_supplier_customer, brand_communities, part_kcore):
-# their graphs top out at ~600k edges / 16k nodes at bench scale. The
-# r9-r13 rounds passed a literal 8 here; since r14 every graph entry
-# passes shuffle_partitions="auto" and the OPERATOR derives the width
-# from its own measured edge count (operators/graph.py
-# _graph_shuffle_target: clamp(ceil(edges/8192), 2, session default)) --
-# data-derived, never a semantics knob, and a no-op at real scale where
-# the clamp lands on the cluster-tuned default (VERDICT r13 #4).
-
 _BASKET_ORACLE = """
     WITH bi AS (
       SELECT DISTINCT l_orderkey AS b, p_brand AS i
@@ -621,31 +611,36 @@ def _pagerank_oracle(n_iter: int = 8, damping: float = 0.85, limit: int = 25) ->
     expression left-associated exactly as the Spark column expression,
     and the final 8-dp rounding via the shared scaled-bigint discipline.
     The only cross-engine difference left is double SUM order, whose
-    ~1e-16 noise is 7 orders of magnitude under the rounding grain."""
+    ~1e-16 noise is 7 orders of magnitude under the rounding grain.
+    Every CTE is MATERIALIZED: each round reads the previous one twice,
+    so DuckDB's inlining would expand 2^rounds copies of the chain."""
     tele = repr(1.0 - damping)
     d = repr(damping)
     parts = [
-        """edges AS (
+        """edges AS MATERIALIZED (
             SELECT 's' || l_suppkey AS src, 'c' || o_custkey AS dst,
                    CAST(1 AS DOUBLE) AS w
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        nn AS (SELECT count(*) AS n FROM nodes),
-        deg AS (SELECT src, sum(w) AS deg FROM edges GROUP BY src),
-        r0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS rank
+        nodes AS MATERIALIZED (
+            SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+        nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
+        deg AS MATERIALIZED (SELECT src, sum(w) AS deg FROM edges GROUP BY src),
+        r0 AS MATERIALIZED (SELECT node, CAST(1 AS DOUBLE) / nn.n AS rank
                FROM nodes CROSS JOIN nn)"""
     ]
     prev = "r0"
     for k in range(1, n_iter + 1):
         parts.append(
-            f"""d{k} AS (SELECT coalesce(sum(r.rank), CAST(0 AS DOUBLE)) AS dang
+            f"""d{k} AS MATERIALIZED (
+                 SELECT coalesce(sum(r.rank), CAST(0 AS DOUBLE)) AS dang
                  FROM {prev} r LEFT JOIN deg ON r.node = deg.src
                  WHERE deg.src IS NULL),
-        c{k} AS (SELECT e.dst AS node, sum(r.rank * e.w / dg.deg) AS contrib
+        c{k} AS MATERIALIZED (
+                 SELECT e.dst AS node, sum(r.rank * e.w / dg.deg) AS contrib
                  FROM edges e JOIN {prev} r ON e.src = r.node
                       JOIN deg dg ON e.src = dg.src
                  GROUP BY e.dst),
-        r{k} AS (SELECT nd.node,
+        r{k} AS MATERIALIZED (SELECT nd.node,
                         CAST({tele} AS DOUBLE) / nn.n
                         + CAST({d} AS DOUBLE) * d{k}.dang / nn.n
                         + CAST({d} AS DOUBLE)
@@ -688,9 +683,7 @@ def pagerank_supplier_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("s"), F.col("l_suppkey")).alias("src"),
         F.concat(F.lit("c"), F.col("o_custkey")).alias("dst"),
     )
-    return pagerank(
-        edges, n_iter=8, shuffle_partitions="auto"
-    ).limit(25)
+    return pagerank(edges, n_iter=8).limit(25)
 
 
 _GINI_ORACLE = """
@@ -1438,9 +1431,7 @@ def brand_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(40)
         .select(F.col("item_a").alias("src"), F.col("item_b").alias("dst"))
     )
-    return label_propagation(
-        edges, n_iter=4, shuffle_partitions="auto"
-    )
+    return label_propagation(edges, n_iter=4)
 
 
 _TRI_ORACLE = """
@@ -1537,7 +1528,7 @@ def part_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("x.i").alias("src"), F.col("y.i").alias("dst"))
         .distinct()
     )
-    return triangle_counts(edges, shuffle_partitions="auto")
+    return triangle_counts(edges)
 
 
 # Single source of truth for the k-core oracle's unroll depth, cited by
@@ -1630,9 +1621,7 @@ def part_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("x.i").alias("src"), F.col("y.i").alias("dst"))
     )
-    # kcore runs tens of H-index rounds, so per-round task overhead
-    # dominates at 32-way on the small 1998 co-purchase graph
-    return kcore(edges, shuffle_partitions="auto")
+    return kcore(edges)
 
 
 _ASSORT_ORACLE = """

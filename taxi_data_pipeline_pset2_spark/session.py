@@ -39,15 +39,7 @@ ENGINE_CONFS: dict[str, str] = {
     # side and push it into the big side's scan -- cheap insurance on
     # selective joins at scale.
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    # NOT set: spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-    # (r14, measured and REVERTED). Letting AQE re-partition cached-plan
-    # reads won on scan-reuse shapes (bm25_topk_docs 0.95 -> 0.70 s,
-    # curate_corpus 1.69 -> 1.47 s best-of-4) but coalescing a cached
-    # corpus ALSO narrows the downstream Arrow kernels -- semdedup_pca
-    # regressed 1.93 -> 2.62 s and several kernel-shaped entries crept
-    # +10% -- a net wash-to-loss at bench scale. Revisit per-operator
-    # (a local conf around bm25's two scan passes) rather than
-    # session-wide if the scan-reuse win matters at cluster scale.
+    # canChangeCachedPlanOutputPartitioning stays unset: see OPTIMIZATION_r14.md.
 }
 
 

@@ -548,94 +548,96 @@ def test_pagerank_driver_fast_path_matches_distributed(spark):
     assert fast == dist  # ordered comparison: values AND (desc, asc) order
 
 
-def test_pagerank_shuffle_partitions_equivalence(spark):
-    """shuffle_partitions is an execution knob, never a semantics knob:
-    any value returns the identical table, and the session conf is
-    restored afterwards (including on the invalid-argument path)."""
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
+def test_graph_results_invariant_to_shuffle_width(spark, monkeypatch):
+    """Shuffle width is an execution detail, never a semantics knob.
+    pagerank, LPA and kcore run at the session width: their distributed
+    loops must equal the driver path at every width and never write the
+    conf. triangle_counts is the one operator that sizes its shuffles,
+    once, from its canonical-edge count, and returns identical rows at
+    both extremes of that rule."""
+    from taxi_data_pipeline_pset2_spark.operators import graph
+
+    sized = []
+    real_helper = graph._edge_sized_shuffles
+
+    def spy(session, n_rows):
+        sized.append(n_rows)
+        return real_helper(session, n_rows)
+
+    monkeypatch.setattr(graph, "_edge_sized_shuffles", spy)
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
     df = spark.createDataFrame(edges, "src string, dst string")
+
+    def loops():
+        return (
+            sorted((r.node, r.rank) for r in graph.pagerank(df, n_iter=6).collect()),
+            sorted(map(tuple, graph.label_propagation(df, n_iter=4).collect())),
+            sorted(map(tuple, graph.kcore(df).collect())),
+        )
+
+    base = loops()  # driver fast path
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    # base takes the driver fast path; each probe forces the
-    # DISTRIBUTED loop at a different partitioning, so this pins both
-    # the partitioning-invariance claim and the driver-vs-distributed
-    # two-path equality in one sweep
-    base = sorted((r.node, r.rank) for r in pagerank(df, n_iter=6).collect())
-    for sp in (1, 3, 8):
-        with distributed_only():
-            got = sorted(
-                (r.node, r.rank)
-                for r in pagerank(
-                    df, n_iter=6, shuffle_partitions=sp
-                ).collect()
-            )
-        assert got == base, f"shuffle_partitions={sp} diverged"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    with pytest.raises(ValueError):
-        pagerank(df, shuffle_partitions=0)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    try:
+        for width in ("1", "3", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+            with distributed_only():
+                assert loops() == base, f"width {width} diverged"
+            assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert sized == []
 
-
-def test_kcore_lpa_shuffle_partitions_equivalence(spark):
-    """The shared _shuffle_override knob on kcore/LPA is an execution
-    knob, never a semantics knob; the session conf is restored even on
-    the invalid-argument path."""
-    from taxi_data_pipeline_pset2_spark.operators.graph import (
-        kcore,
-        label_propagation,
-    )
-
-    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    # base takes the driver fast path; each probe forces the
-    # DISTRIBUTED loop, so this sweep pins partitioning-invariance AND
-    # driver-vs-distributed two-path equality for both operators
-    kc_base = sorted(map(tuple, kcore(df).collect()))
-    lpa_base = sorted(map(tuple, label_propagation(df, n_iter=4).collect()))
-    for sp in (1, 8):
-        with distributed_only():
-            kc = kcore(df, shuffle_partitions=sp).collect()
-            lpa = label_propagation(
-                df, n_iter=4, shuffle_partitions=sp
-            ).collect()
-        assert sorted(map(tuple, kc)) == kc_base
-        assert sorted(map(tuple, lpa)) == lpa_base
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    with pytest.raises(ValueError):
-        kcore(df, shuffle_partitions=0)
-    with pytest.raises(ValueError):
-        label_propagation(df, shuffle_partitions=-2)
+    tri = []
+    for rows_per_partition in (1, 10**9):
+        monkeypatch.setattr(
+            graph, "_EDGE_ROWS_PER_SHUFFLE_PARTITION", rows_per_partition
+        )
+        tri.append(sorted(map(tuple, graph.triangle_counts(df).collect())))
+    assert tri[0] == tri[1]
+    assert [r[2] for r in tri[0]] == [1, 1, 1, 0, 0]  # triangle a-b-c
+    # canonical edges: a-b, a-c, b-c, c-d, d-e (c-a collapses onto a-c)
+    assert sized == [5, 5]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_shuffle_override_overlapping_restores_original(spark):
-    """Two OVERLAPPING overrides (the threaded catalog replay runs
+    """Two OVERLAPPING sizing scopes (the threaded catalog replay runs
     graph entries concurrently) must leave the session conf at its TRUE
     original -- naive save/restore would resurrect the inner temporary
     value (A saves 32, sets 8; B saves 8; A restores 32; B 'restores'
     8)."""
     from taxi_data_pipeline_pset2_spark.operators.graph import (
-        _shuffle_override,
+        _EDGE_ROWS_PER_SHUFFLE_PARTITION as rows,
+        _edge_sized_shuffles,
     )
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    with _shuffle_override(spark, 8):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-        with _shuffle_override(spark, 4):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-        # inner exit must NOT restore while the outer is active
-        assert spark.conf.get("spark.sql.shuffle.partitions") != before
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # interleaved (non-nested) exit order: A enters, B enters, A exits,
-    # B exits -- the original must still come back at the END
-    a = _shuffle_override(spark, 8)
-    b = _shuffle_override(spark, 4)
-    a.__enter__()
-    b.__enter__()
-    a.__exit__(None, None, None)
-    assert spark.conf.get("spark.sql.shuffle.partitions") != before
-    b.__exit__(None, None, None)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        with _edge_sized_shuffles(spark, 8 * rows):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+            with _edge_sized_shuffles(spark, 4 * rows):
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+            # inner exit must NOT restore while the outer is active
+            assert spark.conf.get("spark.sql.shuffle.partitions") != "16"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+        # interleaved (non-nested) exit order: A enters, B enters, A
+        # exits, B exits -- the original must still come back at the END
+        a = _edge_sized_shuffles(spark, 8 * rows)
+        b = _edge_sized_shuffles(spark, 4 * rows)
+        a.__enter__()
+        b.__enter__()
+        a.__exit__(None, None, None)
+        assert spark.conf.get("spark.sql.shuffle.partitions") != "16"
+        b.__exit__(None, None, None)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+        # the target clamps to [2, session default]
+        with _edge_sized_shuffles(spark, 0):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+        with _edge_sized_shuffles(spark, 10**6 * rows):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def test_kcore_raises_on_nonconvergence_chain(spark):

@@ -376,46 +376,3 @@ def test_stream_stream_left_outer_interval_join(spark, sf_smoke_dir, tmp_path):
     assert not (got_null & {m[0] for m in want_matched})
     # the watermark must have released at least some outer results
     assert got_null, "expected null-padded outer rows for matchless clicks"
-
-
-def test_transformwithstate_sessionize_matches_legacy_api(spark, events_dir, tmp_path):
-    """The Spark 4 transformWithState sessionizer must emit the same
-    session set as the applyInPandasWithState one on the same input.
-    Skipped where the protobuf dependency of the TWS state-server
-    protocol is absent (this container); the raise path is still
-    asserted."""
-    import pytest
-
-    from taxi_data_pipeline_pset2_spark.streaming.events import sessionize
-    from taxi_data_pipeline_pset2_spark.streaming.tws import (
-        sessionize_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        stream = read_events_stream(spark, events_dir)
-        with pytest.raises(ImportError, match="protobuf"):
-            sessionize_tws(stream)
-        pytest.skip("protobuf unavailable: transformWithState cannot run here")
-
-    def drain(make, name):
-        stream = read_events_stream(spark, events_dir)
-        out = make(stream)
-        (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        return {
-            (r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in spark.table(name).collect()
-        }
-
-    legacy = drain(sessionize, "tws_legacy")
-    tws = drain(sessionize_tws, "tws_new")
-    assert tws == legacy
-    assert tws, "expected closed sessions from the drain"
