@@ -22,9 +22,10 @@ from pyspark.sql import functions as F
 
 
 # Catalyst's "size unknown" sentinel: a leaf with no statistics reports
-# spark.sql.defaultSizeInBytes (default Long.MaxValue), and any plan
-# containing such a leaf propagates to >= this. Treated as "unknown",
-# not "big", below.
+# spark.sql.defaultSizeInBytes (default Long.MaxValue). Operators above
+# it scale that figure (a projection of a stats-less RDD or checkpoint
+# estimates ~3.4e18 B), so a plan with such a leaf is treated as
+# "unknown", not "big", below.
 _STATS_UNKNOWN_BYTES = (1 << 63) - 1
 # One default-sized scan split per spread slot: a frame estimated above
 # target*this is provably wide enough already (its scan alone yields
@@ -84,18 +85,19 @@ def spread_small_input(
         return df  # partitioning is the source's concern per micro-batch
     target = max(df.sparkSession.sparkContext.defaultParallelism // 2, 2)
     try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        leaves = plan.collectLeaves()
         # py4j maps the scala BigInt to a Python int; str() keeps the
         # conversion robust if a Spark version hands back an object.
-        est = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
+        sizes = [
+            int(str(p.stats().sizeInBytes()))
+            for p in [plan, *(leaves.apply(i) for i in range(leaves.size()))]
+        ]
+        # unknown when the plan or any leaf reports the sentinel
+        est = sizes[0] if max(sizes) < _STATS_UNKNOWN_BYTES else None
     except Exception:  # noqa: BLE001 - stats are advisory; fall through
         est = None
-    if (
-        est is not None
-        and est < _STATS_UNKNOWN_BYTES
-        and est > target * _SPREAD_BYTES_PER_SLOT
-    ):
+    if est is not None and est > target * _SPREAD_BYTES_PER_SLOT:
         return df  # provably big: scan parallelism alone covers target
     if df.rdd.getNumPartitions() >= target:
         return df

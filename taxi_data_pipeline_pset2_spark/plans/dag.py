@@ -2,20 +2,17 @@
 
 The reference's orchestration is Mage block DAGs + dbt refs; here a node
 is ``fn(spark, upstreams) -> DataFrame`` and "ref" is a dict lookup.
-Materialization is per-node: ``table`` writes parquet into the warehouse
-dir (optionally partitioned+sorted -- the X1 clustering equivalent) and
-re-reads it, so downstream nodes scan materialized storage exactly like
-dbt's table materialization; ``ephemeral`` passes the lazy plan through.
+Every node is a dbt table: it writes parquet into the warehouse dir
+(optionally partitioned+sorted -- the X1 clustering equivalent) and is
+re-read, so downstream nodes scan materialized storage. Its row count is
+observed on that write, not counted by a second scan.
 
-Execution is sequential in topological order by default -- within each
-node Spark already parallelizes across all cores, so node-level
-threading (dbt's 4/8 threads, ``profiles.yml:12,24``) only helps when
-the cluster is underutilized by a single node. That is false for the
-100 TB fact build but true for the dim-sized nodes around it (a
-4018-row dim build leaves a 1000-executor cluster idle), so
-``run(threads=N)`` opts into dbt-style concurrent execution of
-independent nodes: Spark job submission is thread-safe, each thread
-submits its node's jobs and the scheduler interleaves stages.
+Independent nodes run concurrently, as in dbt (reference
+``profiles.yml:12,24``): a node is submitted as soon as its dependencies
+have materialized, one worker per node. This is safe because the workers
+only submit Spark jobs, Spark job submission is thread-safe and the scheduler
+interleaves the nodes' stages; small dim builds then use cores a single
+node leaves idle.
 """
 
 from __future__ import annotations
@@ -25,7 +22,9 @@ from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 @dataclass(frozen=True)
@@ -33,7 +32,6 @@ class Node:
     name: str
     fn: Callable[..., DataFrame]  # fn(spark, **upstream_dataframes)
     deps: tuple[str, ...] = ()
-    materialization: str = "table"  # "table" | "ephemeral"
     partition_by: tuple[str, ...] = ()
     sort_within_partitions_by: tuple[str, ...] = ()
 
@@ -89,119 +87,81 @@ class Pipeline:
 
     def _run_node(
         self, spark: SparkSession, node: Node, upstream: dict[str, DataFrame]
-    ) -> tuple[DataFrame, NodeResult]:
+    ) -> tuple[DataFrame | None, NodeResult, Exception | None]:
+        """Write one node's table and re-read it. Returns the re-read
+        frame, the node's result and, on failure, the error."""
         t0 = time.perf_counter()
         try:
-            df = node.fn(spark, **upstream)
-            rows = None
-            if node.materialization == "table":
-                path = f"{self.warehouse_dir}/{node.name}"
-                writer = df
-                if node.sort_within_partitions_by:
-                    writer = writer.sortWithinPartitions(
-                        *node.sort_within_partitions_by
-                    )
-                w = writer.write.mode("overwrite")
-                if node.partition_by:
-                    w = w.partitionBy(*node.partition_by)
-                w.parquet(path)
-                df = spark.read.parquet(path)
-                rows = df.count()
-            t1 = time.perf_counter()
-            return df, NodeResult(
-                node.name, "success", t1 - t0, rows, started_at=t0, finished_at=t1
+            observed = Observation()
+            df = node.fn(spark, **upstream).observe(
+                observed, F.count(F.lit(1)).alias("rows")
             )
+            if node.sort_within_partitions_by:
+                df = df.sortWithinPartitions(*node.sort_within_partitions_by)
+            w = df.write.mode("overwrite")
+            if node.partition_by:
+                w = w.partitionBy(*node.partition_by)
+            path = f"{self.warehouse_dir}/{node.name}"
+            w.parquet(path)
+            # only read once the write has returned: after a failed
+            # action the observation holds {'rows': 0} instead of raising
+            rows = observed.get["rows"]
+            table = spark.read.parquet(path)
         except Exception as e:  # noqa: BLE001 - per-node status like Mage
             t1 = time.perf_counter()
-            raise _NodeFailure(
-                NodeResult(
-                    node.name, "failed", t1 - t0, None, str(e), t0, t1
-                )
-            ) from e
+            return None, NodeResult(node.name, "failed", t1 - t0, None, str(e), t0, t1), e
+        t1 = time.perf_counter()
+        return table, NodeResult(node.name, "success", t1 - t0, rows, None, t0, t1), None
 
     def run(
-        self, spark: SparkSession, threads: int = 1
+        self, spark: SparkSession
     ) -> tuple[dict[str, DataFrame], list[NodeResult]]:
-        """Materialize all nodes in dependency order; returns the final
-        DataFrames (reading from materialized storage for tables) and
-        per-node status, mirroring Mage's per-block status tracking
+        """Materialize all nodes, each as soon as its dependencies have;
+        returns the re-read DataFrames and per-node status in topological
+        order, mirroring Mage's per-block status tracking
         (``pipelines/taxi_zones/metadata.yaml:5-33``).
 
-        ``threads`` > 1 runs independent nodes concurrently (dbt's
-        threaded execution, reference ``profiles.yml:12,24``): a node is
-        submitted as soon as every dependency has materialized. Results
-        are returned in topological order either way, and a failure stops
-        new submissions, drains in-flight nodes, then re-raises."""
+        After a failure no further node is submitted and in-flight nodes
+        drain; then the first failure's own exception is re-raised, with
+        the results so far attached as its ``node_results``."""
         order = self._topo_order()
-        if threads <= 1:
-            built: dict[str, DataFrame] = {}
-            results: list[NodeResult] = []
-            for node in order:
-                try:
-                    df, res = self._run_node(
-                        spark, node, {d: built[d] for d in node.deps}
-                    )
-                except _NodeFailure as f:
-                    results.append(f.result)
-                    raise f.__cause__ from None
-                built[node.name] = df
-                results.append(res)
-            return built, results
-        return self._run_concurrent(spark, order, threads)
-
-    def _run_concurrent(
-        self, spark: SparkSession, order: list[Node], threads: int
-    ) -> tuple[dict[str, DataFrame], list[NodeResult]]:
-        built: dict[str, DataFrame] = {}
-        by_result: dict[str, NodeResult] = {}
-        remaining = {n.name: set(n.deps) for n in order}
         nodes = {n.name: n for n in order}
-        failure: _NodeFailure | None = None
-        with ThreadPoolExecutor(max_workers=threads) as pool:
-            futures = {}
+        waiting = {n.name: set(n.deps) for n in order}
+        built: dict[str, DataFrame] = {}
+        finished: dict[str, NodeResult] = {}
+        failure: Exception | None = None
+        # pool workers do not inherit Spark local properties; wrapping
+        # here copies the caller's (job group, description, pool) into them
+        run_node = inheritable_thread_target(spark)(self._run_node)
+        with ThreadPoolExecutor(max_workers=max(len(order), 1)) as pool:
+            running = {}
 
             def submit_ready() -> None:
-                for name in [n for n, deps in remaining.items() if not deps]:
-                    del remaining[name]
+                for name in [n for n, deps in waiting.items() if not deps]:
+                    del waiting[name]
                     node = nodes[name]
-                    futures[
-                        pool.submit(
-                            self._run_node,
-                            spark,
-                            node,
-                            {d: built[d] for d in node.deps},
-                        )
-                    ] = name
+                    upstream = {d: built[d] for d in node.deps}
+                    running[pool.submit(run_node, spark, node, upstream)] = name
 
             submit_ready()
-            while futures:
-                done, _ = wait(futures, return_when=FIRST_COMPLETED)
+            while running:
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
                 for fut in done:
-                    name = futures.pop(fut)
-                    try:
-                        df, res = fut.result()
-                    except _NodeFailure as f:
-                        by_result[name] = f.result
-                        failure = failure or f
+                    name = running.pop(fut)
+                    table, finished[name], error = fut.result()
+                    if error is not None:
+                        failure = failure or error
                         continue
-                    built[name] = df
-                    by_result[name] = res
-                    for deps in remaining.values():
+                    built[name] = table
+                    for deps in waiting.values():
                         deps.discard(name)
                 if failure is None:
-                    submit_ready()  # stop submitting after a failure
-        results = [by_result[n.name] for n in order if n.name in by_result]
+                    submit_ready()
+        results = [finished[n.name] for n in order if n.name in finished]
         if failure is not None:
-            raise failure.__cause__ from None
+            failure.node_results = results
+            raise failure
         return built, results
-
-
-class _NodeFailure(Exception):
-    """Carries the failed NodeResult across the executor boundary."""
-
-    def __init__(self, result: NodeResult):
-        super().__init__(result.error)
-        self.result = result
 
 
 def taxi_pipeline(

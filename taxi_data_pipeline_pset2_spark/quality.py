@@ -24,9 +24,8 @@ def not_null(df: DataFrame, col: str) -> DataFrame:
 def unique(df: DataFrame, col: str) -> DataFrame:
     """dbt's unique: duplicate NON-NULL keys. NULLs are not keys and are
     not flagged here (dbt's compiled test filters them out; missing keys
-    are not_null's one concern -- the accepted_range composition rule).
-    r11 fix: NULL duplicate groups were previously flagged, diverging
-    from dbt on tables with legitimately-absent keys."""
+    are not_null's one concern -- the accepted_range composition rule),
+    so tables with legitimately-absent keys pass."""
     return (
         df.filter(F.col(col).isNotNull())
         .groupBy(col)
@@ -39,9 +38,8 @@ def unique(df: DataFrame, col: str) -> DataFrame:
 def accepted_values(df: DataFrame, col: str, values: Sequence) -> DataFrame:
     """dbt's accepted_values: NON-NULL values outside the list. NULLs
     pass (dbt's `col NOT IN (...)` is NULL for NULL, hence unselected)
-    -- compose with not_null when both are required. r11 fix: NULLs
-    were previously flagged here too, double-covering not_null's
-    concern and diverging from dbt."""
+    -- compose with not_null when both are required, so the two tests
+    never double-cover a NULL."""
     return df.filter(
         F.col(col).isNotNull() & ~F.col(col).isin(list(values))
     ).select(F.col(col).cast("string").alias("unexpected_value"))
@@ -64,12 +62,12 @@ class TestResult:
 
 
 def run_tests(cases: dict[str, DataFrame]) -> list[TestResult]:
-    """Run the whole suite as ONE Spark job: every violation frame is
+    """Run the whole suite as ONE Spark action: every violation frame is
     projected to a tagged literal and unioned, then a single aggregate
-    counts failures per test. With 32 per-test ``count()`` actions the
-    scheduler overhead dominates and each test re-plans its inputs; one
-    unioned job lets Spark share scans between tests over the same table
-    and round-trips the cluster once."""
+    counts failures per test. 32 per-test ``count()`` actions would pay
+    the per-job scheduling overhead 32 times; the union pays it once.
+    It does not share scans: union keeps one scan per test input, so the
+    reference suite still reads its tables 36 times in one plan."""
     if not cases:
         return []
     it = iter(cases.items())

@@ -204,6 +204,23 @@ def test_spread_small_input_conditional(spark):
     assert spread_small_input(huge) is huge
 
 
+def test_spread_small_input_projection_over_checkpoint(spark):
+    """A stats-less leaf (an RDD-built frame, here checkpointed) reports
+    Long.MaxValue; a projection above it scales that to a finite ~3.4e18
+    B. The estimate must still read as unknown, not provably big, so the
+    1-partition frame takes the partition-count probe and is spread."""
+    from taxi_data_pipeline_pset2_spark.operators.skew import spread_small_input
+
+    target = max(spark.sparkContext.defaultParallelism // 2, 2)
+    rdd = spark.sparkContext.parallelize([(i, f"v{i}") for i in range(100)], 1)
+    frame = spark.createDataFrame(rdd, "id long, v string").localCheckpoint()
+    projected = frame.select("id")
+    assert projected.rdd.getNumPartitions() == 1
+    out = spread_small_input(projected)
+    assert out.rdd.getNumPartitions() == target
+    assert sorted(r.id for r in out.collect()) == list(range(100))
+
+
 def test_asof_null_payload_row_is_matched_atomically(spark):
     """r11: the carried state is one struct per right row -- a right row
     with a legitimately-NULL payload column must BE the match (with its

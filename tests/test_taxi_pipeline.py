@@ -18,7 +18,7 @@ from taxi_data_pipeline_pset2_spark.sources.taxi_fixtures import (
 
 
 @pytest.fixture(scope="module")
-def medallion(spark, tmp_path_factory):
+def medallion_run(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("warehouse"))
     yellow = gen_yellow(spark, 30_000)
     green = gen_green(spark, 6_000)
@@ -26,7 +26,12 @@ def medallion(spark, tmp_path_factory):
     pipe = taxi_pipeline(wh, yellow, green, zones)
     built, results = pipe.run(spark)
     assert all(r.status == "success" for r in results), results
-    return built
+    return built, results
+
+
+@pytest.fixture(scope="module")
+def medallion(medallion_run):
+    return medallion_run[0]
 
 
 def test_row_flow(medallion):
@@ -217,27 +222,15 @@ def test_fct_derived_metrics_sane(medallion):
     assert fct.filter(F.col("tip_percentage") < 0).count() == 0
 
 
-def test_threaded_dag_matches_sequential_and_overlaps(spark, tmp_path, medallion):
-    """run(threads=4): independent dims build concurrently (dbt's
-    threaded execution, reference profiles.yml:12,24) with results
-    identical to the sequential run."""
-    wh = str(tmp_path / "wh_threaded")
-    yellow = gen_yellow(spark, 30_000)
-    green = gen_green(spark, 6_000)
-    zones = gen_zones(spark)
-    built, results = taxi_pipeline(wh, yellow, green, zones).run(spark, threads=4)
-    assert all(r.status == "success" for r in results), results
+def test_dag_results_in_topological_order_and_dims_overlap(medallion_run):
+    """Results come back in topological order, and independent dims
+    build concurrently (dbt's threaded execution, reference
+    profiles.yml:12,24): at least one pair of dim builds overlapped."""
+    _, results = medallion_run
     assert [r.name for r in results] == [
         "stg_trips_unified", "dim_date", "dim_zone", "dim_payment_type",
         "dim_rate_code", "fct_trips",
     ]
-    # identical results to the (module-fixture) sequential run
-    for name in built:
-        assert built[name].count() == medallion[name].count(), name
-    seq_fct = {r.trip_id for r in medallion["fct_trips"].select("trip_id").collect()}
-    thr_fct = {r.trip_id for r in built["fct_trips"].select("trip_id").collect()}
-    assert seq_fct == thr_fct
-    # concurrency observed: at least one pair of dim builds overlapped
     spans = {
         r.name: (r.started_at, r.finished_at)
         for r in results
@@ -250,6 +243,86 @@ def test_threaded_dag_matches_sequential_and_overlaps(spark, tmp_path, medallion
         for b in names[i + 1:]
     )
     assert overlap, f"no dim builds overlapped: {spans}"
+
+
+def test_node_rows_observed_on_write_match_tables(medallion_run):
+    """NodeResult.rows comes from an observation on the node's write;
+    it must equal a count of the table that write left behind."""
+    built, results = medallion_run
+    for r in results:
+        assert r.rows == built[r.name].count(), r.name
+
+
+def test_zero_row_node_reports_zero_rows(spark, tmp_path):
+    from taxi_data_pipeline_pset2_spark.plans.dag import Node, Pipeline
+
+    built, results = (
+        Pipeline(str(tmp_path))
+        .add(Node("filtered", lambda spark: spark.range(10).filter("id < 0")))
+        .add(Node("local", lambda spark: spark.createDataFrame([], "a int")))
+        .run(spark)
+    )
+    assert [(r.status, r.rows) for r in results] == [("success", 0)] * 2
+    assert all(built[r.name].count() == 0 for r in results)
+
+
+def test_failed_node_stops_dependents_and_reraises(spark, tmp_path):
+    """A node failing at execution time reports failed with rows None
+    (its observation would read 0), its dependent is never submitted,
+    the in-flight independent node drains, and the write's own exception
+    type is re-raised."""
+    from pyspark.errors import SparkRuntimeException
+
+    from taxi_data_pipeline_pset2_spark.plans.dag import Node, Pipeline
+
+    called = []
+
+    def dependent(spark, bad):
+        called.append("dependent")
+        return bad
+
+    pipe = (
+        Pipeline(str(tmp_path))
+        .add(Node("bad", lambda spark: spark.range(3).select(
+            F.raise_error(F.lit("planted")).alias("x"))))
+        .add(Node("dependent", dependent, deps=("bad",)))
+        .add(Node("independent", lambda spark: spark.range(5)))
+    )
+    with pytest.raises(SparkRuntimeException, match="planted") as info:
+        pipe.run(spark)
+    by_name = {r.name: r for r in info.value.node_results}
+    assert set(by_name) == {"bad", "independent"}
+    assert by_name["bad"].status == "failed" and by_name["bad"].rows is None
+    assert "planted" in by_name["bad"].error
+    assert (by_name["independent"].status, by_name["independent"].rows) == ("success", 5)
+    assert not called
+
+
+def test_concurrent_nodes_keep_callers_job_group(spark, tmp_path):
+    """Spark local properties do not follow pool workers on their own:
+    both concurrently built nodes' jobs must land in the caller's job
+    group, and none outside it."""
+    from taxi_data_pipeline_pset2_spark.plans.dag import Node, Pipeline
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("dag-test", "two-node pipeline")
+    try:
+        _, results = (
+            Pipeline(str(tmp_path))
+            .add(Node("a", lambda spark: spark.range(5)))
+            .add(Node("b", lambda spark: spark.range(7)))
+            .run(spark)
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    (a0, a1), (b0, b1) = [(r.started_at, r.finished_at) for r in results]
+    assert a0 < b1 and b0 < a1, "nodes did not run concurrently"
+    assert len(tracker.getJobIdsForGroup("dag-test")) >= len(results)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
 
 
 def test_extended_expectations(spark):
