@@ -52,264 +52,14 @@ def query(
     return deco
 
 
-# The driver's correctness sweep records at most 50 queries in registry
-# order (provably: 84 registered -> 50 recorded in r5), so the first 50
-# slots are pinned EXPLICITLY below. _WINDOW is a curated, rotating set:
-# entries already hash-proven by a prior driver round yield their slots
-# to oracles that have never had a driver row, so every oracle
-# accumulates external evidence across rounds (VERDICT r5 item #2),
-# while every core SURVEY 2 operator family keeps at least one
-# in-window anchor. Everything NOT in _WINDOW follows in registration
-# order -- newly added entries therefore land PAST the cap by default
-# (they are hash-replayed by tests/test_catalog_oracle.py immediately,
-# and become rotation candidates next round) instead of silently
-# displacing a window anchor, which bit this round twice before the
-# window became explicit.
-#
-# r6 rotation summary: 16 first-time rows (range join, z-score,
-# sentiment, vocab, quantile bins, grouping sets, set ops, supplier
-# rollup, vectorized kNN, windowed funnel, DSIR, changelog-maintained
-# rollup, SCD2 as-of, event transitions) replacing r5-proven entries
-# whose families keep siblings in-window (case_flags,
-# trip_duration_metrics, dedup_simhash, gopher_quality_flags,
-# price_band_totals, mixture_exact_sample, winsorized_price_stats,
-# per_group_sample_rows, unpivot_wide_metrics, hash_split_counts,
-# scd2_history, funnel_conversion, session_counts, rollup_revenue).
-#
-# r7 rotation: the 13 never-recorded oracles (VERDICT r6 item 2:
-# search x2, LOCF, Hampel, PSI, chi-square, linreg, weighted median,
-# SCD2-incremental, rank blend, quality-mass, IVF kNN, docs profile)
-# replace r6-proven entries whose families keep in-window siblings:
-# tfidf_vectors (-> term_document_frequency), multimodal_frame_sample
-# (-> multimodal_resize), semantic_decontamination
-# (-> decontamination_scores), dedup_exact / dedup_ngram_jaccard /
-# dedup_embedding_cosine (-> dedup_minhash_lsh, dedup_embedding_lsh),
-# knn_bruteforce_vectorized (-> knn_ivf_label), zscore_price_outliers
-# (-> weighted_median_tokens, quality_rank_blend), event_transitions
-# (-> hourly_value_locf, hampel_value_outliers), scd2_as_of_snapshot
-# (-> scd2_incremental_apply), quantile_binned_prices (-> docs_profile),
-# sentiment_scores (-> vocab_top_tokens et al.), weighted_sample_topn
-# (-> quality_mass_selection).
-#
-# r8 rotation candidates (registered r7, oracled, no driver row yet):
-# asof_next_purchase, asof_nearest_purchase, ewma_user_value,
-# tfidf_cosine_docs, leakage_safe_split_docs, group_kfold_docs,
-# temporal_split_events, rolling_features_user_value,
-# hard_negatives_topk, oov_rate_docs, jaro_winkler_matches,
-# blocklist_safety_flags, source_quality_profile, bigram_doc_logprob,
-# class_weights_events, rolling_origin_backtest, metric_corr_matrix,
-# status_priority_mi, sft_loss_masks, auc_order_status,
-# calibration_price_prob, kappa_price_status, decile_lift_orders,
-# retrieval_eval_knn, quantile_normalized_length, bootstrap_ci_price,
-# rrf_fuse_knn, welch_price_priority, mannwhitney_price_priority;
-# isotonic_calibration is rows-only (iterative PAVA).
-# Added mid-r7 (oracled, no driver row yet): cuped_price_linestatus,
-# brand_association_rules, fulfillment_survival_km,
-# user_value_changepoint, benford_price_audit, pmi_collocations_docs,
-# customer_rfm_segments, gini_customer_spend, event_type_entropy,
-# abc_brand_revenue, purchase_attribution, top_user_paths,
-# seasonal_naive_mase, cms_partkey_counts, props_payload_stats;
-# rows-only: pq_ann_topk, ivfpq_ann_topk, pagerank_supplier_customer,
-# brand_communities.
-# Added late-r7 (oracled, no driver row yet): part_triangle_stats,
-# spearman_qty_price, acf_daily_orders, seasonal_daily_orders,
-# user_event_coverage, pareto_parts_price_size, brand_item_neighbors,
-# theilsen_monthly_revenue, user_interarrival_stats,
-# customers_near_suppliers, ivm_join_view_maintenance,
-# brand_target_encoding, user_key_skew, rolling_7day_users,
-# multimodal_png_dims, funnel_step_timings, inferred_dim_members,
-# cms_join_size_estimate, kmv_customer_overlap, ks_price_by_urgency,
-# seasonal_outlier_days, k_anonymity_audit, pseudonymized_customers,
-# orders_table_checksum, hashed_doc_features, modal_priority_by_status,
-# user_value_twap, part_graph_assortativity, cohort_ltv_curves,
-# hourly_value_interpolated, order_sequence_gaps, seasonal_naive_pinball,
-# embedding_quantization_audit, cross_source_dup_matrix,
-# variant_assignment_srm, ctr_ratio_delta, lineitem_storage_report,
-# aov_mix_decomposition, lsh_recall_audit;
-# rows-only:
-# part_kcore.
-# Added r8 (oracled, no driver row yet -- r9 rotation candidates, in
-# keeping with the r8 new-family freeze only ONE net-new entry):
-# lsh_tuned_recall_audit (the 0.4-tuned design lsh_params_for derives;
-# measured recall 0.915 >= the 0.9 floor it was derived for, closing
-# VERDICT r7 item #3); scalable_rank_positions (bucketed global rank --
-# the rank-at-scale answer to the distinct-value offset ceiling,
-# oracled against the naive single sort). Two net-new entries total,
-# both in existing families.
-# r9 rotation EXECUTION ORDER (once CORRECTNESS_r08 proves the current
-# window): keep the same 7 minimum anchors, swap the 43 r8-proven rows
-# out, and fill oldest-candidate-first -- (1) props_payload_stats (the
-# one mid-r7 candidate that missed the r8 cut), (2) the late-r7 list
-# above in its written order (part_triangle_stats ... lsh_recall_audit,
-# incl. the new-family firsts: spatial customers_near_suppliers,
-# privacy pseudonymized_customers / k_anonymity_audit, audit
-# orders_table_checksum, kmv kmv_customer_overlap), which fills the
-# window at 43; then r10 takes (3) the r8 additions/upgrades
-# (lsh_tuned_recall_audit, scalable_rank_positions,
-# pagerank_supplier_customer, isotonic_calibration, mmr_rerank_topk,
-# brand_communities, part_kcore) and (4) the r1-r4-era rows whose
-# driver records predate the kept CORRECTNESS_r05+ files (values_dim,
-# string_functions, datetime_functions, hash_surrogate_ids,
-# dim_with_default_member, distinct_segments, rolling_avg_value,
-# load_manifest_months, recent_clicks_before_error, text_quality,
-# lang_id, token_fingerprints, multimodal_metadata) -- after r10 every
-# oracled entry has a driver row in the kept record window.
-#
-# Upgraded r8 from rows-only to full oracles (also r9 rotation
-# candidates): pagerank_supplier_customer (8-round power iteration
-# unrolled to chained CTEs, repr()-injected IEEE literals),
-# isotonic_calibration (minimax closed form), mmr_rerank_topk (5 greedy
-# rounds unrolled), brand_communities (4 LPA rounds, all-integer),
-# part_kcore (H-index iteration, idempotent fixpoint, fixed-round
-# unroll AS MATERIALIZED); curation_drop_audit (the first-drop-gate
-# CASE chain, each gate re-stated with its standalone oracle's proven
-# fragment); phonetic_matches (soundex re-implemented in DuckDB list
-# ops, vector-battery-pinned against F.soundex incl. the H/W rule).
-# The 3 entries still rows-only all have a genuine blocker: zlib
-# bytes (compression_ratio_docs) and Spark-internal HLL/KLL sketch
-# registers (approx_event_profile, sketch_rollup_daily_users). r9
-# cleared SIX: ann_brp_lsh (seeded MLlib RNG replaced by deterministic
-# md5 projections), packing_assignments (BFD unrolled into an ordered
-# recursive CTE), kmeans_clusters (exact-integer Lloyd's), pq_ann_topk
-# (exact-integer driver _lloyd -> the whole train/encode/ADC pipeline
-# unrolled, ~250 materialized CTEs), ivfpq_ann_topk (exact integer
-# coarse fit + residuals + probe ranking -> ~270 CTEs), and
-# semdedup_survivors (exact kmeans chain + exact cosines +
-# recursive-CTE closure + the 6-dp-dist survivor policy).
-#
-# r8 rotation (EXECUTED, per VERDICT r7 item #1): minimum anchors =
-# the six golden taxi queries + integrity_checks; the other 43 slots
-# went to the never-rowed oracles, oldest first: all 29 of the
-# r7-early list (asof_next_purchase ... mannwhitney_price_priority),
-# then the first 14 of mid-r7 (cuped_price_linestatus ...
-# cms_partkey_counts). CORRECTNESS_r08: 50/50 green, 43 first-time.
-#
-# r9 rotation (EXECUTED, per VERDICT r8 item #1): same 7 anchors; the
-# 43 r8-proven rows yield their slots oldest-candidate-first --
-# props_payload_stats (the one mid-r7 candidate that missed the r8
-# cut), then the late-r7 list in its written order (part_triangle_stats
-# ... lsh_recall_audit, 39 entries, incl. the new-family firsts:
-# spatial customers_near_suppliers, privacy pseudonymized_customers /
-# k_anonymity_audit, audit orders_table_checksum, kmv
-# kmv_customer_overlap), then the first 3 of the r8
-# additions/upgrades (lsh_tuned_recall_audit, scalable_rank_positions,
-# pagerank_supplier_customer -- the graph upgrade first because an
-# iterative op hash-matching its unrolled-CTE twin on the driver is
-# the strongest evidence the rotation can buy). Entries rotated OUT
-# this round (the 43 r8 first-timers) keep their green driver rows on
-# file and the local hash-replay in tests/test_catalog_oracle.py;
-# monthly_trend additionally stays smoke-checked every round via
-# entry().
-#
-# r10 rotation (EXECUTED, per VERDICT r9 item #1): same 7 anchors; the
-# 43 r9-proven rows yield their slots to (1) the three giant-oracle
-# upgrades FIRST (pq_ann_topk ~250 CTEs, ivfpq_ann_topk ~270 CTEs,
-# semdedup_survivors -- early in the window per the judge's note:
-# driver-side DuckDB planner/memory behavior was the one untested
-# variable, so they were additionally pre-flighted in a fresh default-
-# memory process at sf0.01 incl. the hostile-TZ variant before this
-# window was committed), (2) the remaining r8 upgrades
-# (isotonic_calibration, mmr_rerank_topk, brand_communities,
-# part_kcore), (3) the remaining r9 upgrades/additions (ann_brp_lsh,
-# packing_assignments, kmeans_clusters, kmeans_centroids,
-# brp_recall_audit, kmv_rollup_weekly_users), (4) the 13 r1-r4-era rows
-# whose driver records predate the kept CORRECTNESS_r05+ files
-# (values_dim ... multimodal_metadata) -- 26 swaps, after which EVERY
-# oracled entry has a driver row in the kept record window -- and
-# (5) the 17 second-pass freshness slots, oldest round first: all 14
-# rows whose latest driver record is r5 (price_band_totals ...
-# case_flags, in r5 record order) + the first 3 of the r6-only list
-# (tfidf_vectors, multimodal_frame_sample, semantic_decontamination).
-#
-# r11 rotation (EXECUTED, per VERDICT r10 item #1; CORRECTNESS_r10 was
-# 50/50 green on the r10 window, judge-verified name-for-name): keep the
-# same 7 anchors; the 43 r10-proven rows yield their
-# slots to -- (1) the 3 never-rowed r10 additions FIRST (bm25_topk_docs,
-# pq_recall_audit, ivfpq_recall_audit -- the recall twins compose the
-# ~250/~270-CTE chains with the shared _exact_recall_ctes tail, so they
-# go early for the same reason the giant oracles did in r10: driver-side
-# DuckDB behavior on the composed statement is the one untested
-# variable), then the freshness second pass, oldest driver record first:
-# (2) the 10 remaining r6-only rows (zscore_price_outliers,
-# sentiment_scores, quantile_binned_prices, knn_bruteforce_vectorized,
-# dedup_exact, dedup_ngram_jaccard, dedup_embedding_cosine,
-# scd2_as_of_snapshot, event_transitions, weighted_sample_topn, in r6
-# record order), then (3) the first 30 of the r7-only list in its r7
-# record order (term_document_frequency, boolean_and_search,
-# multimodal_resize, phrase_search_hits, hourly_value_locf,
-# dedup_components, session_maintenance_overlap, hampel_value_outliers,
-# lang_distribution_psi, vocab_top_tokens, docs_profile,
-# rollup_grouping_sets, set_ops_customers, supplier_balance_by_region,
-# knn_ivf_label, funnel_conversion_windowed, status_priority_association,
-# price_trend_by_priority, dedup_minhash_lsh, weighted_median_tokens,
-# dedup_embedding_lsh, snapshot_diff_orders, dsir_topk_selection,
-# rollup_changelog_maintenance, scd2_incremental_apply,
-# quality_rank_blend, decontamination_scores, pivot_category_totals,
-# heavy_hitters_brand, quality_mass_selection). All three never-rowed
-# entries were pre-flighted fresh-process at sf0.01 in default env AND
-# under TZ=Pacific/Chatham (scripts/preflight_entries.py) before this
-# window was committed -- all green both ways.
-#
-# r12 rotation EXECUTION ORDER (once CORRECTNESS_r11 proves the current
-# window): keep the same 7 anchors; swap the 43 r11-proven rows for --
-# (1) the 3 net-new r11 entries FIRST (fuzzy_blocking_recall_audit,
-# minhash_recall_audit, simhash_recall_audit -- oracle-green locally at
-# both sweep SFs, no driver row yet), (2) the remaining 13 r7-only rows
-# in r7 record order
-# (reconstructed from the r7-era _WINDOW at git 2ae4eab minus the 30
-# rotated in this round): fuzzy_blocked_matches, unigram_doc_logprob,
-# duplicated_spans_docs, chunk_documents_tokens, cohort_retention_weekly,
-# coverage_gap_detection, events_hourly, asof_last_purchase,
-# monthly_trend, date_dim, union_unify_schemas, quality_filter,
-# ranked_in_group; then (3) the oldest r8-only rows in r8 record order
-# (r8-era _WINDOW at git ecf2796) until the window fills at 50 -- with
-# 3 net-new + 13 r7-only that leaves 27 r8-only slots:
-# asof_next_purchase, asof_nearest_purchase, ewma_user_value,
-# tfidf_cosine_docs, leakage_safe_split_docs, group_kfold_docs,
-# temporal_split_events, rolling_features_user_value, hard_negatives_topk,
-# oov_rate_docs, jaro_winkler_matches, blocklist_safety_flags,
-# source_quality_profile, bigram_doc_logprob, class_weights_events,
-# rolling_origin_backtest, metric_corr_matrix, status_priority_mi,
-# sft_loss_masks, auc_order_status, calibration_price_prob,
-# kappa_price_status, decile_lift_orders, retrieval_eval_knn,
-# quantile_normalized_length, bootstrap_ci_price, rrf_fuse_knn
-# (first 27 of the 43-row r8-only list; r13 continues from
-# welch_price_priority).
-#
-# r12 rotation (EXECUTED, per VERDICT r11 item #1; CORRECTNESS_r11 was
-# 50/50 green on the r11 window, judge-verified name-for-name). The
-# window below is exactly the pre-written order above. All three
-# never-rowed r11 audit entries were pre-flighted fresh-process at
-# sf0.01 in default env AND under TZ=Pacific/Chatham
-# (scripts/preflight_entries.py) before this window was committed.
-#
-# r13 rotation EXECUTION ORDER (once CORRECTNESS_r12 proves this
-# window): keep the same 7 anchors; swap the 43 r12-proven rows for --
-# (1) any net-new r12 entries without a driver row FIRST (the sketch
-# accuracy audits: cms_error_audit, kmv_error_audit,
-# misra_gries_bound_audit), then (2) the remaining 16 r8-only rows in
-# r8 record order (continuing from welch_price_priority):
-# welch_price_priority, mannwhitney_price_priority,
-# cuped_price_linestatus, brand_association_rules,
-# fulfillment_survival_km, user_value_changepoint, benford_price_audit,
-# pmi_collocations_docs, customer_rfm_segments, gini_customer_spend,
-# event_type_entropy, abc_brand_revenue, purchase_attribution,
-# top_user_paths, seasonal_naive_mase, cms_partkey_counts; then
-# (3) the oldest r9-only rows in r9 record order (r9-era _WINDOW at the
-# CORRECTNESS_r09 commit) until the window fills at 50 -- with 3
-# net-new + 16 r8-only that leaves 24 r9-only slots:
-# props_payload_stats, part_triangle_stats, spearman_qty_price,
-# acf_daily_orders, seasonal_daily_orders, user_event_coverage,
-# pareto_parts_price_size, brand_item_neighbors,
-# theilsen_monthly_revenue, user_interarrival_stats,
-# customers_near_suppliers, ivm_join_view_maintenance,
-# brand_target_encoding, user_key_skew, rolling_7day_users,
-# multimodal_png_dims, funnel_step_timings, inferred_dim_members,
-# cms_join_size_estimate, kmv_customer_overlap, ks_price_by_urgency,
-# seasonal_outlier_days, k_anonymity_audit, pseudonymized_customers
-# (r14 continues from orders_table_checksum).
+# The driver's correctness sweep records at most the first
+# MAX_DRIVER_QUERIES entries in registry order, so those slots are
+# pinned explicitly in _WINDOW. Every entry not in _WINDOW follows in
+# registration order, so a new entry lands past the pinned slots
+# instead of displacing one; rows-only entries (_ROWS_ONLY_TAIL) go
+# last. Which entries held the window in earlier rounds is in git.
 _WINDOW: tuple[str, ...] = (
-    # -- minimum anchors (7) --
+    # -- anchors: the golden taxi queries + integrity_checks --
     "demand_by_zone",
     "pricing_summary",
     "coverage_matrix",
@@ -317,15 +67,10 @@ _WINDOW: tuple[str, ...] = (
     "value_by_daypart",
     "demand_grid",
     "integrity_checks",
-    # -- never-rowed r11 audit entries, early on purpose (3): the
-    # measured-recall rows compose exhaustive ground-truth CTEs into one
-    # statement, so driver-side DuckDB behavior is the one untested
-    # variable --
+    # -- rotating slots --
     "fuzzy_blocking_recall_audit",
     "minhash_recall_audit",
     "simhash_recall_audit",
-    # -- freshness third pass: the 13 remaining r7-only rows, r7 record
-    # order --
     "fuzzy_blocked_matches",
     "unigram_doc_logprob",
     "duplicated_spans_docs",
@@ -339,8 +84,6 @@ _WINDOW: tuple[str, ...] = (
     "union_unify_schemas",
     "quality_filter",
     "ranked_in_group",
-    # -- freshness third pass: first 27 of the r8-only list, r8 record
-    # order --
     "asof_next_purchase",
     "asof_nearest_purchase",
     "ewma_user_value",
@@ -369,20 +112,8 @@ _WINDOW: tuple[str, ...] = (
     "bootstrap_ci_price",
     "rrf_fuse_knn",
 )
-# Rows-only entries kept at the very end of the registry (their driver
-# row would add nothing over the local pytest replay). r9 cleared SIX
-# from this list: ann_brp_lsh (seeded MLlib RNG replaced by
-# deterministic md5 projections + integer bucket/verify arithmetic),
-# packing_assignments (BFD unrolled into an ordered recursive CTE over
-# an encoded-bigint open-bin list), kmeans_clusters (EXACT-INTEGER
-# Lloyd's dissolved the float-argmin blocker), and -- late-round --
-# pq_ann_topk / ivfpq_ann_topk (the exact-integer driver _lloyd let the
-# whole train/encode/ADC pipeline unroll, ~250/~270 materialized CTEs)
-# and semdedup_survivors (exact k-means chain + exact 6-dp cosines +
-# recursive-CTE closure). The THREE that remain each have a genuinely
-# immovable blocker: zlib bytes (compression_ratio_docs) and
-# Spark-internal HLL/KLL sketch registers (approx_event_profile,
-# sketch_rollup_daily_users).
+# Rows-only entries (no oracle: zlib bytes and Spark-internal HLL/KLL
+# sketch registers have no DuckDB twin), kept at the very end.
 _ROWS_ONLY_TAIL: tuple[str, ...] = (
     "compression_ratio_docs",
     "approx_event_profile",

@@ -548,96 +548,108 @@ def test_pagerank_driver_fast_path_matches_distributed(spark):
     assert fast == dist  # ordered comparison: values AND (desc, asc) order
 
 
-def test_graph_results_invariant_to_shuffle_width(spark, monkeypatch):
+def test_graph_results_invariant_to_shuffle_width(spark):
     """Shuffle width is an execution detail, never a semantics knob.
-    pagerank, LPA and kcore run at the session width: their distributed
-    loops must equal the driver path at every width and never write the
-    conf. triangle_counts is the one operator that sizes its shuffles,
-    once, from its canonical-edge count, and returns identical rows at
-    both extremes of that rule."""
+    Every graph operator runs at the session width: the distributed
+    loops of pagerank, LPA and kcore must equal the driver path, and
+    triangle_counts its own rows, at every width, and none may write
+    the conf."""
     from taxi_data_pipeline_pset2_spark.operators import graph
 
-    sized = []
-    real_helper = graph._edge_sized_shuffles
-
-    def spy(session, n_rows):
-        sized.append(n_rows)
-        return real_helper(session, n_rows)
-
-    monkeypatch.setattr(graph, "_edge_sized_shuffles", spy)
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
     df = spark.createDataFrame(edges, "src string, dst string")
 
-    def loops():
+    def results():
         return (
             sorted((r.node, r.rank) for r in graph.pagerank(df, n_iter=6).collect()),
             sorted(map(tuple, graph.label_propagation(df, n_iter=4).collect())),
             sorted(map(tuple, graph.kcore(df).collect())),
+            sorted(map(tuple, graph.triangle_counts(df).collect())),
         )
 
-    base = loops()  # driver fast path
+    base = results()  # driver fast path, session default width
+    assert [r[2] for r in base[3]] == [1, 1, 1, 0, 0]  # triangle a-b-c
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for width in ("1", "3", "8"):
             spark.conf.set("spark.sql.shuffle.partitions", width)
             with distributed_only():
-                assert loops() == base, f"width {width} diverged"
+                assert results() == base, f"width {width} diverged"
             assert spark.conf.get("spark.sql.shuffle.partitions") == width
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    assert sized == []
-
-    tri = []
-    for rows_per_partition in (1, 10**9):
-        monkeypatch.setattr(
-            graph, "_EDGE_ROWS_PER_SHUFFLE_PARTITION", rows_per_partition
-        )
-        tri.append(sorted(map(tuple, graph.triangle_counts(df).collect())))
-    assert tri[0] == tri[1]
-    assert [r[2] for r in tri[0]] == [1, 1, 1, 0, 0]  # triangle a-b-c
-    # canonical edges: a-b, a-c, b-c, c-d, d-e (c-a collapses onto a-c)
-    assert sized == [5, 5]
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_shuffle_override_overlapping_restores_original(spark):
-    """Two OVERLAPPING sizing scopes (the threaded catalog replay runs
-    graph entries concurrently) must leave the session conf at its TRUE
-    original -- naive save/restore would resurrect the inner temporary
-    value (A saves 32, sets 8; B saves 8; A restores 32; B 'restores'
-    8)."""
+def test_lazy_graph_frames_run_no_job(spark):
+    """triangle_counts and degree_assortativity are single lazy plans:
+    building the frame runs no Spark job and caches nothing."""
     from taxi_data_pipeline_pset2_spark.operators.graph import (
-        _EDGE_ROWS_PER_SHUFFLE_PARTITION as rows,
-        _edge_sized_shuffles,
+        degree_assortativity,
+        triangle_counts,
     )
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
+    )
+    sc = spark.sparkContext
+    cached = set(sc._jsc.getPersistentRDDs().keySet())
+    sc.setJobGroup("graph-build", "lazy graph frames")
     try:
-        with _edge_sized_shuffles(spark, 8 * rows):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-            with _edge_sized_shuffles(spark, 4 * rows):
-                assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-            # inner exit must NOT restore while the outer is active
-            assert spark.conf.get("spark.sql.shuffle.partitions") != "16"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
-        # interleaved (non-nested) exit order: A enters, B enters, A
-        # exits, B exits -- the original must still come back at the END
-        a = _edge_sized_shuffles(spark, 8 * rows)
-        b = _edge_sized_shuffles(spark, 4 * rows)
-        a.__enter__()
-        b.__enter__()
-        a.__exit__(None, None, None)
-        assert spark.conf.get("spark.sql.shuffle.partitions") != "16"
-        b.__exit__(None, None, None)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
-        # the target clamps to [2, session default]
-        with _edge_sized_shuffles(spark, 0):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-        with _edge_sized_shuffles(spark, 10**6 * rows):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+        frames = [triangle_counts(df), degree_assortativity(df)]
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("graph-build")) == []
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == cached
+    assert len(frames[0].collect()) == 4
+
+
+_ABC = [("a", 2, 1, 1.0), ("b", 2, 1, 1.0), ("c", 2, 1, 1.0)]
+
+
+@pytest.mark.parametrize(
+    "rows, schema, triangles, assortativity",
+    [
+        ([], "src string, dst string", [], (0, 0, None)),
+        ([(None, None), (None, None)], "src string, dst string", [], (0, 0, None)),
+        ([("a", "a"), ("b", "b")], "src string, dst string", [], (0, 0, None)),
+        (
+            [(None, "a"), ("b", None), ("a", "b"), ("b", "c"), ("c", "a")],
+            "src string, dst string",
+            _ABC,
+            (3, 3, None),
+        ),
+        (
+            [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("c", "a"), ("a", "c")],
+            "src string, dst string",
+            _ABC,
+            (3, 3, None),
+        ),
+        (
+            [(10, 9), (9, 2), (2, 10)],
+            "src bigint, dst bigint",
+            [("10", 2, 1, 1.0), ("2", 2, 1, 1.0), ("9", 2, 1, 1.0)],
+            (3, 3, None),
+        ),
+    ],
+    ids=["empty", "all_null", "self_loop_only", "one_sided_null",
+         "reversed_duplicates", "int_endpoints"],
+)
+def test_triangles_and_assortativity_degenerate_shapes(
+    spark, rows, schema, triangles, assortativity
+):
+    """Both canonical-edge operators agree on what the graph is: NULL
+    endpoints (one-sided or both), self-loops and reversed duplicates
+    drop; integer ids become their string form, ordered as strings."""
+    from taxi_data_pipeline_pset2_spark.operators.graph import (
+        degree_assortativity,
+        triangle_counts,
+    )
+
+    df = spark.createDataFrame(rows, schema)
+    assert [tuple(r) for r in triangle_counts(df).collect()] == triangles
+    assert [tuple(r) for r in degree_assortativity(df).collect()] == [assortativity]
 
 
 def test_kcore_raises_on_nonconvergence_chain(spark):
