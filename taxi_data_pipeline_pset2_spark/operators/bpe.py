@@ -129,8 +129,9 @@ def bpe_learn(
     contract."""
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
-    table = word_symbol_table(docs, text_col).localCheckpoint(eager=True)
-    tbl = bounded_arrow(table, DRIVER_VOCAB_CAP)
+    table, tbl = bounded_arrow(
+        word_symbol_table(docs, text_col), DRIVER_VOCAB_CAP
+    )
     if tbl is not None:
         return _bpe_learn_driver(tbl, n_merges, min_count)
     merges: list[tuple[str, str]] = []
@@ -286,14 +287,12 @@ def tokenize_bpe(
     base = docs.select(F.col(id_col), toks.alias("_toks")).filter(
         F.size("_toks") > 0
     )
-    # checkpointed once: the probe, the collect and the distributed
-    # fallback all read it
-    vocab = (
-        base.select(F.explode("_toks").alias("word"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # checkpointed once by bounded_arrow: the collect and the
+    # distributed fallback both read it
+    vocab, tbl = bounded_arrow(
+        base.select(F.explode("_toks").alias("word")).distinct(),
+        DRIVER_VOCAB_CAP,
     )
-    tbl = bounded_arrow(vocab, DRIVER_VOCAB_CAP)
     id_type = docs.schema[id_col].dataType.simpleString()
     out_schema = (
         f"{id_col} {id_type}, {out_col} array<string>, n_tokens bigint"

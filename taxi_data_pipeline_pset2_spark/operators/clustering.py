@@ -10,9 +10,9 @@ vec_ids), expressed Spark-first:
   count) rows, k*D per batch -- so the update needs no join back to the
   corpus and no corpus-sized posexplode, just one tiny hash aggregate
   whose k*D result collects to the driver and becomes the next broadcast
-- the projected corpus is persisted across rounds (it is scanned once
-  per Lloyd round plus the final assignment; without the persist each
-  round would re-read and re-project the source)
+- the projected corpus is checkpointed once (operators/driver_path.py)
+  and every Lloyd round plus the final assignment reads that
+  checkpoint, never re-reading and re-projecting the source
 
 EXACT INTEGER LLOYD'S (r9, the upgrade that cleared the float-argmin
 oracle blocker): vectors quantize once to the repo-standard 1e-6 grid
@@ -32,7 +32,7 @@ component per round -- three orders of magnitude under the data grid --
 and k-means is a heuristic partitioner; determinism is worth more than
 the sixth decimal of a centroid.
 
-At 100 TB the per-round cost is one cached-corpus scan + a k*D-sized
+At 100 TB the per-round cost is one checkpointed-corpus scan + a k*D-sized
 aggregate; the driver never holds more than the centroid matrix.
 pyspark.ml's KMeans does the same dance with kmeans|| init; this
 hand-rolled version exists for deterministic, dependency-light
@@ -121,8 +121,8 @@ def kmeans_fit_assign(
     )
     out_schema = f"{id_col} long, cluster int, dist double"
 
-    # weight >= 1 per row keeps the cell bound exact for empty vectors
-    tbl = bounded_arrow(
+    # the cap counts vector cells; an empty vector still counts one
+    base, tbl = bounded_arrow(
         base, DRIVER_KMEANS_CELL_CAP, weight=F.greatest(F.size("iv"), F.lit(1))
     )
     if tbl is not None:
@@ -182,120 +182,107 @@ def _kmeans_distributed(base, k, n_iter, id_col, out_schema):
     import pandas as pd
 
     spark = base.sparkSession
-    # One cached materialization feeds every Lloyd round AND the final
-    # assignment; without it each round re-reads and re-projects the
-    # source (n_iter extra corpus scans -- the r4 'wasteful' finding).
-    base = base.persist()
-    try:
-        init_rows = base.orderBy(id_col).limit(k).collect()
-        if not init_rows:
-            # empty corpus: the round loop's k*D contract check would
-            # IndexError on a zero-row init
-            return (
-                spark.createDataFrame([], out_schema),
-                np.zeros((0, 1), dtype=np.int64),
+    init_rows = base.orderBy(id_col).limit(k).collect()
+    if not init_rows:
+        # empty corpus: the round loop's k*D contract check would
+        # IndexError on a zero-row init
+        return (
+            spark.createDataFrame([], out_schema),
+            np.zeros((0, 1), dtype=np.int64),
+        )
+    centroids = np.array([r["iv"] for r in init_rows], dtype=np.int64)  # (k, D)
+
+    def make_assign(cent: "np.ndarray"):
+        b = spark.sparkContext.broadcast(cent)
+
+        def run(batches):
+            C = b.value  # (k, D) int64
+            for pdf in batches:
+                X = np.array(list(pdf["iv"]), dtype=np.int64)  # (N, D)
+                d2 = _exact_d2(X, C)
+                idx = d2.argmin(axis=1)  # first min = lowest cluster id
+                dist = _round_half_up_6(
+                    np.sqrt(
+                        d2[np.arange(len(idx)), idx].astype(np.float64)
+                    )
+                    / SCALE
+                )
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf[id_col],
+                        "cluster": idx.astype(np.int32),
+                        "dist": dist,
+                    }
+                )
+
+        return run
+
+    def make_partial_sums(cent: "np.ndarray"):
+        """Assignment + per-batch partial centroid sums in one kernel:
+        emits (cluster, dim, sx, n) -- k*D rows per Arrow batch -- so
+        the centroid update is a tiny EXACT-integer aggregate over
+        batch partials instead of a corpus-sized posexplode plus an
+        id-join."""
+        b = spark.sparkContext.broadcast(cent)
+
+        def run(batches):
+            C = b.value
+            for pdf in batches:
+                X = np.array(list(pdf["iv"]), dtype=np.int64)  # (N, D)
+                d2 = _exact_d2(X, C)
+                idx = d2.argmin(axis=1)  # (N,)
+                kk, D = C.shape
+                if X.shape[1] != D:
+                    raise ValueError(
+                        f"embedding dim {X.shape[1]} != centroid dim {D}; "
+                        "embedding column has inconsistent dimensions"
+                    )
+                sums = np.zeros((kk, D), dtype=np.int64)
+                np.add.at(sums, idx, X)
+                counts = np.bincount(idx, minlength=kk).astype(np.int64)
+                live = np.flatnonzero(counts)
+                yield pd.DataFrame(
+                    {
+                        "cluster": np.repeat(live, D).astype(np.int32),
+                        "dim": np.tile(np.arange(D, dtype=np.int32), len(live)),
+                        "sx": sums[live].ravel(),
+                        "n": np.repeat(counts[live], D),
+                    }
+                )
+
+        return run
+
+    for _ in range(n_iter):
+        # update: exact integer component sums per (cluster, dim)
+        # from batch partials -- k*D rows back to the driver, no
+        # corpus shuffle at all; the mean lands back on the 1e-6
+        # grid via round_half_up(S/n) = floor((2S+n)/(2n))
+        sums = (
+            base.mapInPandas(
+                make_partial_sums(centroids),
+                schema="cluster int, dim int, sx long, n long",
             )
-        centroids = np.array([r["iv"] for r in init_rows], dtype=np.int64)  # (k, D)
-
-        def make_assign(cent: "np.ndarray"):
-            b = spark.sparkContext.broadcast(cent)
-
-            def run(batches):
-                C = b.value  # (k, D) int64
-                for pdf in batches:
-                    X = np.array(list(pdf["iv"]), dtype=np.int64)  # (N, D)
-                    d2 = _exact_d2(X, C)
-                    idx = d2.argmin(axis=1)  # first min = lowest cluster id
-                    dist = _round_half_up_6(
-                        np.sqrt(
-                            d2[np.arange(len(idx)), idx].astype(np.float64)
-                        )
-                        / SCALE
-                    )
-                    yield pd.DataFrame(
-                        {
-                            id_col: pdf[id_col],
-                            "cluster": idx.astype(np.int32),
-                            "dist": dist,
-                        }
-                    )
-
-            return run
-
-        def make_partial_sums(cent: "np.ndarray"):
-            """Assignment + per-batch partial centroid sums in one kernel:
-            emits (cluster, dim, sx, n) -- k*D rows per Arrow batch -- so
-            the centroid update is a tiny EXACT-integer aggregate over
-            batch partials instead of a corpus-sized posexplode plus an
-            id-join."""
-            b = spark.sparkContext.broadcast(cent)
-
-            def run(batches):
-                C = b.value
-                for pdf in batches:
-                    X = np.array(list(pdf["iv"]), dtype=np.int64)  # (N, D)
-                    d2 = _exact_d2(X, C)
-                    idx = d2.argmin(axis=1)  # (N,)
-                    kk, D = C.shape
-                    if X.shape[1] != D:
-                        raise ValueError(
-                            f"embedding dim {X.shape[1]} != centroid dim {D}; "
-                            "embedding column has inconsistent dimensions"
-                        )
-                    sums = np.zeros((kk, D), dtype=np.int64)
-                    np.add.at(sums, idx, X)
-                    counts = np.bincount(idx, minlength=kk).astype(np.int64)
-                    live = np.flatnonzero(counts)
-                    yield pd.DataFrame(
-                        {
-                            "cluster": np.repeat(live, D).astype(np.int32),
-                            "dim": np.tile(np.arange(D, dtype=np.int32), len(live)),
-                            "sx": sums[live].ravel(),
-                            "n": np.repeat(counts[live], D),
-                        }
-                    )
-
-            return run
-
-        for _ in range(n_iter):
-            # update: exact integer component sums per (cluster, dim)
-            # from batch partials -- k*D rows back to the driver, no
-            # corpus shuffle at all; the mean lands back on the 1e-6
-            # grid via round_half_up(S/n) = floor((2S+n)/(2n))
-            sums = (
-                base.mapInPandas(
-                    make_partial_sums(centroids),
-                    schema="cluster int, dim int, sx long, n long",
-                )
-                .groupBy("cluster", "dim")
-                .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
-                .collect()
+            .groupBy("cluster", "dim")
+            .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
+            .collect()
+        )
+        # Contract check: the driver-side traffic is k*D rows BY
+        # CONSTRUCTION (cluster in [0,k) from argmin, dim in [0,D)).
+        if len(sums) > k * centroids.shape[1]:
+            raise ValueError(
+                f"centroid update returned {len(sums)} rows > k*D = "
+                f"{k * centroids.shape[1]}"
             )
-            # Contract check: the driver-side traffic is k*D rows BY
-            # CONSTRUCTION (cluster in [0,k) from argmin, dim in [0,D)).
-            if len(sums) > k * centroids.shape[1]:
-                raise ValueError(
-                    f"centroid update returned {len(sums)} rows > k*D = "
-                    f"{k * centroids.shape[1]}"
-                )
-            new_c = centroids.copy()
-            for r in sums:
-                new_c[r["cluster"], r["dim"]] = (2 * r["sx"] + r["n"]) // (
-                    2 * r["n"]
-                )
-            centroids = new_c
+        new_c = centroids.copy()
+        for r in sums:
+            new_c[r["cluster"], r["dim"]] = (2 * r["sx"] + r["n"]) // (
+                2 * r["n"]
+            )
+        centroids = new_c
 
-        # The final assignment runs against the still-cached corpus and is
-        # materialized eagerly (localCheckpoint: narrow (id, cluster, dist)
-        # rows on executor-local storage) so the cache can be released
-        # before returning -- a lazy return would either recompute from
-        # source after the unpersist or pin the cache forever.
-        assigned = base.mapInPandas(
-            make_assign(centroids), schema=out_schema
-        ).localCheckpoint(eager=True)
-        return assigned, centroids
-    finally:
-        base.unpersist(blocking=False)
+    # the final assignment reads the same checkpoint as the rounds
+    assigned = base.mapInPandas(make_assign(centroids), schema=out_schema)
+    return assigned, centroids
 
 
 def kmeans_inertia(assigned: DataFrame) -> float:

@@ -148,13 +148,12 @@ def connected_components(
     union-find (see operators/driver_path.py); larger sets run the
     distributed star alternation.
     """
-    edges = (
+    edges, tbl = bounded_arrow(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        DRIVER_CC_EDGE_CAP,
     )
-    tbl = bounded_arrow(edges, DRIVER_CC_EDGE_CAP)
     if tbl is not None:
         return _driver_components(edges, tbl)
     prev = _edge_checksum(edges)

@@ -15,11 +15,12 @@ influence ranking and dense-nucleus extraction in an interaction graph.
 
 Every operator runs at the session's shuffle width (AQE coalesces the
 small exchanges); none writes the session conf. The iterative ones
-(pagerank, LPA, kcore) run on the driver when the cleaned edge set fits
-a cap (operators/driver_path.py) and localCheckpoint their distributed
-rounds so lineage stays bounded. triangle_counts and
-degree_assortativity are single lazy plans over one canonical-edge
-front (_canonical_edges).
+(pagerank, LPA, kcore) hand their cleaned edge set to
+operators/driver_path.py, which checkpoints it once. When it fits a cap
+the driver kernel runs on its Arrow table; otherwise the distributed
+rounds start from that checkpoint and localCheckpoint as they go, so
+lineage stays bounded. triangle_counts and degree_assortativity are
+single lazy plans over one canonical-edge front (_canonical_edges).
 """
 
 from __future__ import annotations
@@ -47,6 +48,18 @@ def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 # on the driver (operators/driver_path.py): 4M edges x ~24 B of
 # id/weight state is tens of MB.
 DRIVER_PAGERANK_EDGE_CAP = 4_000_000
+
+# Distributed pagerank localCheckpoints every this many rounds. A
+# checkpoint per round is one materialization job per round, mostly
+# fixed job overhead; the rounds between checkpoints are instead
+# persist()-marked (lazy, no job), so the one checkpoint job evaluates
+# the whole segment, each intermediate computed ONCE (the dang branch
+# and the broadcast branch both read the cache), and lineage depth stays
+# bounded at this many join+agg layers. At sf0.1 cadence 1/2/3 land
+# within ~5% of each other; 2 halves the job count. Cadence >= ~8 is a
+# driver-heap hazard: every un-materialized round holds a PENDING
+# broadcast of the rank frame, and nested broadcasts OOM'd at 8.
+CHECKPOINT_EVERY = 2
 
 
 def _pagerank_driver(spark, edges_tbl, damping, n_iter):
@@ -123,7 +136,6 @@ def pagerank(
     damping: float = 0.85,
     n_iter: int = 10,
     weight_col: str | None = None,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Node ranks after ``n_iter`` power-iteration rounds (Page, Brin,
     Motwani & Winograd 1999): (node, rank) with sum(rank) == 1, ordered
@@ -149,13 +161,6 @@ def pagerank(
     driver; see operators/driver_path.py for the contract."""
     if not 0 < damping < 1:
         raise ValueError(f"damping must be in (0,1), got {damping}")
-    # Validated BEFORE any persist()/count() so a bad argument cannot
-    # leave e/nodes_deg cache-marked or waste a count job. Range
-    # rationale: see the cadence comment below.
-    if not 1 <= checkpoint_every <= 4:
-        raise ValueError(
-            f"checkpoint_every must be in [1, 4], got {checkpoint_every}"
-        )
     w_expr = (
         F.col(weight_col).cast("double")
         if weight_col
@@ -170,9 +175,10 @@ def pagerank(
         & F.col("dst").isNotNull()
         & (F.col("_w") > 0)
     )
-    # probed straight off the cleaned scan, BEFORE the distributed
-    # setup: the under-cap path never pays the src repartition shuffle
-    tbl = bounded_arrow(e_raw, DRIVER_PAGERANK_EDGE_CAP)
+    # checkpointed BEFORE the distributed setup: the under-cap path never
+    # pays the src repartition shuffle, and the distributed path
+    # repartitions the checkpoint instead of re-reading the scan
+    e_raw, tbl = bounded_arrow(e_raw, DRIVER_PAGERANK_EDGE_CAP)
     if tbl is not None:
         return _pagerank_driver(edges.sparkSession, tbl, damping, n_iter)
     e = e_raw.repartition("src").persist()
@@ -203,18 +209,6 @@ def pagerank(
         return edges.sparkSession.createDataFrame(
             [], "node string, rank double"
         )
-    # Checkpoint CADENCE: a localCheckpoint per round is one
-    # materialization job per round, mostly fixed job overhead. Rounds
-    # between checkpoints are instead persist()-marked (lazy, no job) so
-    # the one checkpoint job every `checkpoint_every` rounds evaluates
-    # the whole segment, each intermediate computed ONCE (the dang
-    # branch and the broadcast branch both read the cache) -- lineage
-    # depth stays bounded at `checkpoint_every` join+agg layers. At
-    # sf0.1 cadence 1/2/3 land within ~5% of each other; 2 is kept for
-    # the halved job count. Cadence >= ~8 is a driver-heap hazard
-    # (every un-materialized round holds a PENDING broadcast of the
-    # rank frame -- nested broadcasts OOM'd at 8), so the cadence is
-    # capped well below that (validated at the top).
     segment: list[DataFrame] = []
     try:
         ranks = nodes_deg.withColumn(
@@ -282,7 +276,7 @@ def pagerank(
                     ).alias("rank"),
                 )
             )
-            if (_round + 1) % checkpoint_every == 0 or _round == n_iter - 1:
+            if (_round + 1) % CHECKPOINT_EVERY == 0 or _round == n_iter - 1:
                 ranks = ranks.localCheckpoint()
                 for c in segment:
                     c.unpersist()
@@ -458,7 +452,7 @@ def label_propagation(
     The coarse, cheap cousin of connected components
     (operators/components.py): components answer "reachable at all",
     LPA splits a connected graph into densely-knit communities.
-    Per round: one join of the (node, label) frame onto the persisted
+    Per round: one join of the (node, label) frame onto the checkpointed
     symmetrized edges + one (node, label) count aggregate + one
     per-node argmax window -- node/edge-shaped work only, ranks frame
     localCheckpoint'ed per round (same lineage discipline as
@@ -474,10 +468,10 @@ def label_propagation(
 def _undirected_loop(
     edges: DataFrame, src_col: str, dst_col: str, driver, body
 ) -> DataFrame:
-    """The shared front of LPA and kcore: build the persisted
-    symmetrized simple-graph edge frame (a, b), then return
-    ``driver(spark, tbl)`` when it fits DRIVER_GRAPH_EDGE_CAP, else
-    ``body(sym)`` (which unpersists it).
+    """The shared front of LPA and kcore: build the symmetrized
+    simple-graph edge frame (a, b), checkpointed once by bounded_arrow,
+    then return ``driver(spark, tbl)`` when it fits
+    DRIVER_GRAPH_EDGE_CAP, else ``body(sym)`` on the checkpoint.
 
     Hygiene (the triangles rule): NULL endpoints and self-loops drop,
     duplicate/bidirectional listings collapse -- a self-loop would
@@ -493,15 +487,13 @@ def _undirected_loop(
         & F.col("b").isNotNull()
         & (F.col("a") != F.col("b"))
     )
-    sym = (
+    sym, tbl = bounded_arrow(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
+        .distinct(),
+        DRIVER_GRAPH_EDGE_CAP,
     )
-    tbl = bounded_arrow(sym, DRIVER_GRAPH_EDGE_CAP)
     if tbl is None:
         return body(sym)
-    sym.unpersist()
     return driver(edges.sparkSession, tbl)
 
 
@@ -529,7 +521,6 @@ def _lpa_body(sym: DataFrame, n_iter: int) -> DataFrame:
                 .localCheckpoint()
             )
     finally:
-        sym.unpersist()
         nodes.unpersist()
     return labels.orderBy("node")
 
@@ -609,7 +600,7 @@ def kcore(
     deterministic no matter how many rounds convergence took.
 
     Per round: one node-keyed join of the value frame onto the
-    persisted symmetrized edges, one per-node descending window (the
+    checkpointed symmetrized edges, one per-node descending window (the
     H-index is max over rank r of min(r, value_r)), one hash
     aggregate; ONE scalar (changed-node count) reaches the driver --
     edge-shaped shuffles only, localCheckpoint lineage truncation, the
@@ -642,93 +633,88 @@ def _kcore_body(
 
     from pyspark.sql.window import Window
 
-    try:
-        cur = (
-            sym.groupBy(F.col("a").alias("node"))
-            .agg(F.count("*").cast("bigint").alias("core"))
+    cur = (
+        sym.groupBy(F.col("a").alias("node"))
+        .agg(F.count("*").cast("bigint").alias("core"))
+        .localCheckpoint()
+    )
+    # The H-index update uses the tied-group closed form
+    # H = max over distinct values v of min(v, count(neighbors with
+    # value >= v)) -- identical integers to the rank formulation
+    # max_r min(r, v_r-desc) (if the max is attained at rank r with
+    # value v_r, it is attained at distinct value v = v_r with
+    # cumulative count >= r, and vice versa), but the sort window
+    # runs over the (node, DISTINCT value) frame instead of the
+    # full edge-shaped neighbor list. On a modest-degree graph the
+    # two forms cost the same; this one is kept for the SKEW
+    # property: a degree-10^6 hub makes the rank form sort 10^6 rows
+    # inside one window partition, while this form's window input is
+    # bounded by the hub's DISTINCT neighbor core values (<= max
+    # core, and collapsing every round) with the heavy lifting in a
+    # combining aggregate. The DuckDB oracle keeps the rank formulation --
+    # hash equality of the two forms is itself evidence of the
+    # identity.
+    w = Window.partitionBy("a").orderBy(F.desc("_v")).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    # Convergence is checked every `check_every` rounds, not every
+    # round: the changed-count join is a full extra job per round,
+    # and because the iteration is IDEMPOTENT at the fixpoint, any
+    # rounds run past convergence are exact no-ops -- the trade is
+    # at most (check_every - 1) redundant cheap rounds for a
+    # check_every-fold cut in driver round-trips (measured 38
+    # rounds at sf0.1: ~76 jobs -> ~51).
+    check_every = 3
+    prev_checked = cur
+    _t_iter0 = _time.perf_counter()
+    rounds_run = 0
+    for i in range(max_iter):
+        neigh = sym.join(
+            cur.select(F.col("node").alias("b"), F.col("core").alias("_v")),
+            "b",
+        )
+        new = (
+            neigh.groupBy("a", "_v")
+            .agg(F.count("*").cast("bigint").alias("_c"))
+            .select(
+                "a",
+                F.least(F.col("_v"), F.sum("_c").over(w)).alias("_h"),
+            )
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.max("_h").alias("core"))
             .localCheckpoint()
         )
-        # The H-index update uses the tied-group closed form
-        # H = max over distinct values v of min(v, count(neighbors with
-        # value >= v)) -- identical integers to the rank formulation
-        # max_r min(r, v_r-desc) (if the max is attained at rank r with
-        # value v_r, it is attained at distinct value v = v_r with
-        # cumulative count >= r, and vice versa), but the sort window
-        # runs over the (node, DISTINCT value) frame instead of the
-        # full edge-shaped neighbor list. On a modest-degree graph the
-        # two forms cost the same; this one is kept for the SKEW
-        # property: a degree-10^6 hub makes the rank form sort 10^6 rows
-        # inside one window partition, while this form's window input is
-        # bounded by the hub's DISTINCT neighbor core values (<= max
-        # core, and collapsing every round) with the heavy lifting in a
-        # combining aggregate. The DuckDB oracle keeps the rank formulation --
-        # hash equality of the two forms is itself evidence of the
-        # identity.
-        w = Window.partitionBy("a").orderBy(F.desc("_v")).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        # Convergence is checked every `check_every` rounds, not every
-        # round: the changed-count join is a full extra job per round,
-        # and because the iteration is IDEMPOTENT at the fixpoint, any
-        # rounds run past convergence are exact no-ops -- the trade is
-        # at most (check_every - 1) redundant cheap rounds for a
-        # check_every-fold cut in driver round-trips (measured 38
-        # rounds at sf0.1: ~76 jobs -> ~51).
-        check_every = 3
-        prev_checked = cur
-        _t_iter0 = _time.perf_counter()
-        rounds_run = 0
-        for i in range(max_iter):
-            neigh = sym.join(
-                cur.select(F.col("node").alias("b"), F.col("core").alias("_v")),
-                "b",
+        cur = new
+        rounds_run = i + 1
+        if (i + 1) % check_every == 0 or i == max_iter - 1:
+            changed = (
+                new.alias("n")
+                .join(prev_checked.alias("c"), "node")
+                .filter(F.col("n.core") != F.col("c.core"))
+                .count()
             )
-            new = (
-                neigh.groupBy("a", "_v")
-                .agg(F.count("*").cast("bigint").alias("_c"))
-                .select(
-                    "a",
-                    F.least(
-                        F.col("_v"), F.sum("_c").over(w)
-                    ).alias("_h"),
-                )
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.max("_h").alias("core"))
-                .localCheckpoint()
+            prev_checked = new
+            if changed == 0:
+                break
+    else:
+        # fall through the loop WITHOUT converging: fail like
+        # connected_components does -- H-index iteration needs
+        # O(diameter) rounds on chain-shaped graphs (a value-1
+        # region advances one hop per round from each end of a
+        # path), so a long chain can exhaust max_iter while interior
+        # nodes still sit above their true coreness; returning that
+        # silently would hand the caller wrong core numbers
+        if changed != 0:
+            raise RuntimeError(
+                f"kcore did not converge in {max_iter} rounds "
+                f"({changed} nodes still changing); raise max_iter "
+                "-- diameter-shaped graphs need ~diameter/2 rounds"
             )
-            cur = new
-            rounds_run = i + 1
-            if (i + 1) % check_every == 0 or i == max_iter - 1:
-                changed = (
-                    new.alias("n")
-                    .join(prev_checked.alias("c"), "node")
-                    .filter(F.col("n.core") != F.col("c.core"))
-                    .count()
-                )
-                prev_checked = new
-                if changed == 0:
-                    break
-        else:
-            # fall through the loop WITHOUT converging: fail like
-            # connected_components does -- H-index iteration needs
-            # O(diameter) rounds on chain-shaped graphs (a value-1
-            # region advances one hop per round from each end of a
-            # path), so a long chain can exhaust max_iter while interior
-            # nodes still sit above their true coreness; returning that
-            # silently would hand the caller wrong core numbers
-            if changed != 0:
-                raise RuntimeError(
-                    f"kcore did not converge in {max_iter} rounds "
-                    f"({changed} nodes still changing); raise max_iter "
-                    "-- diameter-shaped graphs need ~diameter/2 rounds"
-                )
-        if stats_out is not None:
-            sec = _time.perf_counter() - _t_iter0
-            stats_out["rounds"] = rounds_run
-            stats_out["sec_iterating"] = round(sec, 3)
-            stats_out["sec_per_round"] = round(sec / max(rounds_run, 1), 3)
-    finally:
-        sym.unpersist()
+    if stats_out is not None:
+        sec = _time.perf_counter() - _t_iter0
+        stats_out["rounds"] = rounds_run
+        stats_out["sec_iterating"] = round(sec, 3)
+        stats_out["sec_per_round"] = round(sec / max(rounds_run, 1), 3)
     return cur.orderBy("node")
 
 

@@ -101,22 +101,9 @@ def read_csv_quarantine(
     both outputs. For a table-scale quarantine pass use
     ``persist(StorageLevel.DISK_ONLY)`` upstream instead.
     """
-    from pyspark.sql.types import StringType, StructType
-
-    full = StructType(list(schema.fields)).add("_corrupt_record", StringType())
-    df = (
-        spark.read.option("header", header)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(full)
-        .csv(path)
-        .cache()
+    return _quarantine(
+        spark.read.option("header", header), "csv", path, schema
     )
-    good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    bad = df.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw_record")
-    )
-    return good, bad
 
 
 def read_jsonl_quarantine(
@@ -134,14 +121,24 @@ def read_jsonl_quarantine(
     so the corrupt-record column is queryable and the file parses once
     for both outputs.
     """
+    return _quarantine(spark.read, "json", path, schema)
+
+
+def _quarantine(
+    reader, fmt: str, path: str, schema
+) -> tuple[DataFrame, DataFrame]:
+    """The shared body of the quarantine readers: ``path`` read as
+    ``fmt`` in PERMISSIVE mode over ``schema`` plus ``_corrupt_record``,
+    cached, split into (good typed rows, bad raw records)."""
     from pyspark.sql.types import StringType, StructType
 
     full = StructType(list(schema.fields)).add("_corrupt_record", StringType())
     df = (
-        spark.read.option("mode", "PERMISSIVE")
+        reader.option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(full)
-        .json(path)
+        .format(fmt)
+        .load(path)
         .cache()
     )
     good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")

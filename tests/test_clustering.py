@@ -32,31 +32,36 @@ def test_kmeans_deterministic_rerun(spark, sf_dir):
 
 
 def test_kmeans_iteration_uses_cached_corpus(spark, sf_dir, monkeypatch):
-    """The projected corpus must be persisted across Lloyd rounds: the
-    per-round partial-sums pass has to read an InMemoryRelation, not
-    re-scan and re-project the source n_iter times (r4 finding #3). Also
-    pins that the cache is released (unpersist) by the time the fit
-    returns."""
+    """The projected corpus is materialized once for every Lloyd round:
+    the per-round partial-sums pass has to read the driver-path helper's
+    local checkpoint (a LogicalRDD), not re-scan and re-project the
+    parquet source n_iter times (r4 finding #3). Nothing is persisted,
+    so the fit leaves no cache to release."""
     emb = load_table(spark, sf_dir, "embeddings")
     # patch the CONCRETE DataFrame class (pyspark.sql.classic...), not the
     # abstract pyspark.sql.DataFrame facade, or the spies never fire
     cls = type(emb)
 
     plans: list[str] = []
-    unpersisted: list[bool] = []
+    cached: list[str] = []
     orig_collect = cls.collect
-    orig_unpersist = cls.unpersist
 
     def spy_collect(self):
         plans.append(self._jdf.queryExecution().optimizedPlan().toString())
         return orig_collect(self)
 
-    def spy_unpersist(self, blocking=False):
-        unpersisted.append(True)
-        return orig_unpersist(self, blocking)
+    def spy_cache(name):
+        orig = getattr(cls, name)
+
+        def spy(self, *args, **kwargs):
+            cached.append(name)
+            return orig(self, *args, **kwargs)
+
+        return spy
 
     monkeypatch.setattr(cls, "collect", spy_collect)
-    monkeypatch.setattr(cls, "unpersist", spy_unpersist)
+    for name in ("cache", "persist"):
+        monkeypatch.setattr(cls, name, spy_cache(name))
     # distributed_only forces the distributed Lloyd loop -- the path
     # whose cache discipline this test pins (the driver fast path does
     # no per-round cluster work at all)
@@ -67,8 +72,8 @@ def test_kmeans_iteration_uses_cached_corpus(spark, sf_dir, monkeypatch):
     round_plans = [p for p in plans if "MapInPandas" in p]
     assert len(round_plans) == 2  # one centroid-update collect per round
     for p in round_plans:
-        assert "InMemoryRelation" in p, p
-    assert unpersisted == [True]
+        assert "LogicalRDD" in p and "parquet" not in p, p
+    assert cached == []
     # and the rewrite stays deterministic across reruns
     a = {r.vec_id: r.cluster for r in out.collect()}
     with distributed_only():

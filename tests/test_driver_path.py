@@ -166,9 +166,9 @@ def test_fast_path_matches_distributed(spark, monkeypatch, op, case):
     taken = []
 
     def spy(frame, cap, weight=None):
-        tbl = bounded_arrow(frame, cap, weight)
-        taken.append(tbl)
-        return tbl
+        out = bounded_arrow(frame, cap, weight)
+        taken.append(out[1])
+        return out
 
     with monkeypatch.context() as m:
         m.setattr(module, "bounded_arrow", spy)
@@ -201,18 +201,73 @@ def test_self_loop_and_null_edge_gives_no_rows_on_both_paths(spark, op):
         assert fn(df).collect() == []
 
 
+def _table(df, cap, weight=None):
+    frame, tbl = bounded_arrow(df, cap, weight)
+    assert sorted(frame.collect()) == sorted(df.collect())
+    return tbl
+
+
 def test_bounded_arrow_contract(spark):
     df = spark.createDataFrame(
         [(i, [1, 2, 3]) for i in range(4)], "id long, v array<int>"
     )
-    assert bounded_arrow(df, 4).num_rows == 4
-    assert bounded_arrow(df, 3) is None
+    assert _table(df, 4).num_rows == 4
+    assert _table(df, 3) is None
     # weighted: 4 rows x 3 cells
     weight = F.size("v")
-    assert bounded_arrow(df, 12, weight=weight).num_rows == 4
-    assert bounded_arrow(df, 11, weight=weight) is None
-    empty = bounded_arrow(df.limit(0), 0)
+    assert _table(df, 12, weight=weight).num_rows == 4
+    assert _table(df, 11, weight=weight) is None
+    # zero rows sum to NULL, which counts as 0
+    empty = _table(df.limit(0), 0)
     assert empty is not None and empty.num_rows == 0
     with distributed_only():
-        assert bounded_arrow(df, 100) is None
-    assert bounded_arrow(df, 100) is not None
+        assert _table(df, 100) is None
+    assert _table(df, 100) is not None
+
+
+def test_bounded_arrow_raises_when_evaluation_fails(spark):
+    """A failed checkpoint leaves the Observation holding zeros or a
+    partial total; the helper must raise, never return a table built
+    on those."""
+    df = spark.range(8).withColumn(
+        "x", F.when(F.col("id") == 5, F.raise_error(F.lit("bad row")))
+    )
+    with pytest.raises(Exception, match="bad row"):
+        bounded_arrow(df, 1_000)
+
+
+def test_bounded_arrow_jobs_and_single_evaluation(spark):
+    """On an exchange-free frame the driver path runs exactly 2 jobs
+    (the observed checkpoint and the collect) and the distributed path
+    exactly 1; re-reading the returned frame never re-evaluates the
+    input."""
+    sc = spark.sparkContext
+    calls = sc.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        calls.add(1)
+        return x
+
+    df = spark.range(0, 10, 1, 2).select(counted("id").alias("id"))
+    for group, forced, want in (
+        ("bounded-driver", False, 2), ("bounded-distributed", True, 1),
+    ):
+        before = calls.value
+        sc.setJobGroup(group, group)
+        try:
+            if forced:
+                with distributed_only():
+                    frame, tbl = bounded_arrow(df, 100)
+                assert tbl is None
+            else:
+                frame, tbl = bounded_arrow(df, 100)
+                assert tbl.num_rows == 10
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == want
+        assert calls.value - before == 10
+        assert sorted(r.id for r in frame.collect()) == list(range(10))
+        assert calls.value - before == 10

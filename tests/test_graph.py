@@ -399,35 +399,6 @@ class TestAssortativity:
         assert degree_assortativity(df).collect()[0].assortativity is None
 
 
-def test_pagerank_checkpoint_cadence_equivalence(spark):
-    """The checkpoint cadence is an execution knob, never a semantics
-    knob: every cadence in the legal range returns the identical table
-    (same update rule, same rounding)."""
-    from taxi_data_pipeline_pset2_spark.operators.graph import pagerank
-
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    # the cadence knob only exists on the distributed loop, so the test
-    # must force it (the driver fast path would bypass the knob)
-    with distributed_only():
-        base = sorted(
-            (r.node, r.rank)
-            for r in pagerank(df, n_iter=7, checkpoint_every=1).collect()
-        )
-        for ce in (2, 3, 4):
-            got = sorted(
-                (r.node, r.rank)
-                for r in pagerank(
-                    df, n_iter=7, checkpoint_every=ce
-                ).collect()
-            )
-            assert got == base, f"cadence {ce} diverged"
-    import pytest
-
-    with pytest.raises(ValueError):
-        pagerank(df, checkpoint_every=9)
-
-
 def test_pagerank_oracle_ranks_clear_rounding_boundaries():
     """The driver gate hash-compares the pagerank_supplier_customer
     entry 8-dp rounded on BOTH engines; the only cross-engine
