@@ -1,9 +1,11 @@
 """Fresh-process pre-flight of specific catalog entries against DuckDB.
 
-Mirrors the external driver's run shape (default-memory DuckDB, one
-statement per oracle) for entries about to enter the _WINDOW rotation.
-Run twice -- default env and a hostile TZ (e.g. TZ=Pacific/Chatham) --
-before committing a new window (the r10 giant-oracle precedent).
+Mirrors the external driver's run shape: a plain SparkSession (not the
+engine's tuned factory), default-memory DuckDB, one statement per
+oracle. Each entry goes through tests.oracle_utils.replay_entry, the
+compare the test suite and scripts/sweep_catalog.py run. Run twice --
+default env and a hostile TZ (e.g. TZ=Pacific/Chatham) -- before
+committing a new or changed oracle.
 
 Usage: python scripts/preflight_entries.py [sf_dir] name [name ...]
 """
@@ -14,20 +16,18 @@ import os
 import sys
 import time
 
-# anchor imports on the repo root, not the caller's cwd (same fix as
-# sweep_catalog.py, ADVICE r11)
+# anchor imports on the repo root, not the caller's cwd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
 from taxi_data_pipeline_pset2_spark.queries import registry
-from tests.oracle_utils import compare_frames, duckdb_connection
+from tests.oracle_utils import duckdb_connection, replay_entry
 
 
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args.pop(0) if args and "/" in args[0] else "/root/testdata/sf0.01"
-    names = args
     spark = (
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
@@ -38,23 +38,11 @@ def main() -> int:
     reg = registry()
     con = duckdb_connection(sf_dir)
     failed = []
-    for name in names:
-        e = reg[name]
+    for name in args:
         t0 = time.time()
-        spark_pdf = e.fn(spark, sf_dir).toPandas()
-        t1 = time.time()
-        if e.oracle is None:
-            ok = len(spark_pdf) > 0
-            print(f"{name}: rows-only rows={len(spark_pdf)} ok={ok} spark={t1-t0:.2f}s")
-            if not ok:
-                failed.append(name)
-            continue
-        oracle_pdf = con.execute(e.oracle).df()
-        t2 = time.time()
-        problems = compare_frames(spark_pdf, oracle_pdf)
+        problems = replay_entry(spark, sf_dir, con, reg[name])
         print(
-            f"{name}: rows={len(spark_pdf)}/{len(oracle_pdf)} "
-            f"spark={t1-t0:.2f}s oracle={t2-t1:.2f}s "
+            f"{name}: {time.time() - t0:.2f}s "
             + ("OK" if not problems else "FAIL " + "; ".join(problems)[:500])
         )
         if problems:

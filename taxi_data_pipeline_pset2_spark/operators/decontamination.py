@@ -12,11 +12,9 @@ against the distinct benchmark shingle set.
 100 TB notes: the training side is scan-shaped (project + explode, no
 shuffle before the per-doc aggregate); the benchmark side is eval-sized
 (thousands of docs -> at most a few million distinct shingle hashes), so
-the collision join broadcasts by default and the big side never
-shuffles for it. With ``broadcast_bench=False`` it degrades to a plain
-hash join on the 8-byte shingle hash for pathologically large benchmark
-suites. No UDFs anywhere; everything stays in whole-stage codegen
-except the interpreted shingle zip (shared with dedup).
+the collision join broadcasts it and the big side never shuffles for
+it. No UDFs anywhere; everything stays in whole-stage codegen except
+the interpreted shingle zip (shared with dedup).
 """
 
 from __future__ import annotations
@@ -37,7 +35,6 @@ def contamination_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Per-train-doc overlap with the benchmark shingle set.
 
@@ -52,18 +49,15 @@ def contamination_scores(
     train_sh = doc_shingles(train, text_col, id_col, k).select(
         F.col(id_col), stable_hash64(F.col("shingle")).alias("h")
     )
-    bench_sh = (
+    bench_sh = F.broadcast(
         doc_shingles(bench, bench_text_col, id_col, k)
         .select(stable_hash64(F.col("shingle")).alias("h"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    if broadcast_bench:
-        bench_sh = F.broadcast(bench_sh)
     # ONE pass over the train shingles: the bench set is distinct on h,
     # so the left join marks without multiplying rows, and totals + hit
-    # counts come out of the same aggregate. (The previous two-aggregate
-    # formulation evaluated the shingle subtree twice and re-joined.)
+    # counts come out of the same aggregate.
     return (
         train_sh.join(bench_sh, "h", "left")
         .groupBy(id_col)
@@ -87,7 +81,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Drop contaminated train docs; returns the surviving rows intact.
 
@@ -100,7 +93,7 @@ def decontaminate(
     if max_frac is None and min_hits is None:
         min_hits = 1
     scores = contamination_scores(
-        train, bench, k, text_col, id_col, bench_text_col, broadcast_bench
+        train, bench, k, text_col, id_col, bench_text_col
     )
     dirty = F.lit(False)
     if min_hits is not None:

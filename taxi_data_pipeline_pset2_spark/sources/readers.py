@@ -42,28 +42,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # year() on LTZ follow the session timezone. The reference pins UTC at
     # the session level too (exporter .../1759109036:87-88, SURVEY.md X9).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        _enable_nanos_as_long(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        # events.ts has shipped as TIMESTAMP(NANOS) (which Spark's
-        # vectorized reader rejects -- the nanosAsLong conf surfaces it as
-        # a long) and as TIMESTAMP(MICROS) without UTC adjustment (which
-        # Spark 4 infers as TIMESTAMP_NTZ). Normalize both to session-UTC
-        # TIMESTAMP so downstream hour()/window()/unix_micros() semantics
-        # are identical either way. Integer `div` for the ns path: float
-        # division would lose precision above 2^53 and round the
-        # microsecond differently than DuckDB's own ns->us truncation.
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
-    return df
-
-
-def _enable_nanos_as_long(spark: SparkSession) -> None:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name != "events":
+        return spark.read.parquet(path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return events_ts_utc(spark.read.parquet(path))
+
+
+def events_ts_utc(df: DataFrame) -> DataFrame:
+    """``df`` with the events ``ts`` column as session-UTC TIMESTAMP --
+    the one normalization for the batch reader and the events stream.
+
+    events.ts has shipped as TIMESTAMP(NANOS) (which Spark's vectorized
+    reader rejects -- the ``nanosAsLong`` conf the caller sets surfaces
+    it as a long) and as TIMESTAMP(MICROS) without UTC adjustment (which
+    Spark 4 infers as TIMESTAMP_NTZ). Normalizing both keeps downstream
+    hour()/window()/unix_micros() semantics identical either way.
+    Integer ``div`` for the ns path: float division would lose precision
+    above 2^53 and round the microsecond differently than DuckDB's own
+    ns->us truncation."""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast(TimestampType()))
+    return df
 
 
 def load_tables(

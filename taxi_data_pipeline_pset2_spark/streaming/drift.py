@@ -14,10 +14,9 @@ Per micro-batch (foreachBatch):
     frame, aggregated exactly once at monitor start -- the reference
     corpus is never re-scanned per batch, the same O(batch) discipline
     as streaming/incremental.py);
- 3. write ONE audit row (batch_id, n_rows, psi, drifted) into a
-    batch-id-keyed directory -- overwrite on replay, so at-least-once
-    foreachBatch delivery keeps the log exact, matching the
-    run_batchwise_to_parquet idempotence contract.
+ 3. write ONE audit row (batch_id, n_rows, psi, drifted) as that
+    batch's entry of the committed batch log (streaming/state.py);
+    read the log back with ``state.read_batches``.
 
 Thresholds follow the PSI folklore the batch operator documents
 (< 0.1 stable, 0.1-0.25 drifting, > 0.25 shifted); ``threshold`` is the
@@ -25,8 +24,6 @@ alert line, default 0.25.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +33,7 @@ from taxi_data_pipeline_pset2_spark.operators.drift import (
     category_counts,
     psi_from_counts,
 )
+from taxi_data_pipeline_pset2_spark.streaming.state import drain, write_batch
 
 
 def batch_psi_row(
@@ -80,10 +78,10 @@ def run_streaming_drift_monitor(
     checkpoint_dir: str,
     threshold: float = 0.25,
     smoothing: float = 0.5,
-):
-    """Start the monitor; returns the StreamingQuery. ``reference`` is
-    aggregated to category counts once and pinned with localCheckpoint;
-    the audit log lands one parquet directory per batch id."""
+) -> None:
+    """Drain the stream, one audit row per batch under ``audit_dir``.
+    ``reference`` is aggregated to category counts once and pinned with
+    localCheckpoint."""
     spark = reference.sparkSession
     ref_counts = category_counts(reference, col, "n_expected").localCheckpoint(
         eager=True
@@ -93,23 +91,6 @@ def run_streaming_drift_monitor(
         row = batch_psi_row(
             spark, batch_df, ref_counts, col, batch_id, threshold, smoothing
         )
-        # batch_id lives in the directory key only (a data column with
-        # the partition column's name would collide on read)
-        row.drop("batch_id").write.mode("overwrite").parquet(
-            os.path.join(audit_dir, f"batch_id={batch_id}")
-        )
+        write_batch(spark, audit_dir, batch_id, row)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_drift_audit(spark: SparkSession, audit_dir: str) -> DataFrame:
-    """The accumulated audit log (batch_id recovered from the directory
-    key)."""
-    return spark.read.option("basePath", audit_dir).parquet(
-        os.path.join(audit_dir, "batch_id=*")
-    )
+    drain(stream_df, checkpoint_dir, on_batch)

@@ -10,21 +10,19 @@ module adds the streaming surface a continuous ingest would need:
 - gap-based sessionization via ``applyInPandasWithState`` (custom
   stateful operator -- the extension path for semantics Spark's built-in
   windows can't express)
-- ``foreachBatch`` parquet sink: idempotent batch-id-keyed append, the
-  exactly-once-ish equivalent of the reference's transactional
+- ``foreachBatch`` parquet sink: the committed batch log of
+  streaming/state.py, the equivalent of the reference's transactional
   executemany exporter (``.../exporter_taxi.py/1759109036:178-233``)
 
-The events parquet has shipped both as TIMESTAMP(NANOS) (read nanos-as-
-long and integer-divide, like the batch reader in sources/readers.py) and
-as TIMESTAMP(MICROS) without UTC adjustment (Spark 4 infers
-TIMESTAMP_NTZ); ``read_events_stream`` probes one file's footer and
-declares the matching stream schema, normalizing ``ts`` to session-UTC
-TIMESTAMP either way.
+The events parquet has shipped both as TIMESTAMP(NANOS) and as
+TIMESTAMP(MICROS) without UTC adjustment (Spark 4 infers TIMESTAMP_NTZ);
+``read_events_stream`` probes one file's footer, declares the matching
+stream schema and normalizes ``ts`` through the batch reader's
+``sources.readers.events_ts_utc``.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Iterable
 
 import pandas as pd
@@ -39,6 +37,14 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from taxi_data_pipeline_pset2_spark.sources.readers import events_ts_utc
+from taxi_data_pipeline_pset2_spark.streaming.state import (
+    drain,
+    read_batches,
+    write_batch,
+)
+
 
 def _events_raw_schema(ts_type) -> StructType:
     return StructType(
@@ -84,14 +90,11 @@ def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
         # default. Anything else (permissions, corrupt footer) propagates
         # as the real error instead of a confusing stream-schema mismatch.
         pass
-    raw = (
+    return events_ts_utc(
         spark.readStream.schema(_events_raw_schema(ts_type))
         .option("maxFilesPerTrigger", 1)
         .parquet(events_dir)
     )
-    if isinstance(ts_type, LongType):
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast(TimestampType()))
 
 
 def hourly_event_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -285,34 +288,27 @@ def dedup_stream(
 def run_batchwise_to_parquet(
     agg_stream: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> None:
-    """foreachBatch sink: write each micro-batch atomically into a
-    batch-id-keyed subdirectory -- replayed batches overwrite their own
-    directory, so restarts are idempotent (the Spark equivalent of the
-    reference exporter's BEGIN/executemany/COMMIT + rollback).
+    """foreachBatch sink: each micro-batch becomes one entry of the
+    committed batch log (streaming/state.py) -- replayed batches
+    overwrite their own directory, so restarts are idempotent (the Spark
+    equivalent of the reference exporter's BEGIN/executemany/COMMIT +
+    rollback).
 
     READ CONTRACT: under ``update`` output mode a window re-emitted in a
-    later micro-batch lands in a NEWER ``batch_id=`` directory without
-    removing the older partial row, so a naive ``spark.read.parquet``
-    over the whole directory double-counts updated windows. Consumers
-    must read through :func:`read_batchwise_result`, which keeps only
-    each key's latest batch (last-writer-wins). That pairing -- not the
-    raw directory -- is what is exactly-once. (``append`` output mode
-    would avoid the discipline but withholds every window still inside
-    the watermark when an ``availableNow`` drain ends; the update+reader
-    pair delivers the complete, final result.)"""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    (
-        agg_stream.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    later micro-batch lands in a NEWER batch without removing the older
+    partial row, so reading the whole log double-counts updated windows.
+    Consumers must read through :func:`read_batchwise_result`, which
+    keeps only each key's latest batch (last-writer-wins). That pairing
+    -- not the raw log -- is what is exactly-once. (``append`` output
+    mode would avoid the discipline but withholds every window still
+    inside the watermark when an ``availableNow`` drain ends; the
+    update+reader pair delivers the complete, final result.)"""
+    spark = agg_stream.sparkSession
+    drain(
+        agg_stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: write_batch(spark, out_dir, batch_id, batch_df),
+        output_mode="update",
     )
 
 
@@ -320,16 +316,16 @@ def read_batchwise_result(
     spark: SparkSession, out_dir: str, key_cols: list[str]
 ) -> DataFrame:
     """The read side of :func:`run_batchwise_to_parquet`'s exactly-once
-    contract: partition discovery exposes ``batch_id``; for each
-    aggregation key keep only the row from the highest batch_id (the
+    contract: over the committed log (``state.read_batches``), keep for
+    each aggregation key only the row from the highest batch_id (the
     final value of that window). One window over the (small, result-
     sized) sink table."""
     from pyspark.sql.window import Window
 
-    df = spark.read.option("basePath", out_dir).parquet(out_dir)
     w = Window.partitionBy(*key_cols).orderBy(F.desc("batch_id"))
     return (
-        df.withColumn("_rn", F.row_number().over(w))
+        read_batches(spark, out_dir)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "batch_id")
     )

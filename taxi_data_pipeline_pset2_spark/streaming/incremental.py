@@ -8,9 +8,9 @@ Per micro-batch:
  1. screen the batch against the CURRENT index (one broadcast of the
     batch onto an index scan -- O(batch) + one scan, the incremental
     contract);
- 2. write the batch's survivors into a batch-id-keyed directory
-    (idempotent overwrite on replay, same discipline as
-    ``events.run_batchwise_to_parquet``);
+ 2. write the batch's survivors as that batch's entry of the committed
+    batch log (streaming/state.py; read back with
+    ``state.read_batches``);
  3. APPEND only the survivors' signature rows the index does not
     already hold (batch-sized anti-join) -- the index grows by O(batch)
     files per batch and is NEVER rewritten, unlike an
@@ -24,25 +24,23 @@ Replay idempotence (at-least-once foreachBatch delivery):
    (they would have been one connected component);
  - the index append anti-joins on doc_id, so re-appending an already-
    indexed batch is a no-op;
- - the survivors directory is overwritten per batch id.
+ - the survivors log entry is overwritten per batch id.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.operators.incremental import (
     incremental_dedup,
 )
+from taxi_data_pipeline_pset2_spark.streaming.state import drain, write_batch
+
 
 def _index_schema(id_col: str = "doc_id") -> str:
     """MinHash band-signature index layout, keyed by the caller's id
-    column (ADVICE r5: a hardcoded doc_id made id_col a trap -- a
-    non-default id read the index as all-NULL and broke the
-    anti-join)."""
+    column: a hardcoded doc_id would read a non-default id's index as
+    all-NULL and break the anti-join."""
     return f"{id_col} long, band int, band_sig long"
 
 
@@ -83,10 +81,10 @@ def load_index(
     """The persisted signature index; empty-typed frame before the
     first batch commits. Only AnalysisException (path not found / empty
     dir) falls back -- a genuine read error (permissions, corrupt
-    footer) must propagate, not silently restart the index (cf. ADVICE
-    r4 on the stream-schema probe). A local os.path probe would be
-    wrong here: the index lives on whatever filesystem Spark sees
-    (HDFS/S3), not necessarily the driver's local disk."""
+    footer) must propagate, not silently restart the index. A local
+    os.path probe would be wrong here: the index lives on whatever
+    filesystem Spark sees (HDFS/S3), not necessarily the driver's local
+    disk."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -107,14 +105,14 @@ def run_streaming_incremental_dedup(
     dedup screen, growing the index as batches commit."""
     spark = docs_stream.sparkSession
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         index = load_index(spark, index_dir, id_col=id_col)
         res = incremental_dedup(
             batch_df, index, text_col=text_col, id_col=id_col
         )
-        survivors = res.survivors.localCheckpoint(eager=True)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(survivors_dir, f"batch_id={batch_id}")
+        write_batch(
+            spark, survivors_dir, batch_id,
+            res.survivors.localCheckpoint(eager=True),
         )
         # the signature delta incremental_dedup already computed -- NOT
         # a second shingle->hash->min pass over the survivors' text
@@ -125,16 +123,4 @@ def run_streaming_incremental_dedup(
         )
         new_rows.write.mode("append").parquet(index_dir)
 
-    (
-        docs_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_streaming_survivors(spark: SparkSession, survivors_dir: str) -> DataFrame:
-    """All surviving docs across batches (batch_id exposed via partition
-    discovery)."""
-    return spark.read.option("basePath", survivors_dir).parquet(survivors_dir)
+    drain(docs_stream, checkpoint_dir, on_batch)

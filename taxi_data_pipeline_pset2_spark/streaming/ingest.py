@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.sources.versioned import versioned_write
+from taxi_data_pipeline_pset2_spark.streaming.state import drain
 
 
 def _batch_checksum(batch_df: DataFrame) -> str:
@@ -46,9 +47,9 @@ def run_streaming_versioned_ingest(
     stream_df: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-):
-    """Start the ingest; returns the StreamingQuery. Batch ``n``
-    commits as an append version tagged ``batch-n-<checksum>``."""
+) -> None:
+    """Drain the stream into the table. Batch ``n`` commits as an
+    append version tagged ``batch-n-<checksum>``."""
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -58,12 +59,7 @@ def run_streaming_versioned_ingest(
         finally:
             batch_df.unpersist()
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(stream_df, checkpoint_dir, on_batch)
 
 
 def read_latest(spark: SparkSession, table_path: str) -> DataFrame:

@@ -18,10 +18,10 @@ with micro-batch boundaries.
 State discipline (the streaming/topk.py contract): per batch, work is
 O(batch + keys * k) -- one batch-sized distinct, one union with the
 carried state, one per-key rank over the (key, distinct hash) frame.
-State is persisted under a batch-id-keyed directory; a replayed batch
-recomputes from its predecessor's directory and overwrites
-byte-identical state, so at-least-once foreachBatch delivery keeps the
-sketch exact.
+The sketch of batch i is batch i's entry of the committed batch log
+(streaming/state.py), folded from exactly batch i - 1's; a replayed
+batch overwrites byte-identical state, so at-least-once foreachBatch
+delivery keeps the sketch exact.
 """
 
 from __future__ import annotations
@@ -31,11 +31,9 @@ from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.operators.kmv import _h
 from taxi_data_pipeline_pset2_spark.streaming.state import (
-    COMMIT_MARKER,
-    hadoop_fs,
-    read_committed_state,
-    state_dir,
-    write_commit_marker,
+    drain,
+    read_batch,
+    write_batch,
 )
 
 _STATE_SCHEMA = "key string, h bigint"
@@ -71,29 +69,13 @@ def kmv_state_merge(
     )
 
 
-# State layout, commit marker, and completeness gate live in
-# streaming/state.py -- the SHARED contract for every batch-keyed
-# monitor in this package (ADVICE r9: only batch_id < 0 maps to the
-# empty frame; missing/uncommitted state and read errors raise).
-# Aliased here to keep this module's historical surface.
-_state_dir = state_dir
-_COMMIT_MARKER = COMMIT_MARKER
-_hadoop_fs = hadoop_fs
-_write_commit_marker = write_commit_marker
-
-
 def read_kmv_state(
     spark: SparkSession, state_base: str, batch_id: int
 ) -> DataFrame:
-    """The (key, h) sketch as of ``batch_id``. Only ``batch_id < 0``
-    (batch 0's no-predecessor sentinel) maps to the empty sketch; a
-    missing or uncommitted directory for a real batch raises and read
-    errors propagate (streaming/state.py read_committed_state --
-    swallowing either would silently reset the sketch and permanently
-    undercount every later estimate)."""
-    return read_committed_state(
-        spark, state_base, batch_id, _STATE_SCHEMA, what="KMV state"
-    )
+    """The (key, h) sketch as of ``batch_id`` (``state.read_batch``:
+    empty only for ``batch_id < 0``, a missing or uncommitted batch
+    raises)."""
+    return read_batch(spark, state_base, batch_id, _STATE_SCHEMA)
 
 
 def read_kmv_estimates(
@@ -119,23 +101,17 @@ def run_streaming_kmv(
     state_base: str,
     checkpoint_dir: str,
     k: int = 64,
-):
-    """Start the monitor; returns the StreamingQuery. Each batch folds
-    its distinct (key, hash) pairs into the carried sketch and writes
-    the new sketch under state_batch=<id> (overwrite ->
-    replay-idempotent)."""
+) -> None:
+    """Drain the stream; each batch folds its distinct (key, hash)
+    pairs into the carried sketch and writes the new sketch under
+    ``state_base``."""
     spark = stream_df.sparkSession
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         prev = read_kmv_state(spark, state_base, batch_id - 1)
-        new_state = kmv_state_merge(prev, batch_df, key_col, col, k)
-        out = _state_dir(state_base, batch_id)
-        new_state.write.mode("overwrite").parquet(out)
-        _write_commit_marker(spark, out)
+        write_batch(
+            spark, state_base, batch_id,
+            kmv_state_merge(prev, batch_df, key_col, col, k),
+        )
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(stream_df, checkpoint_dir, on_batch)

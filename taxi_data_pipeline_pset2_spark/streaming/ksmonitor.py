@@ -10,9 +10,8 @@ Same discipline as the PSI monitor:
     per-value counts (aggregated once at monitor start, localCheckpoint
     pinned -- the reference corpus is never re-scanned; per batch only
     its value-vocabulary-sized count frame re-windows);
- 3. one audit row (batch_id, n_rows, ks_d, ks_lambda, drifted) written
-    to a batch-id-keyed directory -- overwrite on replay, so
-    at-least-once delivery keeps the log exact.
+ 3. one audit row (batch_id, n_rows, ks_d, ks_lambda, drifted) as
+    that batch's entry of the committed batch log (streaming/state.py).
 
 ``threshold`` is on ks_lambda, the scale-free statistic: the classic
 asymptotic alpha=0.05 rejection sits near 1.36 (alpha=0.01 near 1.63).
@@ -20,12 +19,11 @@ asymptotic alpha=0.05 rejection sits near 1.36 (alpha=0.01 near 1.63).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.operators.drift import ks_from_counts
+from taxi_data_pipeline_pset2_spark.streaming.state import drain, write_batch
 
 
 def _value_counts(df: DataFrame, col: str) -> DataFrame:
@@ -76,8 +74,8 @@ def run_streaming_ks_monitor(
     audit_dir: str,
     checkpoint_dir: str,
     threshold: float = 1.36,
-):
-    """Start the monitor; returns the StreamingQuery."""
+) -> None:
+    """Drain the stream, one audit row per batch under ``audit_dir``."""
     spark = reference.sparkSession
     ref_counts = _value_counts(reference, col).localCheckpoint(eager=True)
 
@@ -85,19 +83,6 @@ def run_streaming_ks_monitor(
         row = batch_ks_row(
             spark, batch_df, ref_counts, col, batch_id, threshold
         )
-        row.drop("batch_id").write.mode("overwrite").parquet(
-            os.path.join(audit_dir, f"batch_id={batch_id}")
-        )
+        write_batch(spark, audit_dir, batch_id, row)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_ks_audit(spark: SparkSession, audit_dir: str) -> DataFrame:
-    return spark.read.option("basePath", audit_dir).parquet(
-        os.path.join(audit_dir, "batch_id=*")
-    )
+    drain(stream_df, checkpoint_dir, on_batch)

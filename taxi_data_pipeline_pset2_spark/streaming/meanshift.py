@@ -16,22 +16,27 @@ Per micro-batch (foreachBatch):
         s_pos = max(0, s_pos_prev + z - k)
         s_neg = max(0, s_neg_prev - z - k)
  4. ONE audit row (batch_id, n_rows, batch_mean, z, s_pos, s_neg,
-    alarmed) written to a batch-id-keyed directory -- overwrite on
-    replay.
+    alarmed) as that batch's entry of the committed batch log
+    (streaming/state.py).
 
-State across batches is recovered FROM THE AUDIT LOG ITSELF (the
-latest row with batch_id < current), so an at-least-once replay of
-batch i re-reads exactly the state that preceded i and rewrites an
-identical row: the monitor is replay-idempotent without a separate
-state store. Empty batches carry state forward unchanged.
+The carried state is the audit row of the exact predecessor, batch
+``id - 1``, read through ``state.read_batch`` -- the rule top-k and KMV
+follow -- so an at-least-once replay of batch i re-reads exactly the
+state that preceded i and rewrites an identical row. A missing or
+uncommitted predecessor raises instead of folding from an older state.
+Empty batches carry state forward unchanged.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from taxi_data_pipeline_pset2_spark.streaming.state import (
+    drain,
+    read_batch,
+    write_batch,
+)
 
 
 def reference_moments(df: DataFrame, col: str) -> tuple[float, float]:
@@ -56,42 +61,6 @@ def reference_moments(df: DataFrame, col: str) -> tuple[float, float]:
     if var <= 0:
         raise ValueError("reference has zero variance; nothing to scale by")
     return mean, var ** 0.5
-
-
-def _prior_state(
-    spark: SparkSession, audit_dir: str, batch_id: int
-) -> tuple[float, float]:
-    """(s_pos, s_neg) from the newest audit row older than batch_id;
-    (0, 0) ONLY when no audit exists yet (first batch). A read error
-    over an EXISTING audit dir propagates: mapping it to (0, 0) would
-    silently reset the CUSUM statistics mid-climb and suppress the
-    alarm -- and, because state is recovered from the audit log, poison
-    every later batch (the ADVICE r9 defect class the KMV/top-k
-    monitors guard with streaming/state.py)."""
-    from taxi_data_pipeline_pset2_spark.streaming.state import hadoop_fs
-
-    fs, jdir = hadoop_fs(spark, audit_dir)
-    # "no audit yet" covers both a missing dir and a pre-created empty
-    # one (no batch_id=* children); anything else must read cleanly.
-    # globStatus returns null/empty for no matches -- check len(), a
-    # bare truthiness test on the py4j array proxy is always True.
-    if not fs.exists(jdir):
-        return 0.0, 0.0
-    matches = fs.globStatus(
-        spark._jvm.org.apache.hadoop.fs.Path(audit_dir + "/batch_id=*")
-    )
-    if matches is None or len(matches) == 0:
-        return 0.0, 0.0
-    audit = read_meanshift_audit(spark, audit_dir)
-    row = (
-        audit.filter(F.col("batch_id") < batch_id)
-        .orderBy(F.desc("batch_id"))
-        .limit(1)
-        .collect()
-    )
-    if not row:
-        return 0.0, 0.0
-    return float(row[0]["s_pos"]), float(row[0]["s_neg"])
 
 
 def batch_cusum_row(
@@ -146,34 +115,20 @@ def run_streaming_meanshift_monitor(
     checkpoint_dir: str,
     k: float = 0.5,
     h: float = 5.0,
-):
-    """Start the monitor; returns the StreamingQuery. The audit log
-    lands one parquet directory per batch id (same layout as the drift
-    monitor)."""
+) -> None:
+    """Drain the stream, one audit row per batch under ``audit_dir``."""
     spark = reference.sparkSession
     mu0, sigma0 = reference_moments(reference, col)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s_pos_prev, s_neg_prev = _prior_state(spark, audit_dir, batch_id)
+        prev = read_batch(
+            spark, audit_dir, batch_id - 1, "s_pos double, s_neg double"
+        ).collect()
+        s_pos_prev, s_neg_prev = prev[0] if prev else (0.0, 0.0)
         row = batch_cusum_row(
             spark, batch_df, col, mu0, sigma0, batch_id,
             s_pos_prev, s_neg_prev, k, h,
         )
-        row.drop("batch_id").write.mode("overwrite").parquet(
-            os.path.join(audit_dir, f"batch_id={batch_id}")
-        )
+        write_batch(spark, audit_dir, batch_id, row)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_meanshift_audit(spark: SparkSession, audit_dir: str) -> DataFrame:
-    """The accumulated audit log (batch_id recovered from the directory
-    key)."""
-    return spark.read.option("basePath", audit_dir).parquet(
-        os.path.join(audit_dir, "batch_id=*")
-    )
+    drain(stream_df, checkpoint_dir, on_batch)

@@ -27,15 +27,14 @@ tie at the deduction threshold), so the state carries one metadata row
 with ``value NULL, est NULL`` and ``max_undercount = D``; counter
 consumers filter ``est IS NOT NULL`` (or use :func:`topk_counters`).
 
-State discipline (the streaming/incremental.py + streaming/drift.py
-contract): per batch, work is O(batch + m) -- one exact batch-sized
-aggregate, one outer join against the m-row summary, one (m+1)-th
-order statistic. The summary is persisted under a batch-id-keyed
-directory; a replayed batch recomputes from its predecessor's
-directory and overwrites byte-identical state, so at-least-once
-foreachBatch delivery keeps the summary exact. All counts are exact
-integers; ties at the deduction threshold resolve by (count desc,
-value asc), so state is deterministic under any partitioning.
+State discipline: per batch, work is O(batch + m) -- one exact
+batch-sized aggregate, one outer join against the m-row summary, one
+(m+1)-th order statistic. The summary of batch i is batch i's entry of
+the committed batch log (streaming/state.py), folded from exactly batch
+i - 1's; a replayed batch overwrites byte-identical state, so
+at-least-once foreachBatch delivery keeps the summary exact. All counts
+are exact integers; ties at the deduction threshold resolve by (count
+desc, value asc), so state is deterministic under any partitioning.
 """
 
 from __future__ import annotations
@@ -44,9 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.streaming.state import (
-    read_committed_state,
-    state_dir,
-    write_commit_marker,
+    drain,
+    read_batch,
+    write_batch,
 )
 
 _STATE_SCHEMA = "value string, est bigint, max_undercount bigint"
@@ -131,22 +130,12 @@ def mg_merge(
     return kept.unionByName(meta)
 
 
-_state_dir = state_dir
-
-
 def read_topk_state(
     spark: SparkSession, state_base: str, batch_id: int
 ) -> DataFrame:
-    """The summary as of ``batch_id``. Only ``batch_id < 0`` (batch
-    0's no-predecessor sentinel) maps to the empty summary; a missing
-    or uncommitted directory for a real batch raises and read errors
-    propagate (streaming/state.py read_committed_state). The old
-    swallow-everything fallback could not distinguish 'no predecessor'
-    from 'predecessor unreadable' and silently reset the summary --
-    the ADVICE r9 defect class the KMV monitor already guards."""
-    return read_committed_state(
-        spark, state_base, batch_id, _STATE_SCHEMA, what="top-k summary"
-    )
+    """The summary as of ``batch_id`` (``state.read_batch``: empty only
+    for ``batch_id < 0``, a missing or uncommitted batch raises)."""
+    return read_batch(spark, state_base, batch_id, _STATE_SCHEMA)
 
 
 def run_streaming_topk(
@@ -155,10 +144,10 @@ def run_streaming_topk(
     state_base: str,
     checkpoint_dir: str,
     capacity: int = 64,
-):
-    """Start the monitor; returns the StreamingQuery. Each batch folds
-    its exact value counts into the carried summary and writes the new
-    summary under state_batch=<id> (overwrite -> replay-idempotent)."""
+) -> None:
+    """Drain the stream; each batch folds its exact value counts into
+    the carried summary and writes the new summary under
+    ``state_base``."""
     spark = stream_df.sparkSession
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -169,14 +158,6 @@ def run_streaming_topk(
             .agg(F.count("*").cast("bigint").alias("est"))
             .withColumn("max_undercount", F.lit(0).cast("bigint"))
         )
-        new_state = mg_merge(prev, counts, capacity)
-        out = _state_dir(state_base, batch_id)
-        new_state.write.mode("overwrite").parquet(out)
-        write_commit_marker(spark, out)
+        write_batch(spark, state_base, batch_id, mg_merge(prev, counts, capacity))
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(stream_df, checkpoint_dir, on_batch)

@@ -57,7 +57,6 @@ def _canon_cell(v) -> str:
         # str() of a >1000-element array TRUNCATES with '...', so two
         # different long arrays canonicalize identically -- a silent
         # false PASS in the harness every local replay trusts
-        # (definition-level audit, r12)
         return "[" + ",".join(_canon_cell(x) for x in v) + "]"
     if isinstance(v, (bool, np.bool_)):
         # np.bool_ is NOT a bool subclass; without this it falls to
@@ -106,14 +105,15 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[st
 
 def replay_entry(spark, sf_dir: str, con, entry) -> list[str]:
     """Run one catalog entry and its oracle; return mismatch descriptions
-    (empty = pass). The single shared replay body for the pytest suite
-    AND scripts/sweep_catalog.py (ADVICE r11: the two copies would drift
-    when the compare logic changes). Exceptions are rendered into the
-    problem list so one bad entry cannot poison a shared executor.
+    (empty = pass). The single shared replay body for the pytest suite,
+    scripts/sweep_catalog.py and scripts/preflight_entries.py: separate
+    copies would drift when the compare logic changes. Exceptions are
+    rendered into the problem list so one bad entry cannot poison a
+    shared executor.
 
     Rows-only entries (oracle is None) get the driver's weaker check --
     non-vacuous, since every rows-only op in the registry returns >= 1
-    row on the test tables by construction (VERDICT r7 finding #3).
+    row on the test tables by construction.
     DuckDB connections are not thread-safe; ``.cursor()`` is the
     documented per-thread handle onto the same catalog."""
     import traceback

@@ -13,10 +13,14 @@ from pyspark.sql import functions as F
 from taxi_data_pipeline_pset2_spark.operators.drift import psi_total
 from taxi_data_pipeline_pset2_spark.streaming.drift import (
     batch_psi_row,
-    read_drift_audit,
     run_streaming_drift_monitor,
 )
 from taxi_data_pipeline_pset2_spark.streaming.incremental import read_docs_stream
+from taxi_data_pipeline_pset2_spark.streaming.state import (
+    read_batches,
+    state_dir,
+    write_batch,
+)
 
 
 def _batches():
@@ -56,14 +60,13 @@ def test_stream_psi_matches_batch_operator_and_alerts(spark, tmp_path):
     )
 
     stream = read_docs_stream(spark, flat, max_files_per_trigger=1)
-    q = run_streaming_drift_monitor(
+    run_streaming_drift_monitor(
         stream, reference, "lang", audit, ckpt, threshold=0.25
     )
-    q.awaitTermination(120)
 
     rows = {
         r.batch_id: (r.n_rows, r.psi, r.drifted)
-        for r in read_drift_audit(spark, audit).collect()
+        for r in read_batches(spark, audit).collect()
     }
     assert set(rows) == {0, 1}
     # stream row == batch operator on the same rows
@@ -90,11 +93,36 @@ def test_replay_overwrites_audit_row_idempotently(spark, tmp_path):
     )
     for _ in range(2):  # replayed delivery of the same batch id
         row = batch_psi_row(spark, batch, ref_counts, "lang", 7, 0.25)
-        row.drop("batch_id").write.mode("overwrite").parquet(
-            os.path.join(audit, "batch_id=7")
-        )
-    out = read_drift_audit(spark, audit).collect()
+        write_batch(spark, audit, 7, row)
+    out = read_batches(spark, audit).collect()
     assert len(out) == 1 and out[0].batch_id == 7
+
+
+def test_read_batches_skips_uncommitted_batch(spark, tmp_path):
+    """A batch directory holding parquet rows but no commit marker (a
+    crash after the files landed, before the commit) is not part of
+    the log: reading it back would report a batch the monitor never
+    finished. A log with no committed batch raises."""
+    from taxi_data_pipeline_pset2_spark.operators.drift import category_counts
+
+    audit = str(tmp_path / "audit")
+    with pytest.raises(FileNotFoundError, match="no committed batch"):
+        read_batches(spark, audit)
+    reference = spark.createDataFrame(
+        [(i, "a") for i in range(10)], "event_id long, lang string"
+    )
+    ref_counts = category_counts(reference, "lang", "n_expected")
+    batch = spark.createDataFrame([(1, "a")], "event_id long, lang string")
+    write_batch(
+        spark, audit, 0, batch_psi_row(spark, batch, ref_counts, "lang", 0, 0.25)
+    )
+    partial = state_dir(audit, 1)
+    batch_psi_row(spark, batch, ref_counts, "lang", 1, 0.25).drop(
+        "batch_id"
+    ).write.parquet(partial)
+    os.remove(os.path.join(partial, "_SUCCESS"))
+    assert any(f.endswith(".parquet") for f in os.listdir(partial))
+    assert [r.batch_id for r in read_batches(spark, audit).collect()] == [0]
 
 
 def test_empty_batch_is_quiet(spark):

@@ -14,9 +14,9 @@ from taxi_data_pipeline_pset2_spark.operators.incremental import incremental_ded
 from taxi_data_pipeline_pset2_spark.streaming.incremental import (
     load_index,
     read_docs_stream,
-    read_streaming_survivors,
     run_streaming_incremental_dedup,
 )
+from taxi_data_pipeline_pset2_spark.streaming.state import read_batches
 
 _BASE = (
     "the quick brown fox jumps over the lazy dog while the rain keeps "
@@ -70,7 +70,7 @@ def test_stream_matches_sequential_batches(spark, tmp_path):
     run_streaming_incremental_dedup(stream, index_dir, surv_dir, ckpt)
 
     got = {
-        r.doc_id for r in read_streaming_survivors(spark, surv_dir).collect()
+        r.doc_id for r in read_batches(spark, surv_dir).collect()
     }
 
     # sequential batch-mode reference over the same units
@@ -110,9 +110,9 @@ def test_index_append_is_replay_idempotent(spark, tmp_path):
 
 
 def test_non_default_id_col_round_trips(spark, tmp_path):
-    """ADVICE r5: the index schema must follow id_col -- with a
-    hardcoded doc_id schema a 'uid' corpus read back as all-NULL and the
-    anti-join guard broke."""
+    """The index schema must follow id_col -- with a hardcoded doc_id
+    schema a 'uid' corpus read back as all-NULL and the anti-join guard
+    broke."""
     docs = str(tmp_path / "docs")
     rows = [(10, _BASE), (11, "some entirely different short text about "
                               "benchmark decontamination and token packing "
@@ -125,7 +125,7 @@ def test_non_default_id_col_round_trips(spark, tmp_path):
     run_streaming_incremental_dedup(
         stream, index_dir, surv_dir, str(tmp_path / "ckpt"), id_col="uid"
     )
-    surv = {r.uid for r in read_streaming_survivors(spark, surv_dir).collect()}
+    surv = {r.uid for r in read_batches(spark, surv_dir).collect()}
     assert surv == {10, 11}
     idx = load_index(spark, index_dir, id_col="uid")
     assert idx.columns[0] == "uid"

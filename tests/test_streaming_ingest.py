@@ -51,8 +51,7 @@ def test_each_batch_commits_one_version_with_time_travel(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     stream = read_docs_stream(spark, flat, max_files_per_trigger=1)
-    q = run_streaming_versioned_ingest(stream, tbl, ckpt)
-    q.awaitTermination(120)
+    run_streaming_versioned_ingest(stream, tbl, ckpt)
 
     assert list_versions(tbl) == [0, 1, 2]
     tags = committed_tags(tbl)
@@ -92,13 +91,11 @@ def test_restarted_query_skips_committed_batches(spark, tmp_path):
 
     # first run with checkpoint A ingests everything
     stream = read_docs_stream(spark, flat, max_files_per_trigger=1)
-    q = run_streaming_versioned_ingest(stream, tbl, str(tmp_path / "ckptA"))
-    q.awaitTermination(120)
+    run_streaming_versioned_ingest(stream, tbl, str(tmp_path / "ckptA"))
     # "restart" with a FRESH checkpoint: every batch re-delivers with
     # the same ids (the worst-case total replay)
     stream2 = read_docs_stream(spark, flat, max_files_per_trigger=1)
-    q2 = run_streaming_versioned_ingest(stream2, tbl, str(tmp_path / "ckptB"))
-    q2.awaitTermination(120)
+    run_streaming_versioned_ingest(stream2, tbl, str(tmp_path / "ckptB"))
 
     assert list_versions(tbl) == [0, 1, 2]  # no extra versions
     counts = (

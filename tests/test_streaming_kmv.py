@@ -22,6 +22,11 @@ from taxi_data_pipeline_pset2_spark.streaming.kmv import (
     read_kmv_state,
     run_streaming_kmv,
 )
+from taxi_data_pipeline_pset2_spark.streaming.state import (
+    COMMIT_MARKER,
+    state_dir,
+    write_batch,
+)
 
 K = 8
 
@@ -59,18 +64,18 @@ def _batches():
 
 
 def test_missing_state_raises_instead_of_resetting(spark, tmp_path):
-    """ADVICE r9: only batch_id < 0 (batch 0's no-predecessor sentinel)
-    may map to the empty sketch. A missing state dir for a real batch id
+    """Only batch_id < 0 (batch 0's no-predecessor sentinel) may map to
+    the empty sketch. A missing state dir for a real batch id
     is lost state -- silently substituting an empty sketch would
     permanently undercount every later estimate."""
     base = str(tmp_path / "state")
     assert read_kmv_state(spark, base, -1).count() == 0
     with pytest.raises(FileNotFoundError, match="batch 3"):
         read_kmv_state(spark, base, 3)
-    # a partially written dir (crash mid-overwrite: no _SUCCESS commit
-    # marker) is lost state too -- schema-pinned spark.read over it
-    # would silently yield an empty sketch
-    os.makedirs(os.path.join(base, "state_batch=4"))
+    # a partially written dir (crash mid-overwrite: no commit marker)
+    # is lost state too -- schema-pinned spark.read over it would
+    # silently yield an empty sketch
+    os.makedirs(state_dir(base, 4))
     with pytest.raises(FileNotFoundError, match="batch 4"):
         read_kmv_state(spark, base, 4)
 
@@ -88,8 +93,7 @@ def test_stream_state_equals_batch_sketch_and_replay(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     stream = read_docs_stream(spark, flat, max_files_per_trigger=1)
-    q = run_streaming_kmv(stream, "key", "v", state_base, ckpt, k=K)
-    q.awaitTermination(120)
+    run_streaming_kmv(stream, "key", "v", state_base, ckpt, k=K)
 
     last = len(batches) - 1
     streamed = sorted(
@@ -165,20 +169,14 @@ def test_commit_marker_guard_is_config_independent(spark, tmp_path):
     """The completeness gate resolves the path through ITS Hadoop
     FileSystem (a schemeless path belongs to fs.defaultFS, not
     necessarily the driver's local disk) and trusts the ENGINE-OWNED
-    _KMV_COMMIT marker first, with Hadoop's _SUCCESS as the
-    older-writer fallback -- so a writer/reader skew on
-    marksuccessfuljobs can neither raise on healthy state nor accept a
-    partial directory."""
-    from taxi_data_pipeline_pset2_spark.streaming.kmv import (
-        _write_commit_marker,
-    )
-
+    commit marker first, with Hadoop's _SUCCESS as the fallback -- so a
+    writer/reader skew on marksuccessfuljobs can neither raise on
+    healthy state nor accept a partial directory."""
     base = str(tmp_path / "state")
-    path = os.path.join(base, "state_batch=0")
-    spark.createDataFrame(
-        [("a", 1)], "key string, h bigint"
-    ).write.parquet(path)
-    # older-writer state: _SUCCESS only
+    path = state_dir(base, 0)
+    state = spark.createDataFrame([("a", 1)], "key string, h bigint")
+    # a plain Hadoop-committed write: _SUCCESS only
+    state.write.parquet(path)
     assert read_kmv_state(spark, base, 0).count() == 1
     # neither marker = a crashed overwrite, regardless of any committer
     # config: raise
@@ -187,23 +185,63 @@ def test_commit_marker_guard_is_config_independent(spark, tmp_path):
         read_kmv_state(spark, base, 0)
     # the engine's own marker commits it, even where the writing
     # session's committer skipped _SUCCESS
-    _write_commit_marker(spark, path)
+    write_batch(spark, base, 0, state)
+    os.remove(os.path.join(path, "_SUCCESS"))
     assert read_kmv_state(spark, base, 0).count() == 1
 
 
 def test_writer_drops_engine_commit_marker(spark, tmp_path):
-    """run_streaming_kmv's on_batch must leave _KMV_COMMIT next to each
-    state dir so completeness never depends on the writing session's
-    committer config."""
-    flat = _write_units(spark, str(tmp_path / "in"), _batches()[:1])
-    state = str(tmp_path / "state")
-    q = run_streaming_kmv(
-        read_docs_stream(spark, flat, max_files_per_trigger=10),
-        "key",
-        "v",
-        state,
-        str(tmp_path / "ckpt"),
-        k=K,
+    """Every batch-log writer in the streaming package must leave the
+    commit marker in each batch directory, so completeness never
+    depends on the writing session's committer config."""
+    from taxi_data_pipeline_pset2_spark.streaming.drift import (
+        run_streaming_drift_monitor,
     )
-    q.awaitTermination(120)
-    assert os.path.isfile(os.path.join(state, "state_batch=0", "_KMV_COMMIT"))
+    from taxi_data_pipeline_pset2_spark.streaming.events import (
+        run_batchwise_to_parquet,
+    )
+    from taxi_data_pipeline_pset2_spark.streaming.incremental import (
+        run_streaming_incremental_dedup,
+    )
+    from taxi_data_pipeline_pset2_spark.streaming.ksmonitor import (
+        run_streaming_ks_monitor,
+    )
+    from taxi_data_pipeline_pset2_spark.streaming.meanshift import (
+        run_streaming_meanshift_monitor,
+    )
+    from taxi_data_pipeline_pset2_spark.streaming.topk import run_streaming_topk
+
+    src = str(tmp_path / "in")
+    ref = spark.createDataFrame(
+        [
+            (i, f"src_{i % 3}", i % 5, float(i % 4),
+             f"doc {i} about topic {i % 4} with some more words here")
+            for i in range(12)
+        ],
+        "doc_id long, key string, v long, value double, text string",
+    )
+    ref.coalesce(1).write.parquet(src)
+    index = str(tmp_path / "index")
+    writers = {
+        "kmv": lambda s, o, c: run_streaming_kmv(s, "key", "v", o, c, k=K),
+        "topk": lambda s, o, c: run_streaming_topk(s, "key", o, c),
+        "drift": lambda s, o, c: run_streaming_drift_monitor(s, ref, "key", o, c),
+        "ks": lambda s, o, c: run_streaming_ks_monitor(s, ref, "value", o, c),
+        "meanshift": lambda s, o, c: run_streaming_meanshift_monitor(
+            s, ref, "value", o, c
+        ),
+        "events": run_batchwise_to_parquet,
+        "survivors": lambda s, o, c: run_streaming_incremental_dedup(
+            s, index, o, c
+        ),
+    }
+    for name, run in writers.items():
+        out = str(tmp_path / name)
+        run(
+            read_docs_stream(spark, src, max_files_per_trigger=10),
+            out,
+            str(tmp_path / f"ckpt_{name}"),
+        )
+        assert os.path.isfile(
+            os.path.join(state_dir(out, 0), COMMIT_MARKER)
+        ), name

@@ -7,14 +7,13 @@ import os
 import time
 
 import pytest
-from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.operators.drift import ks_statistic
 from taxi_data_pipeline_pset2_spark.streaming.incremental import read_docs_stream
 from taxi_data_pipeline_pset2_spark.streaming.ksmonitor import (
-    read_ks_audit,
     run_streaming_ks_monitor,
 )
+from taxi_data_pipeline_pset2_spark.streaming.state import read_batches
 
 
 def _batches():
@@ -57,15 +56,14 @@ def test_stream_ks_matches_batch_operator_and_alerts(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     reference = _reference(spark)
 
-    q = run_streaming_ks_monitor(
+    run_streaming_ks_monitor(
         read_docs_stream(spark, flat, max_files_per_trigger=1),
         reference, "value", audit, ckpt, threshold=1.36,
     )
-    q.awaitTermination(120)
 
     rows = {
         r.batch_id: (r.n_rows, r.ks_d, r.ks_lambda, r.drifted)
-        for r in read_ks_audit(spark, audit).collect()
+        for r in read_batches(spark, audit).collect()
     }
     assert set(rows) == {0, 1}
     # stream row == the batch ks_statistic over (batch=A, reference=B)
@@ -87,17 +85,15 @@ def test_replay_overwrites_idempotently(spark, tmp_path):
     audit = str(tmp_path / "audit")
     reference = _reference(spark)
 
-    q = run_streaming_ks_monitor(
+    run_streaming_ks_monitor(
         read_docs_stream(spark, flat, max_files_per_trigger=1),
         reference, "value", audit, str(tmp_path / "c1"), 1.36,
     )
-    q.awaitTermination(120)
-    first = sorted(map(tuple, read_ks_audit(spark, audit).collect()))
+    first = sorted(map(tuple, read_batches(spark, audit).collect()))
     # wipe the checkpoint -> full at-least-once replay of every batch
-    q2 = run_streaming_ks_monitor(
+    run_streaming_ks_monitor(
         read_docs_stream(spark, flat, max_files_per_trigger=1),
         reference, "value", audit, str(tmp_path / "c2"), 1.36,
     )
-    q2.awaitTermination(120)
-    second = sorted(map(tuple, read_ks_audit(spark, audit).collect()))
+    second = sorted(map(tuple, read_batches(spark, audit).collect()))
     assert first == second

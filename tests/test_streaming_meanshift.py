@@ -1,6 +1,7 @@
 """Streaming mean-shift monitor: per-batch CUSUM rows equal the batch
 function with carried state; alarm fires on a genuine level shift;
-replay is idempotent; empty reference rejected."""
+replay is idempotent; a lost predecessor raises; empty reference
+rejected."""
 
 from __future__ import annotations
 
@@ -11,12 +12,15 @@ import pytest
 
 from taxi_data_pipeline_pset2_spark.streaming.meanshift import (
     batch_cusum_row,
-    read_meanshift_audit,
     reference_moments,
     run_streaming_meanshift_monitor,
 )
 from taxi_data_pipeline_pset2_spark.streaming.incremental import (
     read_docs_stream,
+)
+from taxi_data_pipeline_pset2_spark.streaming.state import (
+    read_batches,
+    state_dir,
 )
 
 
@@ -30,12 +34,13 @@ def _batches():
     ]
 
 
-def _write_units(spark, base):
+def _write_units(spark, base, batches=None, start=0):
+    """One parquet file per batch under ``<base>/flat``, mtimes in
+    batch order; a later call with ``start`` appends newer files."""
     flat = os.path.join(base, "flat")
-    os.makedirs(flat)
+    os.makedirs(flat, exist_ok=True)
     t0 = time.time() - 100
-    n = 0
-    for i, rows in enumerate(_batches()):
+    for i, rows in enumerate(batches or _batches(), start):
         unit = os.path.join(base, f"unit{i}")
         spark.createDataFrame(rows, "event_id long, value double").coalesce(
             1
@@ -44,8 +49,7 @@ def _write_units(spark, base):
             if f.endswith(".parquet"):
                 dst = os.path.join(flat, f"part-{i:03d}.parquet")
                 os.rename(os.path.join(unit, f), dst)
-                os.utime(dst, (t0 + n, t0 + n))
-                n += 1
+                os.utime(dst, (t0 + i, t0 + i))
     return flat
 
 
@@ -71,13 +75,12 @@ def test_stream_alarm_fires_on_shift_and_matches_batch(spark, reference, tmp_pat
     audit_dir = str(tmp_path / "audit")
     ckpt = str(tmp_path / "ckpt")
     stream = read_docs_stream(spark, flat, max_files_per_trigger=1)
-    q = run_streaming_meanshift_monitor(
+    run_streaming_meanshift_monitor(
         stream, reference, "value", audit_dir, ckpt
     )
-    q.awaitTermination(120)
     audit = {
         r.batch_id: r
-        for r in read_meanshift_audit(spark, audit_dir).collect()
+        for r in read_batches(spark, audit_dir).collect()
     }
     assert len(audit) == 4
     # on-level batches stay quiet, shifted ones alarm quickly
@@ -101,27 +104,53 @@ def test_replay_is_idempotent(spark, reference, tmp_path):
 
     flat = _write_units(spark, str(tmp_path / "docs"))
     audit_dir = str(tmp_path / "audit")
-    q = run_streaming_meanshift_monitor(
+    run_streaming_meanshift_monitor(
         read_docs_stream(spark, flat, max_files_per_trigger=1),
         reference, "value", audit_dir, str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
     before = sorted(
         (r.batch_id, r.s_pos, r.s_neg, r.alarmed)
-        for r in read_meanshift_audit(spark, audit_dir).collect()
+        for r in read_batches(spark, audit_dir).collect()
     )
     # wipe the checkpoint -> every batch replays with new batch ids from 0
     shutil.rmtree(str(tmp_path / "ckpt"))
-    q2 = run_streaming_meanshift_monitor(
+    run_streaming_meanshift_monitor(
         read_docs_stream(spark, flat, max_files_per_trigger=1),
         reference, "value", audit_dir, str(tmp_path / "ckpt"),
     )
-    q2.awaitTermination(120)
     after = sorted(
         (r.batch_id, r.s_pos, r.s_neg, r.alarmed)
-        for r in read_meanshift_audit(spark, audit_dir).collect()
+        for r in read_batches(spark, audit_dir).collect()
     )
     assert before == after
+
+
+@pytest.mark.parametrize("loss", ["missing", "uncommitted"])
+def test_lost_predecessor_raises(spark, reference, tmp_path, loss):
+    """Batch 2 folds from exactly batch 1's row. With batch 1's entry
+    deleted, or left as an empty directory by a crash mid-overwrite,
+    the monitor must raise naming batch 1 -- not fold batch 2 from
+    batch 0's older CUSUM state."""
+    import shutil
+
+    base = str(tmp_path / "docs")
+    flat = _write_units(spark, base, _batches()[:2])
+    audit_dir = str(tmp_path / "audit")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        run_streaming_meanshift_monitor(
+            read_docs_stream(spark, flat, max_files_per_trigger=1),
+            reference, "value", audit_dir, ckpt,
+        )
+
+    run()
+    shutil.rmtree(state_dir(audit_dir, 1))
+    if loss == "uncommitted":
+        os.makedirs(state_dir(audit_dir, 1))
+    _write_units(spark, base, _batches()[2:3], start=2)
+    with pytest.raises(FileNotFoundError, match="batch 1"):
+        run()
 
 
 def test_empty_batch_carries_state(spark, reference):

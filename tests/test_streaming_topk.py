@@ -11,6 +11,7 @@ from collections import Counter
 import pytest
 
 from taxi_data_pipeline_pset2_spark.streaming.incremental import read_docs_stream
+from taxi_data_pipeline_pset2_spark.streaming.state import state_dir
 from taxi_data_pipeline_pset2_spark.streaming.topk import (
     mg_merge,
     read_topk_state,
@@ -124,8 +125,7 @@ def test_stream_matches_reference_and_guarantee(spark, tmp_path):
     m = 4
 
     stream = read_docs_stream(spark, flat, max_files_per_trigger=1)
-    q = run_streaming_topk(stream, "v", state_base, ckpt, capacity=m)
-    q.awaitTermination(120)
+    run_streaming_topk(stream, "v", state_base, ckpt, capacity=m)
 
     rows = read_topk_state(spark, state_base, len(batches) - 1).collect()
     final = {
@@ -156,21 +156,19 @@ def test_replay_rewrites_identical_state(spark, tmp_path):
     state_base = str(tmp_path / "state")
     m = 4
 
-    q = run_streaming_topk(
+    run_streaming_topk(
         read_docs_stream(spark, flat, max_files_per_trigger=1),
         "v", state_base, str(tmp_path / "ckpt1"), capacity=m,
     )
-    q.awaitTermination(120)
     first = sorted(
         ((r.value or "", r.est or 0, r.max_undercount)
          for r in read_topk_state(spark, state_base, 1).collect())
     )
     # wipe the CHECKPOINT (not the state) -> full at-least-once replay
-    q2 = run_streaming_topk(
+    run_streaming_topk(
         read_docs_stream(spark, flat, max_files_per_trigger=1),
         "v", state_base, str(tmp_path / "ckpt2"), capacity=m,
     )
-    q2.awaitTermination(120)
     second = sorted(
         ((r.value or "", r.est or 0, r.max_undercount)
          for r in read_topk_state(spark, state_base, 1).collect())
@@ -187,7 +185,7 @@ def test_missing_state_raises_instead_of_resetting(spark, tmp_path):
     assert read_topk_state(spark, base, -1).count() == 0
     with pytest.raises(FileNotFoundError, match="batch 2"):
         read_topk_state(spark, base, 2)
-    os.makedirs(os.path.join(base, "state_batch=3"))  # crash mid-overwrite
+    os.makedirs(state_dir(base, 3))  # crash mid-overwrite
     with pytest.raises(FileNotFoundError, match="batch 3"):
         read_topk_state(spark, base, 3)
 
@@ -285,8 +283,8 @@ def test_mg_reference_guarantee_property():
 def test_misra_gries_bound_audit_guarantees(spark):
     """The deterministic MG guarantees on the audit's real batch split:
     never overcounts, the est+undercount bound holds for every kept
-    counter (the r11 re-entry fix), and every true heavy hitter is in
-    the summary."""
+    counter (re-entering values included), and every true heavy hitter
+    is in the summary."""
     from taxi_data_pipeline_pset2_spark.queries.analytics import (
         misra_gries_bound_audit,
     )
