@@ -45,9 +45,10 @@ def render(art: dict) -> str:
             f"| {op['verdict']} |"
         )
         if "rounds" in op:
-            # A factor whose kcore_stats slice was empty has no entry in
-            # rounds/sec_per_round (scale_probe.py guards on 'if sts');
-            # render 'n/a' instead of crashing regeneration (ADVICE r12).
+            # A factor whose rounds_log stayed empty has no entry in
+            # rounds/sec_per_round (scale_probe.py keeps only factors
+            # with a record); render 'n/a' instead of crashing
+            # regeneration.
             r, spr = op["rounds"], op["sec_per_round"]
 
             def cell(d: dict, k: str) -> str:

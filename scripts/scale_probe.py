@@ -31,6 +31,7 @@ def main() -> None:
 
     from taxi_data_pipeline_pset2_spark.operators.driver_path import (
         distributed_only,
+        rounds_log,
     )
     from taxi_data_pipeline_pset2_spark.session import get_spark
     from taxi_data_pipeline_pset2_spark.sources.readers import load_table
@@ -158,9 +159,9 @@ def main() -> None:
 
         return triangle_counts(df)
 
-    # the iterative trio (r8 oracle upgrades): disjoint replicas keep
-    # per-replica structure identical, so round counts do not grow with
-    # the factor -- wall time should scale in the EDGE volume only
+    # the iterative trio: disjoint replicas keep per-replica structure
+    # identical, so round counts do not grow with the factor -- wall
+    # time should scale in the EDGE volume only
     def pr(df):
         from taxi_data_pipeline_pset2_spark.operators.graph import pagerank
 
@@ -170,22 +171,13 @@ def main() -> None:
         with distributed_only():
             return pagerank(df, n_iter=8)
 
-    # kcore's 16x ratio crept 3.84 -> 4.39 across r9/r10 with a
-    # plausible-but-unmeasured "more rounds to converge" explanation
-    # (VERDICT r10 finding #2); record rounds + sec/round per call so
-    # the ratio decomposes into algorithmic rounds x per-round cost.
-    kcore_stats: list[dict] = []
-
     def kc(df):
         from taxi_data_pipeline_pset2_spark.operators.graph import kcore
 
-        st: dict = {}
         # the DISTRIBUTED loop's scaling (the driver fast path would
         # absorb every factor of this sweep)
         with distributed_only():
-            out = kcore(df, stats_out=st)
-        kcore_stats.append(st)
-        return out
+            return kcore(df)
 
     def lpa(df):
         from taxi_data_pipeline_pset2_spark.operators.graph import (
@@ -231,13 +223,13 @@ def main() -> None:
 
         return incremental_dedup(probe_batch, index).new_index_rows
 
-    # stats-family probe (r14, VERDICT r13 #5): spearman's rank maps are
-    # per-DISTINCT-value windows, so the axis that matters is the
-    # distinct-value count -- the replica jitter below grows the value
-    # vocabulary linearly with the factor (x*f + rep), measuring the
-    # vocabulary-window regime the bucketed-rank variant was built for
-    # (r13 measured the bucketed form SLOWER at sf0.1's vocabulary and
-    # reverted it; this row is the crossover evidence).
+    # stats-family probe: spearman's rank maps are per-DISTINCT-value
+    # windows, so the axis that matters is the distinct-value count --
+    # the replica jitter below grows the value vocabulary linearly with
+    # the factor (x*f + rep), measuring the vocabulary-window regime a
+    # bucketed-rank variant would be built for (the bucketed form
+    # measured SLOWER at sf0.1's vocabulary; this row is the crossover
+    # evidence).
     vbase = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -265,10 +257,10 @@ def main() -> None:
 
         return spearman_corr(df, "x", "y", ["flag"])
 
-    # ANN-family probe (r14, VERDICT r13 #8): the r13 driver fast path
-    # absorbed the bench entries, so this row proves the DISTRIBUTED
-    # Lloyd loop (distributed_only) still scales in corpus rows --
-    # per-replica jitter keeps vectors distinct on the 1e-6 grid.
+    # ANN-family probe: the driver fast path absorbs the bench entries,
+    # so this row proves the DISTRIBUTED Lloyd loop (distributed_only)
+    # still scales in corpus rows -- per-replica jitter keeps vectors
+    # distinct on the 1e-6 grid.
     abase = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -304,26 +296,27 @@ def main() -> None:
     for name, gen, fn in runs:
         times: dict[int, float] = {}
         raw: dict[int, list[float]] = {}
-        kcore_slices: dict[int, tuple[int, int]] = {}
+        loops: dict[int, list] = {}
         for factor in FACTORS:
             df = gen(factor).localCheckpoint(eager=True)  # exclude gen cost
-            mark = len(kcore_stats)
             walls: list[float] = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(df).write.format("noop").mode("overwrite").save()
-                walls.append(time.perf_counter() - t0)
-            if min(walls) >= 10.0:
-                # long rows are the noise-dominated ones (the k-core 16x
-                # ratio wandered 3.6-5.6 between same-round refreshes on
-                # ambient load, VERDICT r11 #1): a third repeat tightens
-                # the best-of estimate exactly where it matters
-                t0 = time.perf_counter()
-                fn(df).write.format("noop").mode("overwrite").save()
-                walls.append(time.perf_counter() - t0)
+            with rounds_log() as log:
+                for _ in range(2):
+                    t0 = time.perf_counter()
+                    fn(df).write.format("noop").mode("overwrite").save()
+                    walls.append(time.perf_counter() - t0)
+                if min(walls) >= 10.0:
+                    # long rows are the noise-dominated ones (the k-core
+                    # 16x ratio wandered 3.6-5.6 between refreshes on
+                    # ambient load): a third repeat tightens the best-of
+                    # estimate exactly where it matters
+                    t0 = time.perf_counter()
+                    fn(df).write.format("noop").mode("overwrite").save()
+                    walls.append(time.perf_counter() - t0)
             times[factor] = round(min(walls), 3)
             raw[factor] = [round(w, 3) for w in walls]
-            kcore_slices[factor] = (mark, len(kcore_stats))
+            if log:
+                loops[factor] = log
             df.unpersist()
         r4 = round(times[4] / times[1], 2)
         r16 = round(times[16] / times[1], 2)
@@ -331,30 +324,26 @@ def main() -> None:
             "op": name, "sec": {str(k): v for k, v in times.items()},
             # every repeat, in run order: the spread IS the ambient-noise
             # band, recorded so a future ratio move is attributable
-            # without re-running (VERDICT r11 #1)
+            # without re-running
             "runs_sec": {str(k): v for k, v in raw.items()},
             "ratio_4x": r4, "ratio_16x": r16,
             "verdict": "near-linear" if r16 <= 24 else "SUPERLINEAR",
         }
-        if name == "kcore":
-            # rounds are deterministic per instance; sec/round takes the
+        if loops:
+            # the rounds_log of every iterative op, so a wall ratio
+            # decomposes into algorithmic rounds x per-round cost: rounds
+            # are deterministic per instance; sec/round takes the
             # quietest of this factor's repeats
-            stats_by_factor = {
-                f: kcore_stats[a:b] for f, (a, b) in kcore_slices.items()
-            }
-            rec["rounds"] = {
-                str(f): sts[0]["rounds"]
-                for f, sts in stats_by_factor.items() if sts
-            }
+            rec["rounds"] = {str(f): log[0].rounds for f, log in loops.items()}
             rec["sec_per_round"] = {
-                str(f): min(s["sec_per_round"] for s in sts)
-                for f, sts in stats_by_factor.items() if sts
+                str(f): round(min(r.seconds / max(r.rounds, 1) for r in log), 3)
+                for f, log in loops.items()
             }
         results.append(rec)
         print(json.dumps(rec))
-    # Persist the measured ratios as a tracked artifact (VERDICT r8 item
-    # #2) so the next round can diff them instead of re-deriving from
-    # commit messages. Written next to the script's repo root.
+    # Persist the measured ratios as a tracked artifact so the next
+    # round can diff them instead of re-deriving from commit messages.
+    # Written next to the script's repo root.
     out_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "SCALEPROBE.json",

@@ -13,9 +13,10 @@ engine splits the work the way real trainers do:
   pairs over the word table (weighted by word frequency), takes the top
   pair (one driver row), and rewrites the symbol arrays. No iteration
   ever touches the corpus again.
-- lineage is truncated with ``localCheckpoint`` every few merges --
-  an iterative-plan necessity (cf. operators/clustering.py,
-  operators/components.py), not an optimization.
+- the merges run in driver_path.iterate, which local-checkpoints every
+  merge's table (lazily; eagerly every 8th) so the plan never grows --
+  an iterative-plan necessity (cf. operators/components.py), not an
+  optimization.
 
 Pair counting is pure column expressions (the zip_with shifted-slice
 pattern shared with dedup.positioned_shingles). The per-word merge
@@ -42,10 +43,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.operators.dedup import tokenize
-from taxi_data_pipeline_pset2_spark.operators.driver_path import bounded_arrow
+from taxi_data_pipeline_pset2_spark.operators.driver_path import (
+    bounded_arrow,
+    iterate,
+)
 
 EOW = "</w>"  # end-of-word marker, standard BPE
-CHECKPOINT_EVERY = 8  # merge iterations between lineage truncations
 # Vocabularies up to this many distinct words run bpe_learn's merge loop
 # and tokenize_bpe's encode on the driver (operators/driver_path.py).
 # Heaps' law keeps a web corpus's vocab ~1e7, so the cap is a memory
@@ -135,7 +138,8 @@ def bpe_learn(
     if tbl is not None:
         return _bpe_learn_driver(tbl, n_merges, min_count)
     merges: list[tuple[str, str]] = []
-    for i in range(n_merges):
+
+    def merge_top(table: DataFrame) -> DataFrame | None:
         top = (
             _pair_counts(table)
             .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
@@ -143,14 +147,14 @@ def bpe_learn(
             .collect()
         )
         if not top or top[0]["n"] < min_count:
-            break
+            return None
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        table = table.mapInPandas(_merge_kernel(a, b), schema=table.schema)
-        if (i + 1) % CHECKPOINT_EVERY == 0:
-            table = table.localCheckpoint(eager=True)
-        else:
-            table = table.localCheckpoint(eager=False)
+        if len(merges) == n_merges:
+            return None  # the table after the last merge is never read
+        return table.mapInPandas(_merge_kernel(a, b), schema=table.schema)
+
+    iterate("bpe_learn", table, merge_top, max_rounds=n_merges, checkpoint_every=8)
     return merges
 
 
@@ -186,21 +190,6 @@ def _bpe_learn_driver(
                     out.append(s)
             table[idx] = (freq, out)
     return merges
-
-
-def bpe_vocab(
-    docs: DataFrame, merges: list[tuple[str, str]], text_col: str = "text"
-) -> DataFrame:
-    """(symbol, n): the symbol inventory after applying ``merges`` to
-    the corpus -- base characters + merged units, frequency-weighted."""
-    enc = bpe_encode(
-        word_symbol_table(docs, text_col), merges, symbols_col="symbols"
-    )
-    return (
-        enc.select(F.col("freq"), F.explode("symbols").alias("symbol"))
-        .groupBy("symbol")
-        .agg(F.sum("freq").cast("bigint").alias("n"))
-    )
 
 
 def _encode_symbols(
@@ -323,7 +312,7 @@ def tokenize_bpe(
                 )
 
         # id-keyed spread: hashing the _toks array to pick a partition
-        # would re-scan every token byte (VERDICT r13 #1)
+        # would re-scan every token byte
         return spread_small_input(base, key_cols=[id_col]).mapInPandas(
             run, schema=out_schema
         )

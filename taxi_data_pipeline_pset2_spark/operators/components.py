@@ -16,13 +16,14 @@ that needs O(diameter) rounds, and near-dup graphs can chain (A~B~C...)
 into long paths; alternation converges in O(log^2 n) rounds regardless
 of diameter, each round a fixed two-shuffle DataFrame program.
 
-100 TB notes: per round, each star op is ONE hash shuffle (a window min
-partitioned by node) plus a distinct; no collect, no driver-side graph.
-State is the edge set itself, monotonically contracting toward stars.
-`localCheckpoint` after each round truncates lineage so the plan does
-not grow with iterations (the classic iterative-Spark failure mode).
-Convergence is detected by an (edge-count, xxhash64-checksum) pair --
-one tiny aggregate per round, not a full self-comparison join.
+100 TB notes: per round, each star op is ONE hash shuffle (an
+aggregate min per node joined back) plus a distinct; no collect, no
+driver-side graph. State is the edge set itself, monotonically
+contracting toward stars. The rounds run in driver_path.iterate, which
+localCheckpoints each one so the plan does not grow with iterations
+(the classic iterative-Spark failure mode), and detects convergence by
+an (edge-count, xxhash64-checksum) pair observed on that checkpoint --
+no extra job, not a full self-comparison join.
 
 Small-edge-set fast path: candidate-pair frames are DUP-sized, not
 corpus-sized, and usually fit the driver with room to spare; up to
@@ -37,10 +38,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from taxi_data_pipeline_pset2_spark.operators.driver_path import bounded_arrow
+from taxi_data_pipeline_pset2_spark.operators.driver_path import (
+    bounded_arrow,
+    iterate,
+)
 
 # O(log^2 n) expected; 50 rounds covers any conceivable corpus. Hitting
-# the cap raises rather than silently returning a partial clustering.
+# the cap raises NotConverged rather than silently returning a partial
+# clustering.
 MAX_CC_ROUNDS = 50
 
 # Edge sets at or below this size resolve on the driver (~16 bytes/edge
@@ -53,7 +58,7 @@ def _large_star(edges: DataFrame) -> DataFrame:
     minimum of u's closed neighborhood. Emits (v, m) for v > u.
 
     The per-node minimum is a map-side-combined AGGREGATE joined back,
-    not a window (r9 skew fix, the k-core pattern): an unbounded-frame
+    not a window (the skew fix of the k-core pattern): an unbounded-frame
     window buffers a hub's entire neighbor list inside one task, while
     the aggregate reduces it map-side and the join streams -- same
     shuffle key, no per-key buffer."""
@@ -83,18 +88,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
         star.select("u", "m")
     )
     return out.filter(F.col("u") != F.col("v")).distinct()
-
-
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
-    # decimal(38,0) accumulator: a bigint sum of 64-bit hashes overflows
-    # under ANSI mode on any non-trivial edge set
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return (row.n, int(row.h))
 
 
 def _driver_components(edges: DataFrame, tbl) -> DataFrame:
@@ -146,8 +139,11 @@ def connected_components(
 
     Edge sets up to DRIVER_CC_EDGE_CAP resolve on the driver by exact
     union-find (see operators/driver_path.py); larger sets run the
-    distributed star alternation.
+    distributed star alternation, which raises NotConverged when it
+    exhausts ``max_rounds`` (>= 1).
     """
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     edges, tbl = bounded_arrow(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -156,17 +152,18 @@ def connected_components(
     )
     if tbl is not None:
         return _driver_components(edges, tbl)
-    prev = _edge_checksum(edges)
-    for _ in range(max_rounds):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        cur = _edge_checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
-        )
+    # decimal(38,0) accumulator: a bigint sum of 64-bit hashes overflows
+    # under ANSI mode on any non-trivial edge set
+    checksum = F.struct(
+        F.count("*"), F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
+    )
+    edges = iterate(
+        "connected_components",
+        edges,
+        lambda e: _small_star(_large_star(e)),
+        max_rounds=max_rounds,
+        fingerprint=checksum,
+    )
     # At the fixpoint every edge is (node, component-min); roots appear
     # only on the right-hand side and map to themselves.
     children = edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
@@ -226,7 +223,7 @@ def resolve_duplicate_clusters(
         F.broadcast(comp.withColumnRenamed("node", id_col)), id_col
     )
     # survivor = (max score, then min id) via map-side-combined
-    # aggregates + joins, NOT a per-component row_number window (r9
+    # aggregates + joins, NOT a per-component row_number window (a
     # skew fix): a pathological corpus that chains into one giant
     # cluster would sort the whole membership inside one window task,
     # while aggregates combine map-side. eqNullSafe keeps the

@@ -17,10 +17,11 @@ Every operator runs at the session's shuffle width (AQE coalesces the
 small exchanges); none writes the session conf. The iterative ones
 (pagerank, LPA, kcore) hand their cleaned edge set to
 operators/driver_path.py, which checkpoints it once. When it fits a cap
-the driver kernel runs on its Arrow table; otherwise the distributed
-rounds start from that checkpoint and localCheckpoint as they go, so
-lineage stays bounded. triangle_counts and degree_assortativity are
-single lazy plans over one canonical-edge front (_canonical_edges).
+the driver kernel runs on its Arrow table; otherwise the operator's
+round function runs in driver_path.iterate from that checkpoint, which
+owns the lineage cadence, kcore's convergence check and its
+NotConverged. triangle_counts and degree_assortativity are single lazy
+plans over one canonical-edge front (_canonical_edges).
 """
 
 from __future__ import annotations
@@ -28,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from taxi_data_pipeline_pset2_spark.operators.driver_path import bounded_arrow
+from taxi_data_pipeline_pset2_spark.operators.driver_path import (
+    NotConverged,
+    bounded_arrow,
+    iterate,
+    record_rounds,
+)
 
 
 def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -48,18 +54,6 @@ def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 # on the driver (operators/driver_path.py): 4M edges x ~24 B of
 # id/weight state is tens of MB.
 DRIVER_PAGERANK_EDGE_CAP = 4_000_000
-
-# Distributed pagerank localCheckpoints every this many rounds. A
-# checkpoint per round is one materialization job per round, mostly
-# fixed job overhead; the rounds between checkpoints are instead
-# persist()-marked (lazy, no job), so the one checkpoint job evaluates
-# the whole segment, each intermediate computed ONCE (the dang branch
-# and the broadcast branch both read the cache), and lineage depth stays
-# bounded at this many join+agg layers. At sf0.1 cadence 1/2/3 land
-# within ~5% of each other; 2 halves the job count. Cadence >= ~8 is a
-# driver-heap hazard: every un-materialized round holds a PENDING
-# broadcast of the rank frame, and nested broadcasts OOM'd at 8.
-CHECKPOINT_EVERY = 2
 
 
 def _pagerank_driver(spark, edges_tbl, damping, n_iter):
@@ -202,93 +196,86 @@ def pagerank(
         .agg(F.sum("_w").alias("_deg"))
         .persist()
     )
-    n = nodes_deg.count()
-    if n == 0:
-        e.unpersist()
-        nodes_deg.unpersist()
-        return edges.sparkSession.createDataFrame(
-            [], "node string, rank double"
-        )
-    segment: list[DataFrame] = []
-    try:
-        ranks = nodes_deg.withColumn(
-            "rank", F.lit(1.0 / n)
-        ).localCheckpoint()
-        for _round in range(n_iter):
-            # ONE aggregate per round: three branches union into a
-            # single node-keyed hash aggregate --
-            #  (a) edge contributions: ranks is node-sized, broadcast
-            #      onto the persisted edge partitions (at node counts
-            #      past broadcast range Spark falls back to the
-            #      src-partitioned sort-merge join against the
-            #      pre-partitioned edges -- still node-sized traffic,
-            #      never the edges);
-            #  (b) the dangling mass, keyed by a NULL node (real nodes
-            #      are non-NULL by the entry filter, so NULL is a free
-            #      marker and groupBy keeps it as its own group);
-            #  (c) nodes_deg as zero-contribution rows carrying _deg, so
-            #      the aggregate's key set is the node set and _deg
-            #      rides through max() (NULL-ignoring) -- no left join;
-            #      its exact-0.0 addends cannot move an IEEE sum.
-            grouped = (
-                e.join(
-                    F.broadcast(ranks.filter(F.col("_deg").isNotNull())),
-                    e.src == F.col("node"),
-                )
-                .select(
-                    F.col("dst").alias("node"),
+
+    def power_round(ranks: DataFrame) -> DataFrame:
+        # ONE aggregate per round: three branches union into a single
+        # node-keyed hash aggregate --
+        #  (a) edge contributions: ranks is node-sized, broadcast onto
+        #      the persisted edge partitions (at node counts past
+        #      broadcast range Spark falls back to the src-partitioned
+        #      sort-merge join against the pre-partitioned edges --
+        #      still node-sized traffic, never the edges);
+        #  (b) the dangling mass, keyed by a NULL node (real nodes are
+        #      non-NULL by the entry filter, so NULL is a free marker
+        #      and groupBy keeps it as its own group);
+        #  (c) nodes_deg as zero-contribution rows carrying _deg, so the
+        #      aggregate's key set is the node set and _deg rides
+        #      through max() (NULL-ignoring) -- no left join; its
+        #      exact-0.0 addends cannot move an IEEE sum.
+        grouped = (
+            e.join(
+                F.broadcast(ranks.filter(F.col("_deg").isNotNull())),
+                e.src == F.col("node"),
+            )
+            .select(
+                F.col("dst").alias("node"),
+                F.lit(None).cast("double").alias("_deg"),
+                (F.col("rank") * F.col("_w") / F.col("_deg")).alias("_c"),
+            )
+            .unionAll(
+                ranks.filter(F.col("_deg").isNull()).select(
+                    F.lit(None).cast("string").alias("node"),
                     F.lit(None).cast("double").alias("_deg"),
-                    (F.col("rank") * F.col("_w") / F.col("_deg")).alias("_c"),
-                )
-                .unionAll(
-                    ranks.filter(F.col("_deg").isNull()).select(
-                        F.lit(None).cast("string").alias("node"),
-                        F.lit(None).cast("double").alias("_deg"),
-                        F.col("rank").alias("_c"),
-                    )
-                )
-                .unionAll(
-                    nodes_deg.select("node", "_deg", F.lit(0.0).alias("_c"))
-                )
-                .groupBy("node")
-                .agg(
-                    F.max("_deg").alias("_deg"),
-                    F.sum("_c").alias("_contrib"),
+                    F.col("rank").alias("_c"),
                 )
             )
-            # the NULL-node group is the dangling mass; agg always
-            # yields one row (0.0 when no node dangles), and the
-            # identical exchange subtree is computed once (reused
-            # exchange) for both consumers
-            dang = grouped.filter(F.col("node").isNull()).agg(
-                F.coalesce(F.sum("_contrib"), F.lit(0.0)).alias("_dang")
+            .unionAll(nodes_deg.select("node", "_deg", F.lit(0.0).alias("_c")))
+            .groupBy("node")
+            .agg(F.max("_deg").alias("_deg"), F.sum("_c").alias("_contrib"))
+        )
+        # the NULL-node group is the dangling mass; agg always yields
+        # one row (0.0 when no node dangles), and the identical exchange
+        # subtree is computed once (reused exchange) for both consumers
+        dang = grouped.filter(F.col("node").isNull()).agg(
+            F.coalesce(F.sum("_contrib"), F.lit(0.0)).alias("_dang")
+        )
+        return (
+            grouped.filter(F.col("node").isNotNull())
+            .crossJoin(F.broadcast(dang))
+            .select(
+                "node",
+                "_deg",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping) * F.col("_dang") / n
+                    + F.lit(damping) * F.col("_contrib")
+                ).alias("rank"),
             )
-            ranks = (
-                grouped.filter(F.col("node").isNotNull())
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "node",
-                    "_deg",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping) * F.col("_dang") / n
-                        + F.lit(damping) * F.col("_contrib")
-                    ).alias("rank"),
-                )
+        )
+
+    try:
+        n = nodes_deg.count()
+        if n == 0:
+            return edges.sparkSession.createDataFrame(
+                [], "node string, rank double"
             )
-            if (_round + 1) % CHECKPOINT_EVERY == 0 or _round == n_iter - 1:
-                ranks = ranks.localCheckpoint()
-                for c in segment:
-                    c.unpersist()
-                segment = []
-            else:
-                ranks = ranks.persist()
-                segment.append(ranks)
+        # Eager checkpoint every 2 rounds: one per round is one more
+        # job per round, mostly fixed overhead; at sf0.1 cadence 1/2/3
+        # landed within ~5% of each other. Cadence >= ~8 OOM'd the
+        # driver when the rounds between were persisted, each holding a
+        # PENDING broadcast of the rank frame; lazy checkpoints run each
+        # round's broadcast when the round is planned, but no larger
+        # cadence has been measured since.
+        ranks = iterate(
+            "pagerank",
+            nodes_deg.withColumn("rank", F.lit(1.0 / n)),
+            power_round,
+            max_rounds=n_iter,
+            checkpoint_every=2,
+        )
     finally:
         e.unpersist()
         nodes_deg.unpersist()
-        for c in segment:
-            c.unpersist()
     # 8-dp rounding via the catalog's scaled-bigint discipline (round the
     # IEEE product, not the shortest-decimal repr) so a DuckDB oracle can
     # reproduce the value bit-exactly -- see queries/catalog.py docstring.
@@ -454,10 +441,10 @@ def label_propagation(
     LPA splits a connected graph into densely-knit communities.
     Per round: one join of the (node, label) frame onto the checkpointed
     symmetrized edges + one (node, label) count aggregate + one
-    per-node argmax window -- node/edge-shaped work only, ranks frame
-    localCheckpoint'ed per round (same lineage discipline as
-    pagerank). Graphs up to DRIVER_GRAPH_EDGE_CAP symmetrized edges run
-    on the driver; see operators/driver_path.py for the contract."""
+    per-node argmax window -- node/edge-shaped work only, the label
+    frame localCheckpoint'ed every round by driver_path.iterate.
+    Graphs up to DRIVER_GRAPH_EDGE_CAP symmetrized edges run on the
+    driver; see operators/driver_path.py for the contract."""
     return _undirected_loop(
         edges, src_col, dst_col,
         lambda spark, tbl: _lpa_driver(spark, tbl, n_iter),
@@ -500,48 +487,49 @@ def _undirected_loop(
 def _lpa_body(sym: DataFrame, n_iter: int) -> DataFrame:
     from pyspark.sql import Window
 
-    nodes = sym.select(F.col("a").alias("node")).distinct().persist()
-    try:
-        labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
-        w = Window.partitionBy("node").orderBy(
-            F.desc("_cnt"), F.asc("label")
+    w = Window.partitionBy("node").orderBy(F.desc("_cnt"), F.asc("label"))
+
+    def vote(labels: DataFrame) -> DataFrame:
+        neigh = (
+            sym.join(
+                labels.withColumnRenamed("node", "b"), "b"
+            )  # label of each neighbor b, delivered to node a
+            .groupBy(F.col("a").alias("node"), "label")
+            .agg(F.count("*").alias("_cnt"))
         )
-        for _ in range(n_iter):
-            neigh = (
-                sym.join(
-                    labels.withColumnRenamed("node", "b"), "b"
-                )  # label of each neighbor b, delivered to node a
-                .groupBy(F.col("a").alias("node"), "label")
-                .agg(F.count("*").alias("_cnt"))
-            )
-            labels = (
-                neigh.withColumn("_r", F.row_number().over(w))
-                .filter(F.col("_r") == 1)
-                .select("node", "label")
-                .localCheckpoint()
-            )
-    finally:
-        nodes.unpersist()
+        return (
+            neigh.withColumn("_r", F.row_number().over(w))
+            .filter(F.col("_r") == 1)
+            .select("node", "label")
+        )
+
+    nodes = sym.select(F.col("a").alias("node")).distinct()
+    labels = iterate(
+        "label_propagation",
+        nodes.withColumn("label", F.col("node")),
+        vote,
+        max_rounds=n_iter,
+    )
     return labels.orderBy("node")
 
 
-def _kcore_driver(spark, sym_tbl, max_iter, stats_out):
+def _kcore_driver(spark, sym_tbl, max_iter):
     """Driver-side H-index iteration over collected edges: identical
     integer update (H = max over neighbor ranks r of min(r, v_r-desc)),
-    identical unique fixpoint, convergence checked exactly per round
-    (the distributed loop's every-3-rounds check only ever runs
-    idempotent extra rounds, so the fixpoint frames are equal)."""
-    import time as _time
+    identical unique fixpoint, and the same round count and record as
+    the distributed loop (both stop at the first round that changes no
+    node)."""
+    import time
 
     import numpy as np
     import pandas as pd
 
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     nodes, a_idx, b_idx = _lex_indexed_sym(sym_tbl)
     n = len(nodes)
     cur = np.bincount(a_idx, minlength=n).astype(np.int64)  # degree init
-    rounds_run = 0
-    converged = n == 0
+    rounds = 0
+    converged = False
     for _ in range(max_iter):
         v = cur[b_idx]
         order = np.lexsort((-v, a_idx))  # by node, value desc
@@ -551,22 +539,14 @@ def _kcore_driver(spark, sym_tbl, max_iter, stats_out):
             starts, np.diff(np.r_[starts, len(aa)])
         )
         new = np.maximum.reduceat(np.minimum(rank + 1, va), starts)
-        rounds_run += 1
-        if np.array_equal(new, cur):
-            converged = True
-            cur = new
-            break
+        rounds += 1
+        converged = np.array_equal(new, cur)
         cur = new
+        if converged:
+            break
+    record_rounds("kcore", rounds, converged, time.perf_counter() - t0)
     if not converged:
-        raise RuntimeError(
-            f"kcore did not converge in {max_iter} rounds; raise max_iter "
-            "-- diameter-shaped graphs need ~diameter/2 rounds"
-        )
-    if stats_out is not None:
-        sec = _time.perf_counter() - t0
-        stats_out["rounds"] = rounds_run
-        stats_out["sec_iterating"] = round(sec, 3)
-        stats_out["sec_per_round"] = round(sec / max(rounds_run, 1), 3)
+        raise NotConverged("kcore", rounds)
     out = pd.DataFrame({"node": np.asarray(nodes, dtype=object), "core": cur})
     res = spark.createDataFrame(out, schema="node string, core bigint")
     return res.orderBy("node")
@@ -577,7 +557,6 @@ def kcore(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 100,
-    stats_out: dict | None = None,
 ) -> DataFrame:
     """Core number per node -- the largest k such that the node sits in
     a subgraph where everyone keeps >= k neighbors: (node, core)
@@ -595,49 +574,38 @@ def kcore(
     worst case is O(diameter), NOT logarithmic: on a path graph the
     value-1 region advances one hop per round from each end, so a
     D-diameter chain needs ~D/2 rounds -- which is why exhausting
-    ``max_iter`` without converging RAISES instead of returning the
-    still-wrong interim values. The fixpoint is unique, so output is
-    deterministic no matter how many rounds convergence took.
+    ``max_iter`` (>= 1) without converging raises ``NotConverged``
+    (raise max_iter for diameter-shaped graphs) instead of returning
+    the still-wrong interim values. The fixpoint is unique, so output
+    is deterministic no matter how many rounds convergence took.
 
     Per round: one node-keyed join of the value frame onto the
     checkpointed symmetrized edges, one per-node descending window (the
     H-index is max over rank r of min(r, value_r)), one hash
-    aggregate; ONE scalar (changed-node count) reaches the driver --
-    edge-shaped shuffles only, localCheckpoint lineage truncation, the
-    pagerank/LPA discipline. Self-loops and NULL endpoints drop;
-    parallel edges collapse (simple-graph coreness). All-integer and
-    idempotent at the unique fixpoint, so despite being iterative it
-    carries a full unrolled-CTE DuckDB twin (queries/analytics.py
-    _kcore_oracle, unrolled to KCORE_ORACLE_ROUNDS -- see the constant
-    there for the convergence-headroom argument); peeling-reference
-    equality in tests/test_graph.py.
-    ``stats_out``: optional dict the call fills with {rounds,
-    sec_iterating, sec_per_round} -- the iteration executes eagerly
-    (localCheckpoint per round), so these are real measurements,
-    exposed so the scale probe can decompose a wall ratio into
-    algorithmic rounds x per-round cost. Graphs up to
-    DRIVER_GRAPH_EDGE_CAP symmetrized edges run on the driver (see
-    operators/driver_path.py); ``stats_out`` reports whichever loop
-    ran."""
+    aggregate, run by driver_path.iterate: a localCheckpoint per round,
+    whose observed sum(core) detects the fixpoint in that same job.
+    Both paths stop at the first round that changes no node and append
+    one ``Rounds`` record to an open ``rounds_log()``. Self-loops and
+    NULL endpoints drop; parallel edges collapse (simple-graph
+    coreness). All-integer and idempotent at the unique fixpoint, so
+    despite being iterative it carries a full unrolled-CTE DuckDB twin
+    (queries/analytics.py _kcore_oracle, unrolled to
+    KCORE_ORACLE_ROUNDS -- see the constant there for the
+    convergence-headroom argument); peeling-reference equality in
+    tests/test_graph.py. Graphs up to DRIVER_GRAPH_EDGE_CAP symmetrized
+    edges run on the driver (see operators/driver_path.py)."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     return _undirected_loop(
         edges, src_col, dst_col,
-        lambda spark, tbl: _kcore_driver(spark, tbl, max_iter, stats_out),
-        lambda sym: _kcore_body(sym, max_iter, stats_out),
+        lambda spark, tbl: _kcore_driver(spark, tbl, max_iter),
+        lambda sym: _kcore_body(sym, max_iter),
     )
 
 
-def _kcore_body(
-    sym: DataFrame, max_iter: int, stats_out: dict | None = None
-) -> DataFrame:
-    import time as _time
-
+def _kcore_body(sym: DataFrame, max_iter: int) -> DataFrame:
     from pyspark.sql.window import Window
 
-    cur = (
-        sym.groupBy(F.col("a").alias("node"))
-        .agg(F.count("*").cast("bigint").alias("core"))
-        .localCheckpoint()
-    )
     # The H-index update uses the tied-group closed form
     # H = max over distinct values v of min(v, count(neighbors with
     # value >= v)) -- identical integers to the rank formulation
@@ -657,23 +625,13 @@ def _kcore_body(
     w = Window.partitionBy("a").orderBy(F.desc("_v")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    # Convergence is checked every `check_every` rounds, not every
-    # round: the changed-count join is a full extra job per round,
-    # and because the iteration is IDEMPOTENT at the fixpoint, any
-    # rounds run past convergence are exact no-ops -- the trade is
-    # at most (check_every - 1) redundant cheap rounds for a
-    # check_every-fold cut in driver round-trips (measured 38
-    # rounds at sf0.1: ~76 jobs -> ~51).
-    check_every = 3
-    prev_checked = cur
-    _t_iter0 = _time.perf_counter()
-    rounds_run = 0
-    for i in range(max_iter):
+
+    def h_index(cur: DataFrame) -> DataFrame:
         neigh = sym.join(
             cur.select(F.col("node").alias("b"), F.col("core").alias("_v")),
             "b",
         )
-        new = (
+        return (
             neigh.groupBy("a", "_v")
             .agg(F.count("*").cast("bigint").alias("_c"))
             .select(
@@ -682,39 +640,16 @@ def _kcore_body(
             )
             .groupBy(F.col("a").alias("node"))
             .agg(F.max("_h").alias("core"))
-            .localCheckpoint()
         )
-        cur = new
-        rounds_run = i + 1
-        if (i + 1) % check_every == 0 or i == max_iter - 1:
-            changed = (
-                new.alias("n")
-                .join(prev_checked.alias("c"), "node")
-                .filter(F.col("n.core") != F.col("c.core"))
-                .count()
-            )
-            prev_checked = new
-            if changed == 0:
-                break
-    else:
-        # fall through the loop WITHOUT converging: fail like
-        # connected_components does -- H-index iteration needs
-        # O(diameter) rounds on chain-shaped graphs (a value-1
-        # region advances one hop per round from each end of a
-        # path), so a long chain can exhaust max_iter while interior
-        # nodes still sit above their true coreness; returning that
-        # silently would hand the caller wrong core numbers
-        if changed != 0:
-            raise RuntimeError(
-                f"kcore did not converge in {max_iter} rounds "
-                f"({changed} nodes still changing); raise max_iter "
-                "-- diameter-shaped graphs need ~diameter/2 rounds"
-            )
-    if stats_out is not None:
-        sec = _time.perf_counter() - _t_iter0
-        stats_out["rounds"] = rounds_run
-        stats_out["sec_iterating"] = round(sec, 3)
-        stats_out["sec_per_round"] = round(sec / max(rounds_run, 1), 3)
+
+    degrees = sym.groupBy(F.col("a").alias("node")).agg(
+        F.count("*").cast("bigint").alias("core")
+    )
+    # every node's core only ever falls, so an unchanged sum(core)
+    # means no node changed: the fixpoint, exactly
+    cur = iterate(
+        "kcore", degrees, h_index, max_rounds=max_iter, fingerprint=F.sum("core")
+    )
     return cur.orderBy("node")
 
 

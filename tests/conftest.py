@@ -53,7 +53,6 @@ SLOW_CROSSCHECK_TESTS = {
     "test_graph.py::TestKCore::test_matches_peeling_reference",
     "test_graph.py::TestPageRank::test_matches_reference",
     "test_graph.py::TestTriangleCounts::test_random_graphs_match_bruteforce",
-    "test_graph.py::test_kcore_raises_on_nonconvergence_chain",
     "test_incremental.py::test_incremental_embedding_dedup_flags_and_grows",
     "test_incremental.py::test_reingest_is_idempotent",
     "test_ivm.py::TestMaintainJoinView::test_matches_fresh_join_with_duplicates",

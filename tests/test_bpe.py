@@ -9,8 +9,8 @@ import pytest
 
 from taxi_data_pipeline_pset2_spark.operators.bpe import (
     EOW,
+    bpe_encode,
     bpe_learn,
-    bpe_vocab,
     tokenize_bpe,
     word_symbol_table,
 )
@@ -70,17 +70,12 @@ def test_learn_matches_reference(spark):
 def test_symbol_table_and_vocab_consistency(spark):
     tbl = {r.word: list(r.symbols) for r in word_symbol_table(_docs(spark)).collect()}
     assert tbl["low"] == ["l", "o", "w", EOW]
+    # the learned merges, applied to the symbol table, give the
+    # reference's final per-word symbols (the vocab)
     merges = bpe_learn(_docs(spark), n_merges=8)
     _, ref_table = _ref_learn(TEXTS, 8)
-    vocab = {r.symbol: r.n for r in bpe_vocab(_docs(spark), merges).collect()}
-    ref_vocab: dict[str, int] = {}
-    freqs = Counter()
-    for t_ in TEXTS:
-        freqs.update(w for w in t_.split() if w)
-    for w, syms in ref_table.items():
-        for s in syms:
-            ref_vocab[s] = ref_vocab.get(s, 0) + freqs[w]
-    assert vocab == ref_vocab
+    enc = bpe_encode(word_symbol_table(_docs(spark)), merges).collect()
+    assert {r.word: list(r.symbols) for r in enc} == ref_table
 
 
 def test_tokenize_round_trips_characters(spark):

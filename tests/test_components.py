@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from taxi_data_pipeline_pset2_spark.operators.components import (
@@ -13,7 +14,10 @@ from taxi_data_pipeline_pset2_spark.operators.components import (
     resolve_duplicate_clusters,
 )
 from taxi_data_pipeline_pset2_spark.operators.dedup import jaccard_pairs
-from taxi_data_pipeline_pset2_spark.operators.driver_path import distributed_only
+from taxi_data_pipeline_pset2_spark.operators.driver_path import (
+    NotConverged,
+    distributed_only,
+)
 from taxi_data_pipeline_pset2_spark.sources.readers import load_table
 
 
@@ -73,6 +77,19 @@ def test_distributed_path_matches_driver_fast_path(spark):
     with distributed_only():
         dist = _spark_components(spark, edges)
     assert fast == dist == _union_find(edges)
+
+
+def test_distributed_path_raises_when_rounds_run_out(spark):
+    """A long chain cannot finish in one star round: the distributed
+    alternation raises NotConverged instead of returning a partial
+    clustering."""
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(100, 200)], "doc_a long, doc_b long"
+    )
+    with distributed_only(), pytest.raises(
+        NotConverged, match="connected_components did not converge in 1 rounds"
+    ):
+        connected_components(df, max_rounds=1)
 
 
 def test_components_empty_and_single_edge(spark):

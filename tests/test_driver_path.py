@@ -22,6 +22,7 @@ Cases, one shape per operator family:
 
 from __future__ import annotations
 
+import contextlib
 import random
 
 import pytest
@@ -36,7 +37,10 @@ from taxi_data_pipeline_pset2_spark.operators import (
 from taxi_data_pipeline_pset2_spark.operators.driver_path import (
     bounded_arrow,
     distributed_only,
+    iterate,
+    rounds_log,
 )
+from taxi_data_pipeline_pset2_spark.queries.catalog import registry
 
 _rng = random.Random(1414)
 _nodes = [f"v{i:02d}" for i in range(30)]
@@ -271,3 +275,91 @@ def test_bounded_arrow_jobs_and_single_evaluation(spark):
         assert calls.value - before == 10
         assert sorted(r.id for r in frame.collect()) == list(range(10))
         assert calls.value - before == 10
+
+
+def _jobs_in_group(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("distributed", [False, True], ids=["driver", "distributed"])
+@pytest.mark.parametrize(
+    "op, kwargs",
+    [("kcore", {"max_iter": 0}), ("connected_components", {"max_rounds": 0})],
+)
+def test_round_budget_below_one_rejected_before_any_job(
+    spark, op, kwargs, distributed
+):
+    """A round budget below 1 is a ValueError on both paths, raised
+    before any Spark job runs."""
+    module, _, (schema, cases), _, _ = OPS[op]
+    df = spark.createDataFrame(cases["mixed"], schema)
+    fn = getattr(module, op)
+
+    def call():
+        path = distributed_only() if distributed else contextlib.nullcontext()
+        with path, pytest.raises(ValueError, match="must be >= 1"):
+            fn(df, **kwargs)
+
+    group = f"budget-{op}-{distributed}"
+    assert _jobs_in_group(spark.sparkContext, group, call) == []
+
+
+@pytest.mark.parametrize("shape", ["part_kcore", "path"])
+def test_kcore_rounds_agree_across_paths(spark, sf_dir, shape):
+    """Both paths stop at the first round that changes no node, so
+    their rounds_log records are equal."""
+    if shape == "part_kcore":
+        def run():
+            return registry()["part_kcore"].fn(spark, sf_dir)
+    else:
+        path = spark.createDataFrame(
+            [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(20)],
+            "src string, dst string",
+        )
+
+        def run():
+            return graph.kcore(path)
+
+    with rounds_log() as driver_log:
+        driver_rows = _sorted(run().collect())
+    with distributed_only(), rounds_log() as dist_log:
+        dist_rows = _sorted(run().collect())
+    assert driver_rows == dist_rows
+    assert [r[:3] for r in driver_log] == [r[:3] for r in dist_log]
+    assert len(driver_log) == 1 and driver_log[0].converged
+    assert driver_log[0].rounds > 1
+
+
+def test_iterate_cadence_and_record(spark):
+    """Only every checkpoint_every-th round and the last one run a job
+    (the rounds between are lazy checkpoints), and every loop leaves
+    one record, also when a round fails."""
+
+    def step(df):
+        return df.select((F.col("id") + 1).alias("id"))
+
+    def failing(df):
+        raise RuntimeError("round failed")
+
+    out = []
+    with rounds_log() as log:
+        jobs = _jobs_in_group(
+            spark.sparkContext,
+            "iterate-cadence",
+            lambda: out.append(
+                iterate("probe", spark.range(3), step, max_rounds=7,
+                        checkpoint_every=3)
+            ),
+        )
+        with pytest.raises(RuntimeError, match="round failed"):
+            iterate("failing", spark.range(3), failing, max_rounds=2)
+    assert len(jobs) == 3  # rounds 3, 6 and 7
+    assert sorted(r.id for r in out[0].collect()) == [7, 8, 9]
+    assert [r[:3] for r in log] == [("probe", 7, True), ("failing", 1, False)]

@@ -1,9 +1,15 @@
 """PageRank tests: python power-iteration equality, closed-form
 graphs, dangling mass, mass conservation."""
 
+import contextlib
+
 import pytest
 
-from taxi_data_pipeline_pset2_spark.operators.driver_path import distributed_only
+from taxi_data_pipeline_pset2_spark.operators.driver_path import (
+    NotConverged,
+    distributed_only,
+    rounds_log,
+)
 from taxi_data_pipeline_pset2_spark.operators.graph import pagerank
 
 
@@ -623,20 +629,26 @@ def test_triangles_and_assortativity_degenerate_shapes(
     assert [tuple(r) for r in degree_assortativity(df).collect()] == [assortativity]
 
 
-def test_kcore_raises_on_nonconvergence_chain(spark):
+@pytest.mark.parametrize("distributed", [False, True], ids=["driver", "distributed"])
+def test_kcore_raises_on_nonconvergence_chain(spark, distributed):
     """H-index iteration is O(diameter), not O(log): a long path graph
-    must RAISE when max_iter is exhausted rather than return interim
-    (wrong) core numbers -- the connected_components contract."""
+    must raise NotConverged when max_iter is exhausted, on either path,
+    rather than return interim (wrong) core numbers -- the
+    connected_components contract."""
     from taxi_data_pipeline_pset2_spark.operators.graph import kcore
 
     chain = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(60)], "src string, dst string"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        kcore(chain, max_iter=5)
-    # with enough rounds the same chain converges to all-1 cores
-    out = kcore(chain, max_iter=60).collect()
-    assert {r.core for r in out} == {1}
+    path = distributed_only() if distributed else contextlib.nullcontext()
+    with path, rounds_log() as log:
+        with pytest.raises(NotConverged, match="kcore did not converge in 5 rounds"):
+            kcore(chain, max_iter=5)
+    assert [(r.op, r.rounds, r.converged) for r in log] == [("kcore", 5, False)]
+    if not distributed:
+        # with enough rounds the same chain converges to all-1 cores
+        out = kcore(chain, max_iter=60).collect()
+        assert {r.core for r in out} == {1}
 
 
 def test_lpa_ignores_self_loops_and_duplicate_listings(spark):
